@@ -4,10 +4,14 @@ Usage:
     spark-submit --py-files engine.zip jobs/crawl.py \
         --pages /path/pages.parquet --entry https://host000.example.com/page/0 \
         --state-dir /tmp/crawl-state [--config crawl.json] [--max-depth 2] \
-        [--per-host-budget N] [--use-bloom]
+        [--per-host-budget N] [--max-pages N] [--robots robots.parquet \
+        [--timed-politeness]] [--salt-threshold N] [--seen-filter bloom|cuckoo] \
+        [--stop-file PATH] [--resume] [--no-processor] [--expire-keep N]
 
-Prints one summary JSON line and writes queue/docs/url_seen/lineage tables
-under --state-dir (SnapshotStore layout, resumable).
+Every flag works in every mode: with no politeness flag the crawl admits
+every pending url (plain BFS). Prints one summary JSON line and writes
+queue/docs/url_seen/lineage tables under --state-dir (SnapshotStore layout,
+resumable).
 """
 
 from __future__ import annotations
@@ -49,20 +53,27 @@ def main() -> int:
     )
     ap.add_argument(
         "--salt-threshold", type=int, default=None,
-        help="politeness mode: salt hosts with more pending urls than this",
+        help="salt hosts with more pending urls than this (their per-host "
+        "budget splits across salts)",
     )
     ap.add_argument(
         "--timed-politeness", action="store_true",
         help="use per-host next_allowed_ts clocks driven by the robots "
         "table's crawl_delay_ms (requires --robots)",
     )
-    ap.add_argument("--use-bloom", action="store_true")
     ap.add_argument(
         "--seen-filter", choices=["bloom", "cuckoo"], default=None,
-        help="url-seen sidecar strategy (cuckoo supports deletion); "
-        "--use-bloom is shorthand for --seen-filter bloom",
+        help="url-seen sidecar strategy (cuckoo supports deletion)",
     )
-    ap.add_argument("--no-processor", action="store_true")
+    ap.add_argument(
+        "--use-bloom", dest="seen_filter", action="store_const", const="bloom",
+        help="shorthand for --seen-filter bloom",
+    )
+    ap.add_argument(
+        "--no-processor", action="store_true",
+        help="skip the docs pass; an uncapped crawl without --robots then "
+        "leaves the seeds out of the queue, as the reference does",
+    )
     ap.add_argument(
         "--stop-file", default=None,
         help="stopCrawl() analogue: halt at the next round boundary once this "
@@ -82,7 +93,7 @@ def main() -> int:
     args = ap.parse_args()
 
     from webcrawler_spark.config import CrawlConfig
-    from webcrawler_spark.rounds import run_crawl, run_polite_crawl
+    from webcrawler_spark.rounds import run_polite_crawl
     from webcrawler_spark.session import get_spark
     from webcrawler_spark.storage import SnapshotStore
 
@@ -145,57 +156,38 @@ def main() -> int:
     else:
         entry = args.entry
 
-    polite = (
-        config.per_host_budget is not None
-        or config.max_pages is not None
-        or args.robots is not None
-        or config.obey_robots
-    )
-    if polite:
-        robots_df = spark.read.parquet(args.robots) if args.robots else None
-        if robots_df is not None and "body" in robots_df.columns and (
-            "disallow" not in robots_df.columns
-        ):
-            # raw fetched robots.txt bodies (host, body): parse them into the
-            # gate's (host, disallow[], crawl_delay_ms) table in-flight
-            from webcrawler_spark.operators.robots import parse_robots_txt
+    robots_df = spark.read.parquet(args.robots) if args.robots else None
+    if robots_df is not None and "body" in robots_df.columns and (
+        "disallow" not in robots_df.columns
+    ):
+        # raw fetched robots.txt bodies (host, body): parse them into the
+        # gate's (host, disallow[], crawl_delay_ms) table in-flight
+        from webcrawler_spark.operators.robots import parse_robots_txt
 
-            robots_df = parse_robots_txt(robots_df)
-        delays_df = None
-        if args.timed_politeness:
-            if robots_df is None or "crawl_delay_ms" not in robots_df.columns:
-                raise SystemExit("--timed-politeness requires --robots with crawl_delay_ms")
-            delays_df = robots_df.select("host", "crawl_delay_ms")
-        res = run_polite_crawl(
-            spark,
-            pages,
-            entry,
-            config,
-            robots=robots_df,
-            store=store,
-            with_processor=not args.no_processor,
-            use_bloom=args.use_bloom,
-            seen_filter=args.seen_filter,
-            salt_threshold=args.salt_threshold,
-            delays=delays_df,
-        )
-    else:
-        stop = None
-        if args.stop_file:
-            stop_path = args.stop_file
-            stop = lambda: os.path.exists(stop_path)  # noqa: E731
-        res = run_crawl(
-            spark,
-            pages,
-            entry,
-            config,
-            store=store,
-            with_processor=not args.no_processor,
-            use_bloom=args.use_bloom,
-            seen_filter=args.seen_filter,
-            stop=stop,
-            resume=args.resume,
-        )
+        robots_df = parse_robots_txt(robots_df)
+    delays_df = None
+    if args.timed_politeness:
+        if robots_df is None or "crawl_delay_ms" not in robots_df.columns:
+            raise SystemExit("--timed-politeness requires --robots with crawl_delay_ms")
+        delays_df = robots_df.select("host", "crawl_delay_ms")
+    stop = None
+    if args.stop_file:
+        stop = lambda: os.path.exists(args.stop_file)  # noqa: E731
+    # with no politeness flag the policy admits every pending url: the BFS plan
+    res = run_polite_crawl(
+        spark,
+        pages,
+        entry,
+        config,
+        robots=robots_df,
+        store=store,
+        with_processor=not args.no_processor,
+        seen_filter=args.seen_filter,
+        salt_threshold=args.salt_threshold,
+        delays=delays_df,
+        stop=stop,
+        resume=args.resume,
+    )
     t_rounds_done = time.monotonic()
     # write first, count the written parquet: count-then-write would run the
     # full extraction chain twice

@@ -167,19 +167,18 @@ def main() -> int:
     store = SnapshotStore(state)
     m = store.load_manifest()
     seen = store.read_table(spark, "url_seen", int(m.tables["url_seen"]))
+    # driver only ever holds the bounded evicted slice, never seen/round rows
+    ev_df = spark.createDataFrame([(u,) for u in sorted(evicted)], "url string")
     readmitted = {
         r.url
         for r in seen.filter(F.col("first_depth") >= resume_from)
-        .select("url").collect()
-        if r.url in evicted
+        .select("url").join(ev_df, "url", "left_semi").collect()
     }
     encountered = None
     for d in range(resume_from, args.max_depth + 1):
         t_r = store.read_table(spark, "round", d).select("url")
         encountered = t_r if encountered is None else encountered.union(t_r)
     if encountered is not None:
-        # driver only ever holds the bounded evicted slice, never round rows
-        ev_df = spark.createDataFrame([(u,) for u in sorted(evicted)], "url string")
         enc = {
             r.url
             for r in ev_df.join(encountered, "url", "left_semi").collect()

@@ -20,6 +20,20 @@ def test_lint_catches_array_map_struct_outputs(spark):
     assert set(nested) == {"arr", "mp", "st"}
 
 
+def test_lint_catches_large_and_fixed_size_lists():
+    """Every Arrow list flavour is nested, not only the plain ``list``."""
+    import pyarrow as pa
+
+    schema = pa.schema(
+        [
+            ("id", pa.int64()),
+            ("big", pa.large_list(pa.int64())),
+            ("fixed", pa.list_(pa.int64(), 3)),
+        ]
+    )
+    assert set(nested_output_columns(schema)) == {"big", "fixed"}
+
+
 def test_lint_passes_serialized_outputs(spark):
     df = spark.range(3).select(
         F.col("id"),

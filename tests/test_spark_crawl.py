@@ -86,7 +86,7 @@ def test_include_exclude_filters_match(spark, pages_df, small_corpus):
 def test_bloom_path_identical_results(spark, pages_df, small_corpus):
     cfg = CrawlConfig(max_depth=2)
     oracle, result = _run_both(
-        spark, pages_df, small_corpus, cfg, with_processor=False, use_bloom=True
+        spark, pages_df, small_corpus, cfg, with_processor=False, seen_filter="bloom"
     )
     got = [r["url"] for r in result.queue.collect()]
     assert got == oracle.queue_order
@@ -610,6 +610,297 @@ def test_stop_then_resume_matches_straight_run(spark, pages_df, small_corpus, tm
     assert store.load_manifest().meta.get("stopped_next_depth") is None
 
 
+def _rows(df):
+    """Order-free, hashable view of a DataFrame's rows (arrays as tuples)."""
+    return sorted(
+        (tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.collect()),
+        key=repr,
+    )
+
+
+def _lineage_rows(result):
+    keys = ("round", "partition_id", "hosts_served", "urls_fetched", "urls_deduped")
+    return sorted(tuple(l[k] for k in keys) for l in result.lineage)
+
+
+def test_bfs_and_unbounded_polite_crawl_are_one_loop(spark, tiny_pages_df, tiny_corpus):
+    """By the order theorem BFS is polite admission with no budget: both
+    entry points run the same round loop, so they produce the same queue,
+    docs rows and lineage rows, and report the same timing phases."""
+    from webcrawler_spark.rounds import run_polite_crawl
+
+    cfg = CrawlConfig(max_depth=2)
+    bfs = run_crawl(spark, tiny_pages_df, tiny_corpus.seeds, cfg)
+    polite = run_polite_crawl(spark, tiny_pages_df, tiny_corpus.seeds, cfg)
+    oracle = crawl_oracle(
+        {u: h for u, (t, h, l) in tiny_corpus.pages.items()},
+        tiny_corpus.seeds, cfg, with_processor=True,
+    )
+    q_bfs = [r["url"] for r in bfs.queue.collect()]
+    assert q_bfs == oracle.queue_order
+    assert [r["url"] for r in polite.queue.collect()] == q_bfs
+    assert _rows(polite.docs) == _rows(bfs.docs)
+    assert _lineage_rows(polite) == _lineage_rows(bfs)
+    assert sum(l["hosts_served"] for l in bfs.lineage) > 0
+    assert polite.rounds_run == bfs.rounds_run == 3
+    phases = {t["phase"] for t in bfs.timings}
+    assert {t["phase"] for t in polite.timings} == phases
+    assert {"r0_raw", "r0_mat", "r0_stats", "seed_frontier"} <= phases
+    # without the processor both leave the seeds out of the queue, as the
+    # reference does (CrawlerService.java:110-116)
+    bare = run_polite_crawl(
+        spark, tiny_pages_df, tiny_corpus.seeds, cfg, with_processor=False
+    )
+    assert [r["url"] for r in bare.queue.collect()] == crawl_oracle(
+        {u: h for u, (t, h, l) in tiny_corpus.pages.items()},
+        tiny_corpus.seeds, cfg, with_processor=False,
+    ).queue_order
+
+
+@pytest.mark.parametrize("seed", ["https://gone.example.com/0", "https://r.example.com/private/0"])
+def test_polite_crawl_from_unfetchable_seed_ends_cleanly(spark, seed):
+    """A budgeted crawl whose only seed is missing from the corpus or blocked
+    by robots harvests nothing in its first round (an empty round table) and
+    ends with the seed's ERROR_FETCH / SKIPPED_ROBOTS doc, as the oracle."""
+    from webcrawler_spark.oracle import crawl_oracle_polite
+    from webcrawler_spark.rounds import run_polite_crawl
+
+    page = '<html><body><a href="https://r.example.com/1">x</a></body></html>'
+    corpus = {"https://r.example.com/private/0": page, "https://r.example.com/1": page}
+    rob = {"r.example.com": ["/private/"]}
+    cfg = CrawlConfig(max_depth=2, per_host_budget=1)
+    oracle = crawl_oracle_polite(corpus, seed, cfg, robots=rob)
+    pages_df = spark.createDataFrame(
+        [(u, h.encode()) for u, h in corpus.items()], "url string, html binary"
+    )
+    rob_df = spark.createDataFrame(
+        list(rob.items()), "host string, disallow array<string>"
+    )
+    res = run_polite_crawl(spark, pages_df, seed, cfg, robots=rob_df)
+    assert [r["url"] for r in res.queue.collect()] == oracle.queue_order == [seed]
+    assert res.rounds_run == oracle.rounds == 1
+    got = {(r["url"], r["status"]) for r in res.docs.collect()}
+    assert got == {(d["url"], d["status"]) for d in oracle.docs}
+    assert len(got) == 1
+
+
+def test_admit_all_round_plan_has_no_admission(spark, tiny_pages_df, tiny_corpus, monkeypatch):
+    """The admit-all policy adds nothing to a round: its pinned round table
+    has no admission window, no deferred rows and (seeds enqueued) no
+    visited join — only the seen-flag join. A budgeted crawl's table has
+    all three, which shows the probe sees them."""
+    from webcrawler_spark.rounds import run_polite_crawl
+
+    DataFrame = type(tiny_pages_df)  # the session's concrete DataFrame class
+    plans = []
+    real = DataFrame.localCheckpoint
+
+    def spy(self, *a, **k):
+        if "_lrank" in self.columns:  # the pinned round table
+            plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    run_crawl(spark, tiny_pages_df, tiny_corpus.seeds, CrawlConfig(max_depth=1))
+    assert len(plans) == 2
+    for p in plans:
+        assert "row_number" not in p and "_dgrank" not in p
+        assert p.count("Join ") == 1
+
+    plans.clear()
+    cfg = CrawlConfig(max_depth=1, per_host_budget=1)
+    run_polite_crawl(spark, tiny_pages_df, tiny_corpus.seeds, cfg)
+    assert any("row_number" in p and "_dgrank" in p and p.count("Join ") == 2 for p in plans)
+
+
+def _record_parses(monkeypatch, out_dir):
+    """Make every parse function the crawl builds record the urls it is
+    handed (rows with html), one file per batch; returns a reader that
+    counts them (the wrapping perfbench/trace_run.py does with a counter)."""
+    import os
+    import uuid
+    from collections import Counter
+
+    import webcrawler_spark.rounds as R
+
+    make = R.make_extract_pages
+    out = str(out_dir)
+    os.makedirs(out, exist_ok=True)
+
+    def recording(config, carry_cols=None):
+        fn, schema = make(config, carry_cols)
+
+        def recorded(batches):
+            for pdf in batches:
+                urls = pdf.loc[pdf["html"].notna(), "url"].tolist()
+                with open(os.path.join(out, uuid.uuid4().hex), "w") as f:
+                    f.write("\n".join(urls))
+                yield from fn(iter([pdf]))
+
+        return recorded, schema
+
+    monkeypatch.setattr(R, "make_extract_pages", recording)
+
+    def parsed():
+        c = Counter()
+        for name in os.listdir(out):
+            with open(os.path.join(out, name)) as f:
+                c.update(u for u in f.read().split("\n") if u)
+        return c
+
+    return parsed
+
+
+def test_polite_crawl_parses_each_page_once(
+    spark, tiny_pages_df, tiny_corpus, tmp_path, monkeypatch
+):
+    """A polite crawl with a store captures each round's parse, so across
+    the rounds and the docs pass every queued page that can be fetched
+    (present in the corpus, not robots-blocked) is parsed exactly once."""
+    from webcrawler_spark.oracle import _robots_blocked
+    from webcrawler_spark.rounds import run_polite_crawl
+    from webcrawler_spark.storage import SnapshotStore
+
+    parsed = _record_parses(monkeypatch, tmp_path / "parsed")
+    rob = {r["host"]: r["disallow"] for r in tiny_corpus.robots}
+    rob_df = spark.createDataFrame(
+        [{"host": h, "disallow": d} for h, d in rob.items()]
+    )
+    cfg = CrawlConfig(
+        max_depth=2, per_host_budget=2,
+        content_rules={"minCharacter": 80, "tagName": "p"},
+    )
+    res = run_polite_crawl(
+        spark, tiny_pages_df, tiny_corpus.seeds, cfg, robots=rob_df,
+        store=SnapshotStore(str(tmp_path / "state")),
+    )
+    statuses = {r["status"] for r in res.docs.collect()}
+    assert {"OK", "SKIPPED_ROBOTS"} <= statuses
+    queue = [r["url"] for r in res.queue.collect()]
+    fetchable = {
+        u for u in queue if u in tiny_corpus.pages and not _robots_blocked(u, rob)
+    }
+    counts = parsed()
+    assert set(counts) == fetchable
+    assert max(counts.values()) == 1
+
+
+def test_polite_stop_then_resume_matches_straight_run(
+    spark, tiny_pages_df, tiny_corpus, tmp_path
+):
+    """stopCrawl() on the polite path: stopping while urls are still
+    deferred commits them with the rest of the loop state, and the resumed
+    crawl ends with the queue, round count and docs of a straight run and of
+    the sequential oracle."""
+    from pyspark.sql import functions as F
+
+    from webcrawler_spark.rounds import run_polite_crawl
+    from webcrawler_spark.storage import SnapshotStore
+
+    cfg = CrawlConfig(max_depth=2, per_host_budget=2)
+    oracle, full = _run_both_polite(spark, tiny_pages_df, tiny_corpus, cfg)
+    q_full = [r["url"] for r in full.queue.collect()]
+    assert q_full == oracle.queue_order and full.rounds_run == oracle.rounds
+    docs_full = sorted(
+        (r["url"], r["status"], r["pos"], r["content_length"])
+        for r in full.docs.collect()
+    )
+
+    store = SnapshotStore(str(tmp_path / "stopresume"))
+    part = run_polite_crawl(
+        spark, tiny_pages_df, tiny_corpus.seeds, cfg, store=store,
+        stop=_stop_after(2),
+    )
+    assert part.stopped and part.docs is None and part.rounds_run == 2
+    m = store.load_manifest()
+    assert m is not None and m.meta["stopped_next_depth"] == 2
+    # round 1 deferred urls: they wait in the committed frontier
+    deferred = store.read_table(spark, "round", 1).filter(F.col("_dup").isNull())
+    assert deferred.count() > 0
+
+    res = run_polite_crawl(
+        spark, tiny_pages_df, tiny_corpus.seeds, cfg, store=store, resume=True
+    )
+    assert not res.stopped
+    assert [r["url"] for r in res.queue.collect()] == q_full
+    assert part.rounds_run + res.rounds_run == oracle.rounds
+    docs_res = sorted(
+        (r["url"], r["status"], r["pos"], r["content_length"])
+        for r in res.docs.collect()
+    )
+    assert docs_res == docs_full
+    assert {(d["url"], d["status"]) for d in oracle.docs} == {d[:2] for d in docs_res}
+    assert store.load_manifest().meta.get("stopped_next_depth") is None
+
+
+def test_resume_of_snapshot_without_loop_counters_is_refused(
+    spark, tiny_pages_df, tiny_corpus, tmp_path
+):
+    """A stop snapshot whose manifest lacks the loop counters (written by an
+    older round loop) cannot be resumed: the resume names what is missing."""
+    from webcrawler_spark.storage import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path / "old"))
+    cfg = CrawlConfig(max_depth=1)
+    part = run_crawl(
+        spark, tiny_pages_df, tiny_corpus.seeds, cfg, store=store,
+        with_processor=False, stop=_stop_after(1),
+    )
+    assert part.stopped
+    m = store.load_manifest()
+    for k in ("frontier_lo", "fetched_total"):
+        del m.meta[k]
+    store.commit(m)
+    with pytest.raises(ValueError, match="frontier_lo, fetched_total"):
+        run_crawl(
+            spark, tiny_pages_df, tiny_corpus.seeds, cfg, store=store,
+            with_processor=False, resume=True,
+        )
+
+
+@pytest.mark.slow
+def test_timed_polite_stop_then_resume_matches_oracle(
+    spark, tiny_pages_df, tiny_corpus, tmp_path
+):
+    """Timed politeness across a stop: the per-host clocks (host_state), the
+    discovery-rank counter and the spent fetch budget survive the manifest,
+    so the resumed crawl admits exactly what the sequential oracle does."""
+    from webcrawler_spark.oracle import crawl_oracle_polite
+    from webcrawler_spark.rounds import run_polite_crawl
+    from webcrawler_spark.storage import SnapshotStore
+
+    cfg = CrawlConfig(
+        max_depth=2, per_host_budget=3, politeness_window_ms=10_000, max_pages=22
+    )
+    hosts = sorted({u.split("/")[2] for u in tiny_corpus.pages})
+    delay_of = {h: [0, 2_000, 25_000, 4_000][i % 4] for i, h in enumerate(hosts)}
+    oracle = crawl_oracle_polite(
+        {u: h for u, (t, h, l) in tiny_corpus.pages.items()},
+        tiny_corpus.seeds, cfg, delays=delay_of, window_ms=10_000,
+    )
+    assert sum(oracle.admitted_per_round) == 22  # the budget binds after the stop
+    delays_df = spark.createDataFrame(
+        list(delay_of.items()), "host string, crawl_delay_ms long"
+    )
+    store = SnapshotStore(str(tmp_path / "timed"))
+    part = run_polite_crawl(
+        spark, tiny_pages_df, tiny_corpus.seeds, cfg, delays=delays_df,
+        store=store, with_processor=False, stop=_stop_after(3),
+    )
+    assert part.stopped
+    m = store.load_manifest()
+    assert m.meta["fetched_total"] == sum(oracle.admitted_per_round[:3])
+    assert m.meta["discovered"] > len(tiny_corpus.seeds)
+    assert store.read_table(spark, "host_state", 3).count() > 0
+
+    res = run_polite_crawl(
+        spark, tiny_pages_df, tiny_corpus.seeds, cfg, delays=delays_df,
+        store=store, with_processor=False, resume=True,
+    )
+    assert [r["url"] for r in res.queue.collect()] == oracle.queue_order
+    assert part.rounds_run + res.rounds_run == oracle.rounds
+
+
 @pytest.mark.slow
 def test_bloom_round_caches_released(spark, pages_df, small_corpus, monkeypatch):
     """The per-round bloom prefilter persist must be released once the round
@@ -631,7 +922,7 @@ def test_bloom_round_caches_released(spark, pages_df, small_corpus, monkeypatch)
     cfg = CrawlConfig(max_depth=2)
     R.run_crawl(
         spark, pages_df, small_corpus.seeds[0], cfg,
-        with_processor=False, use_bloom=True,
+        with_processor=False, seen_filter="bloom",
     )
     regs = [df for reg in registries for df in reg]
     assert regs  # the bloom path really persisted something
@@ -653,14 +944,14 @@ def test_bloom_sidecar_persisted_and_loaded_on_resume(
     entry = small_corpus.seeds[0]
     full = R.run_crawl(
         spark, pages_df, entry, cfg,
-        store=SnapshotStore(str(tmp_path / "full")), use_bloom=True,
+        store=SnapshotStore(str(tmp_path / "full")), seen_filter="bloom",
     )
     q_full = [r["url"] for r in full.queue.collect()]
 
     store = SnapshotStore(str(tmp_path / "sr"))
     part = R.run_crawl(
         spark, pages_df, entry, cfg, store=store, stop=_stop_after(1),
-        use_bloom=True,
+        seen_filter="bloom",
     )
     assert part.stopped
     m = store.load_manifest()
@@ -679,7 +970,7 @@ def test_bloom_sidecar_persisted_and_loaded_on_resume(
     # call time, so patching the module intercepts both build and maintain
     monkeypatch.setattr(D, "bloom_sidecar_build", build_spy)
     res = R.run_crawl(
-        spark, pages_df, entry, cfg, store=store, resume=True, use_bloom=True
+        spark, pages_df, entry, cfg, store=store, resume=True, seen_filter="bloom"
     )
     assert [r["url"] for r in res.queue.collect()] == q_full
     # only the per-round DELTA builds ran — no full-seen rebuild at resume

@@ -97,12 +97,9 @@ def nested_output_columns(schema) -> dict:
     values — any such column burns a correctness-window slot with a harness
     TypeError. Returns {column: kind} for every offending column of an
     Arrow schema; queries must serialize (array_join / to_json) instead."""
-    return {
-        f.name: arrow_kind(f.type)
-        for f in schema
-        if arrow_kind(f.type).startswith(("list", "struct"))
-        or str(f.type).startswith("map")
-    }
+    import pyarrow as pa
+
+    return {f.name: arrow_kind(f.type) for f in schema if pa.types.is_nested(f.type)}
 
 
 def table_cells(tbl):

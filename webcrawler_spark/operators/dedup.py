@@ -28,7 +28,7 @@ into the persisted sidecar — never a rebuild over the full seen table.
 from __future__ import annotations
 
 import math
-from typing import Iterator, Optional, Tuple
+from typing import Iterator, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -323,11 +323,14 @@ def flag_seen(
     n_buckets: int = 64,
     cache_registry: Optional[list] = None,
     prefilter_fn=None,
+    carry: Sequence[str] = (),
 ) -> DataFrame:
     """The dedup gate as a FLAG instead of a filter: returns ``candidates``
     with an int ``_dup`` column (1 = url already in ``seen``). Keeping the
     duplicate rows lets the caller compute n_new, n_dup and lineage stats in
     the same single pass that feeds ranking — no second count job.
+    ``carry`` names ``seen`` columns to bring along: set on ``_dup`` rows,
+    null on new ones.
 
     PRECONDITION: ``seen`` is unique on ``url_col`` (the url_seen table is by
     construction — each url is enqueued at most once); a non-unique seen side
@@ -338,7 +341,7 @@ def flag_seen(
     ``prefilter_fn`` selects the probe (default bloom_prefilter; pass
     cuckoo_prefilter via seen_filter_ops('cuckoo')).
     """
-    marker = seen.select(url_col).withColumn("_dup", F.lit(1))
+    marker = seen.select(url_col, *carry).withColumn("_dup", F.lit(1))
     if sidecar is None:
         j = candidates.join(marker, url_col, "left")
         return j.withColumn("_dup", F.coalesce(F.col("_dup"), F.lit(0)))
@@ -349,7 +352,9 @@ def flag_seen(
     checked = maybe.join(marker, url_col, "left").withColumn(
         "_dup", F.coalesce(F.col("_dup"), F.lit(0))
     )
-    return new.withColumn("_dup", F.lit(0)).unionByName(checked)
+    return new.withColumn("_dup", F.lit(0)).unionByName(
+        checked, allowMissingColumns=True
+    )
 
 
 def dedup_against_seen(

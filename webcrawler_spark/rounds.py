@@ -1,48 +1,56 @@
 """The crawl driver: the reference's BFS control flow restated as batch rounds.
 
-One round = one idempotent Spark batch job per depth level (SURVEY §3.1
-"Spark restatement"):
+One round loop (``_crawl``) runs every crawl. A round is one idempotent
+batch step over the pending frontier (SURVEY §3.1 "Spark restatement"):
 
-    traverse_d ⋈ pages (url)                       -- "fetch" against the corpus
+    admission policy                               -- which pending urls fetch now
+      → admitted ⋈ pages (url)                     -- "fetch" against the corpus
       → extraction kernel (mapInPandas)            -- title/segments/links
-      → posexplode(links) → normalize → rlike filter
-      → first-occurrence (groupBy url, min(parent_rank, link_pos))
-      → seen-flag join → bucketed global rank → append to queue/url_seen
-      → traversal slice → traverse_{d+1}
+      → explode(links) → rlike filter
+      → first-occurrence (groupBy url, min(parent grank, link_pos))
+      → seen-flag join → bucketed global ranks → append to url_seen
+      → traversal slice (+ deferred rows) → next pending frontier
 
 The §2.2 order theorem makes the distributed queue order equal the reference's
-single-threaded FIFO drain order: enqueue order is (depth, parent's dequeue
-rank within depth, link position in the parent document), dedup keeps first
-occurrence only. maxDepth semantics (harvest-but-don't-traverse,
-CrawlerService.java:127-131) and the entry-enqueue-only-with-processor guard
-(:110-116) are mirrored exactly.
+single-threaded FIFO drain order: enqueue order is (parent's global discovery
+rank, link position in the parent document), dedup keeps first occurrence
+only. maxDepth semantics (harvest-but-don't-traverse, CrawlerService.java:127-131)
+and the entry-enqueue-only-with-processor guard (:110-116) are mirrored exactly.
 
-Scale design (north_rule: ≥0.8 scaling efficiency N→4N): a round runs at most
-THREE driver-synchronized jobs —
+The same theorem makes BFS polite admission with an unlimited budget, so the
+two entry points choose only an admission policy (``_Admission``) and whether
+seeds are enqueued. ``run_crawl`` admits every pending url: its round has no
+admission window, no deferred rows and, with the processor, no visited join.
+``run_polite_crawl`` admits per host (budget, maxConcurrentPerDomain, hot-host
+salting or timed crawl-delay clocks) under the globalQps / maxPages cut,
+semantics fixed by oracle.crawl_oracle_polite; the urls it does not admit
+wait, unchanged, for a later round.
+
+Scale design (north_rule: ≥0.8 scaling efficiency N→4N): besides the
+admission a policy runs, a round waits on three driver-synchronized jobs —
 
 1. (processor mode) one raw-capture job: the round's single page parse
    (title/segments/links from one kernel call, like WebPageProcessor) is
    materialized as a per-round raw_docs table; the final docs pass reuses it
-   instead of re-fetching and re-parsing the whole queue, so each page is
-   parsed exactly once across the entire crawl;
-2. one stats job: the harvest→dedup chain evaluates once into a persisted
-   round table, and a single GROUPING SETS aggregate returns per-bucket rank
-   offsets, per-partition lineage stats, and the dedup counts in one
-   ≤(buckets+32)-row collect;
-3. one materialization job: queue positions and traversal ranks are assigned
-   with bucket-local running sums + the driver prefix-sum offsets (no
-   single-partition row_number, no range-sampling pass), and the resulting
-   round table is checkpointed (or written to the SnapshotStore).
+   and parses only the queue tail no round fetched, so each page is parsed
+   once across the entire crawl;
+2. one materialization job: the harvest→dedup chain evaluates once, with
+   bucket-local running sums, into a pinned round table;
+3. one stats job: a single GROUPING SETS aggregate over the pinned table
+   returns per-bucket rank offsets, per-partition lineage stats and the dedup
+   counts in one ≤(buckets+32)-row collect. Queue positions and discovery
+   ranks are then a pure projection: local running sum + the driver's
+   prefix-sum offset (no single-partition row_number, no range sampling).
 
-Rank bucketing needs no RangePartitioner: parent ranks are dense in
-[0, frontier), so floor(parent_rank·nb/frontier) is an explicit, deterministic,
-monotone bucket id — value-determined, hence stable across job re-runs without
-pinning a physical layout.
+Rank bucketing needs no RangePartitioner: the pending frontier's discovery
+ranks lie in [frontier_lo, discovered), so floor((grank-lo)·nb/(discovered-lo))
+is an explicit, deterministic, monotone bucket id — value-determined, hence
+stable across job re-runs without pinning a physical layout.
 
-Checkpoint/resume: with a SnapshotStore, each round's table is written and
-re-read (also truncating the lineage DAG); the manifest commits the round
-atomically. A re-run of a crashed round overwrites its versioned dirs —
-idempotent by construction.
+Checkpoint/resume: with a SnapshotStore, each round's tables are written and
+the manifest commits atomically. ``stop`` halts the crawl at a round boundary
+and commits the loop state; ``resume=True`` continues from it. A re-run of a
+crashed round overwrites its versioned dirs — idempotent by construction.
 """
 
 from __future__ import annotations
@@ -51,17 +59,20 @@ import os
 import threading
 import time
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional, Sequence, Set, Tuple
+from functools import reduce
+from typing import Dict, List, Optional, Set, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     BooleanType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
+    TimestampType,
 )
 
 from .config import CrawlConfig
@@ -74,11 +85,16 @@ from .functions import (
     parse_host,
 )
 from .kernel.urlnorm import normalize_url
-from .operators.dedup import (
-    anti_join_new,
-    flag_seen,
-    seen_filter_ops,
+from .operators.admission import (
+    _min_cap,
+    admit,
+    apply_robots,
+    global_cap_admit,
+    salted_admit,
+    timed_admit,
 )
+from .operators.contentgate import skip_status_col, split_gated
+from .operators.dedup import flag_seen, seen_filter_ops
 from .operators.ordering import first_occurrence
 from .storage import Manifest, SnapshotStore
 from .udfs import extract_schema_with, make_extract_pages, normalize_url_udf
@@ -89,6 +105,14 @@ SEEN_SCHEMA = StructType(
         StructField("pos", LongType()),
         StructField("host_hash", LongType()),
         StructField("first_depth", IntegerType()),
+    ]
+)
+
+_SEED_SCHEMA = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("grank", LongType()),
+        StructField("depth", IntegerType()),
     ]
 )
 
@@ -117,8 +141,6 @@ FRONTIER_ROW_BYTES = 96
 BROADCAST_MAX_BYTES = int(
     os.environ.get("SPARK_GRAFT_BROADCAST_MAX_BYTES", str(256 * 1024 * 1024))
 )
-# back-compat alias for tests/jobs that import the old row gate
-BROADCAST_FRONTIER_ROWS = BROADCAST_MAX_BYTES // FRONTIER_ROW_BYTES
 
 # Frontiers at or under this many rows are round-robin repartitioned before
 # the Python parse stage; larger ones run on the scan-partition layout.
@@ -163,7 +185,7 @@ def _balance_for_parse(
 SEED_COLLECT_MAX = 250_000
 
 
-def _seed_df(spark: SparkSession, starts: List[str], extra: tuple) -> DataFrame:
+def _seed_df(spark: SparkSession, starts: List[str]) -> DataFrame:
     """Distributed, materialized seed frontier from a driver-side list.
 
     Built via the Arrow (pandas) path and immediately localCheckpointed:
@@ -174,27 +196,17 @@ def _seed_df(spark: SparkSession, starts: List[str], extra: tuple) -> DataFrame:
     """
     import pandas as pd
 
-    cols = {"url": starts}
-    fields = [StructField("url", StringType())]
-    if "rank" in extra:
-        cols["rank"] = list(range(len(starts)))
-        fields.append(StructField("rank", LongType()))
-    if "grank" in extra:
-        cols["grank"] = list(range(len(starts)))
-        fields.append(StructField("grank", LongType()))
-    if "depth" in extra:
-        cols["depth"] = [0] * len(starts)
-        fields.append(StructField("depth", IntegerType()))
-    df = spark.createDataFrame(pd.DataFrame(cols), StructType(fields))
+    cols = {"url": starts, "grank": list(range(len(starts))), "depth": [0] * len(starts)}
+    df = spark.createDataFrame(pd.DataFrame(cols), _SEED_SCHEMA)
     par = spark.sparkContext.defaultParallelism
     return df.repartition(par).localCheckpoint(eager=True)
 
 
 def _seed_frontier(
-    spark: SparkSession, entry_url, extra: tuple,
-    timings: Optional[List[dict]] = None,
+    spark: SparkSession, entry_url, timings: Optional[List[dict]] = None,
 ) -> Tuple[Optional[DataFrame], int]:
-    """Normalize/dedup/rank the seed list into the round-0 frontier.
+    """Normalize/dedup/rank the seed list into the round-0 frontier
+    (url, grank, depth = 0).
 
     ``entry_url`` may be a single URL, a Python list (reference semantics /
     README seed-list design), or a **DataFrame** with a ``url`` column and an
@@ -216,7 +228,7 @@ def _seed_frontier(
         if seeds.count() <= SEED_COLLECT_MAX:
             s = seeds.orderBy("seed_id") if "seed_id" in seeds.columns else seeds
             entry_url = [r["url"] for r in s.select("url").collect()]
-            return _seed_frontier(spark, entry_url, extra, timings=timings)
+            return _seed_frontier(spark, entry_url, timings=timings)
         if timings is not None:
             # observable evidence that frontier-sized seed lists never
             # materialize on the driver (VERDICT r2 #7): surfaced in the
@@ -241,7 +253,7 @@ def _seed_frontier(
         if not n_seeds:
             first.unpersist()
             return None, 0
-        bkt = _bucket_expr(F.col("seed_id"), int(hi_row["hi"]) + 1, nb)
+        bkt = _bucket_expr(F.col("seed_id"), 0, int(hi_row["hi"]) + 1, nb)
         b = first.withColumn("_bkt", bkt)
         counts = {
             r["_bkt"]: r["n"]
@@ -249,15 +261,11 @@ def _seed_frontier(
         }
         off, _ = _offset_map_expr("_bkt", counts, 0)
         w = Window.partitionBy("_bkt").orderBy("seed_id")
-        out_cols = [F.col("url")]
-        rank_col = (F.row_number().over(w) - 1 + off).cast("long")
-        if "rank" in extra:
-            out_cols.append(rank_col.alias("rank"))
-        if "grank" in extra:
-            out_cols.append(rank_col.alias("grank"))
-        if "depth" in extra:
-            out_cols.append(F.lit(0).alias("depth"))
-        frontier = b.select(*out_cols).localCheckpoint(eager=True)
+        frontier = b.select(
+            "url",
+            (F.row_number().over(w) - 1 + off).cast("long").alias("grank"),
+            F.lit(0).alias("depth"),
+        ).localCheckpoint(eager=True)
         first.unpersist()
         return frontier, n_seeds
 
@@ -271,16 +279,16 @@ def _seed_frontier(
             starts.append(n)
     if not starts:
         return None, 0
-    return _seed_df(spark, starts, extra), len(starts)
+    return _seed_df(spark, starts), len(starts)
 
 
-def _bucket_expr(col: Column, hi: int, nb: int) -> Column:
+def _bucket_expr(col: Column, lo: int, hi: int, nb: int) -> Column:
     """Monotone equal-width bucket id in [0, nb) for an integer key known to
-    lie in [0, hi). Being a pure column expression (unlike a sampled
+    lie in [lo, hi). Being a pure column expression (unlike a sampled
     RangePartitioner), it is deterministic across re-evaluations — the rank
     offsets computed from one job remain valid in the next."""
-    hi = max(1, hi)
-    return F.least(F.lit(nb - 1), F.floor(col * nb / hi)).cast("int")
+    span = max(1, hi - lo)
+    return F.least(F.lit(nb - 1), F.floor((col - lo) * nb / span)).cast("int")
 
 
 def _offset_map_expr(
@@ -298,22 +306,23 @@ def _offset_map_expr(
     return F.element_at(F.create_map(*kv), F.col(bucket_col)), acc
 
 
-def _fill_lineage_hosts(lineage: List[dict], seen: DataFrame) -> None:
+def _fill_lineage_hosts(lineage: List[dict], seen: DataFrame, seed_rows: int) -> None:
     """Backfill ``hosts_served`` for this crawl's lineage rows in ONE
     count_distinct job over the (column-pruned) url_seen table, instead of a
     distinct aggregate inside every round's stats pass. new_seen rows carry
-    (host_hash, first_depth), and lineage partition_id = host_hash % 32 by
-    construction, so distinct hosts per (round, partition) is exactly
-    distinct host_hash per (first_depth, host_hash % 32). Rows loaded from a
-    resume checkpoint already carry values and are left untouched (only
-    ``None`` placeholders fill)."""
+    (host_hash, first_depth = the round that enqueued them), and lineage
+    partition_id = host_hash % 32 by construction, so distinct hosts per
+    (round, partition) is exactly distinct host_hash per (first_depth,
+    host_hash % 32) — leaving out the seeds (pos < ``seed_rows``), which no
+    round enqueued. Rows loaded from a resume checkpoint already carry
+    values and are left untouched (only ``None`` placeholders fill)."""
     need_rounds = sorted(
         {l["round"] for l in lineage if l.get("hosts_served") is None}
     )
     if not need_rounds:
         return
     rows = (
-        seen.filter(F.col("first_depth").isin(need_rounds))
+        seen.filter(F.col("first_depth").isin(need_rounds) & (F.col("pos") >= seed_rows))
         .groupBy(
             F.col("first_depth").alias("_r"),
             F.pmod(F.col("host_hash"), F.lit(N_LINEAGE_PARTS))
@@ -391,239 +400,318 @@ def _content_key() -> Column:
     ).otherwise(F.concat(F.lit("u:"), F.col("url")))
 
 
+# the docs payload a parse carries through the kernel (P2 fetch fidelity)
+_DOC_CARRY = [
+    StructField("pos", LongType()),
+    StructField("lang", StringType()),
+    StructField("warc_ts", TimestampType()),
+    StructField("http_status", IntegerType()),
+    StructField("fetch_ms", LongType()),
+]
+
+
+def _parse_fn(config: CrawlConfig, carry_fields: List[StructField]):
+    """The mapInPandas parse function for rows carrying ``carry_fields``
+    through the kernel, and its output schema."""
+    fn, _ = make_extract_pages(config, carry_cols=[f.name for f in carry_fields])
+    return fn, extract_schema_with(carry_fields)
+
+
+def _phase(timings: List[dict], name: str, t0: float) -> None:
+    """Record the wall time a phase took since ``t0`` (time.monotonic)."""
+    timings.append({"phase": name, "ms": int((time.monotonic() - t0) * 1000)})
+
+
+def _with_fetch_defaults(df: DataFrame) -> DataFrame:
+    """P2 fetch-fidelity columns: thread through when the pages table has
+    them, else default to http 200, 0 ms, no language, no capture time."""
+    defaults = {
+        "http_status": F.lit(200),
+        "fetch_ms": F.lit(0).cast("long"),
+        "lang": F.lit(None).cast("string"),
+        "warc_ts": F.lit(None).cast("timestamp"),
+    }
+    for c, v in defaults.items():
+        if c not in df.columns:
+            df = df.withColumn(c, v)
+    return df
+
+
 def _empty_result(spark: SparkSession, with_processor: bool) -> CrawlResult:
     empty_seen = spark.createDataFrame([], SEEN_SCHEMA)
-    res = CrawlResult(
+    return CrawlResult(
         queue=empty_seen.select("url", "pos"),
         seen=empty_seen,
         visited=empty_seen.select("url"),
         docs=spark.createDataFrame([], _docs_schema()) if with_processor else None,
     )
-    return res
 
 
-def run_crawl(
+@dataclass
+class _Admission:
+    """Which pending urls a round fetches. The default admits every one of
+    them and adds nothing to the round's plan. Any cap set below makes the
+    policy ``defers``: the urls it does not admit wait, unchanged, for a
+    later round (semantics fixed by oracle.crawl_oracle_polite)."""
+
+    budget: Optional[int] = None          # per-host urls per round
+    max_concurrent: Optional[int] = None  # maxConcurrentPerDomain: one more per-host cap
+    global_cap: Optional[int] = None      # globalQps x window: urls per round in total
+    max_pages: Optional[int] = None       # maxPages: admitted fetches per job
+    salt_threshold: Optional[int] = None  # salt hosts with more pending urls than this
+    n_salts: int = 16
+    delays: Optional[DataFrame] = None    # (host, crawl_delay_ms): timed politeness
+    window_ms: int = 10_000               # virtual length of one round
+    host_state: Optional[DataFrame] = None  # timed clocks (host, next_allowed_ts)
+
+    @property
+    def defers(self) -> bool:
+        caps = (self.budget, self.max_concurrent, self.global_cap, self.max_pages, self.delays)
+        return any(c is not None for c in caps)
+
+    def split(
+        self, frontier: DataFrame, rnd: int, fetched_total: int
+    ) -> Tuple[DataFrame, DataFrame]:
+        """(admitted, deferred) rows of the pending frontier for round ``rnd``.
+        A timed policy also advances and pins its per-host clocks."""
+        cap = self.global_cap
+        if self.max_pages is not None:
+            # the in-round remainder of the job budget rides the globalQps cut
+            rem = max(0, self.max_pages - fetched_total)
+            cap = rem if cap is None else min(cap, rem)
+        tr = frontier.withColumn("host", parse_host(F.col("url")))
+        order = ("grank",)
+        if self.delays is not None:
+            admitted, deferred, state = timed_admit(
+                tr, self.budget, self.delays, self.host_state,
+                window_ms=self.window_ms, rnd=rnd, order_cols=order, host_col="host",
+                max_concurrent=self.max_concurrent, global_cap=cap,
+            )
+            # tiny table (one row per host ever served); eager so the round's
+            # clock advance is pinned before the frontier mutates
+            self.host_state = state.localCheckpoint(eager=True)
+        else:
+            if self.salt_threshold is not None:
+                # max_concurrent is just another per-host cap: min it into the
+                # budget BEFORE the per-salt split (per-salt enforcement of a
+                # cross-salt host cap would defeat the salting)
+                admitted, deferred = salted_admit(
+                    tr.withColumn("rank", F.col("grank")),
+                    _min_cap(self.budget, self.max_concurrent),
+                    order_cols=order, host_col="host",
+                    salt_threshold=self.salt_threshold, n_salts=self.n_salts,
+                )
+                admitted, deferred = admitted.drop("rank"), deferred.drop("rank")
+            else:
+                admitted, deferred = admit(
+                    tr, self.budget, order_cols=order, host_col="host",
+                    max_concurrent=self.max_concurrent,
+                )
+            admitted, deferred = global_cap_admit(admitted, deferred, cap, order_cols=order)
+        return admitted.drop("host"), deferred.drop("host")
+
+
+# scalar loop state a stop commits to the manifest and a resume restores
+_COUNTERS = ("queue_size", "frontier_rows", "frontier_lo", "discovered", "fetched_total")
+
+
+def _crawl(
     spark: SparkSession,
     pages: DataFrame,
     entry_url,
     config: CrawlConfig,
-    store: Optional[SnapshotStore] = None,
-    with_processor: bool = True,
-    use_bloom: bool = False,
-    seen_filter: Optional[str] = None,
-    crawl_ts: str = "2025-06-01 00:00:00",
-    stop=None,
-    resume: bool = False,
+    policy: _Admission,
+    enqueue_seeds: bool,
+    with_processor: bool,
+    robots: Optional[DataFrame],
+    store: Optional[SnapshotStore],
+    seen_filter: Optional[str],
+    crawl_ts: str,
+    stop,
+    resume: bool,
+    max_rounds: int = 10_000,
 ) -> CrawlResult:
-    """CrawlerService.crawl(entryUrl, waitForCompletion=True) as batch rounds.
+    """The round loop behind both entry points (see the module docstring).
 
-    ``entry_url`` may be a single URL (reference semantics), a seed list
-    (README.md seed-list design), or a seeds DataFrame (url [, seed_id]):
-    seeds occupy queue positions 0..n-1 in list order with first-occurrence
-    dedup, and round 0 traverses all of them.
-
-    Cancellation (O2 — CrawlerService.stopCrawl()/awaitTermination,
-    CrawlerService.java:134-151): ``stop`` is a zero-arg callable polled
-    between rounds — the batch analogue of cancelling the worker pool, where
-    a "round" is the smallest unit that leaves consistent state. When it
-    returns True the crawl halts, and with a ``store`` the full loop state
-    (url_seen, the pending frontier, the visited set, prior lineage and the
-    scalar counters) is committed so ``resume=True`` on the same store
-    continues from the exact round boundary — seeds/entry must match. A
-    stopped result has ``stopped=True`` and no docs (the docs pass runs only
-    at natural completion; a resumed run covers the whole queue, reusing
-    every previously persisted per-round raw parse).
+    The pending frontier holds (url, grank, depth[, pos]): grank is the
+    global discovery rank, the order every admission and every enqueue
+    follows; pos, the queue position, rides along with a processor so a
+    round's parse output is a complete raw doc.
     """
     _t0 = time.monotonic()
-    # url-seen sidecar strategy: seen_filter ('bloom' | 'cuckoo') or the
-    # legacy use_bloom flag (== 'bloom'); None = exact joins only
-    _sf = seen_filter_ops(seen_filter or "bloom") if (seen_filter or use_bloom) else None
-    _seed_marks: List[dict] = []
-    traverse, n_seeds = _seed_frontier(spark, entry_url, ("rank",), timings=_seed_marks)
+    # url-seen sidecar strategy ('bloom' | 'cuckoo'); None = exact joins only
+    _sf = seen_filter_ops(seen_filter) if seen_filter else None
+    res = CrawlResult(queue=None, seen=None, visited=None, docs=None)  # type: ignore[arg-type]
+    traverse, n_seeds = _seed_frontier(spark, entry_url, timings=res.timings)
     if traverse is None:
         return _empty_result(spark, with_processor)
     if with_processor:
-        # queue position rides on the traversal frontier so the round's parse
-        # output is a complete raw doc (single-parse: see loop below); seeds
-        # occupy pos 0..n-1 = their rank
-        traverse = traverse.withColumn("pos", F.col("rank").cast("long"))
-    res = CrawlResult(queue=None, seen=None, visited=None, docs=None)  # type: ignore[arg-type]
-    res.timings.extend(_seed_marks)
-    res.timings.append({"phase": "seed_frontier", "ms": int((time.monotonic() - _t0) * 1000)})
+        # seeds occupy pos 0..n-1 = their rank
+        traverse = traverse.withColumn("pos", F.col("grank"))
+    _phase(res.timings, "seed_frontier", _t0)
 
     max_depth = max(0, config.max_depth)
     nb = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    defers = policy.defers
 
-    # With the processor, seeds are enqueued (CrawlerService.java:110-116) and
-    # the seen set and traversal set then evolve IDENTICALLY (both gain
-    # exactly the round's first-occurrence anti-seen rows) — one flag serves
-    # both. Without it, the sets differ and a second visited-flag join runs.
+    # With seeds enqueued (CrawlerService.java:110-116) and every pending url
+    # admitted, the seen set and the traversal set evolve IDENTICALLY (both
+    # gain exactly the round's first-occurrence anti-seen rows) — one flag
+    # serves both. Otherwise the sets differ and a visited-flag join runs.
     visited = traverse.select("url")
-    if with_processor:
+    if enqueue_seeds:
         seen = traverse.select(
             "url",
-            F.col("rank").cast("long").alias("pos"),
+            F.col("grank").alias("pos"),
             host_hash_col(parse_host(F.col("url"))).alias("host_hash"),
             F.lit(0).alias("first_depth"),
         )
-        queue_size = n_seeds
     else:
         seen = spark.createDataFrame([], SEEN_SCHEMA)
-        queue_size = 0
-
-    # the bloom sidecar is built AFTER the resume block below: a resume either
-    # loads the persisted sidecar table or rebuilds from the restored seen set
-    # — building one from the seed seen here would be thrown away either way
-    sidecar = None
+    seed_rows = queue_size = n_seeds if enqueue_seeds else 0
+    frontier_rows = discovered = n_seeds
+    frontier_lo = fetched_total = 0
 
     # Single-parse (WebPageProcessor parses each page ONCE for both links and
     # content): in processor mode the round's link-harvest parse also carries
     # the docs payload (title/segments/links from the same kernel call) plus
     # the P2 fidelity columns, and each round's raw extraction is persisted.
     # The final docs pass then re-parses only the queue tail that no round
-    # ever traversed (children harvested at maxDepth, CrawlerService.java:127-131)
+    # ever fetched (children harvested at maxDepth, CrawlerService.java:127-131)
     # instead of re-fetching and re-parsing the whole queue.
+    fcols = ["url", "grank", "depth"]
+    carry_fields = [StructField("grank", LongType()), StructField("depth", IntegerType())]
+    fetch_cols = ["url", "html"]
+    pages_src = pages
     if with_processor:
-        from pyspark.sql.types import TimestampType
-
-        pages_src = pages
-        if "http_status" not in pages_src.columns:
-            pages_src = pages_src.withColumn("http_status", F.lit(200))
-        if "fetch_ms" not in pages_src.columns:
-            pages_src = pages_src.withColumn("fetch_ms", F.lit(0).cast("long"))
-        if "lang" not in pages_src.columns:
-            pages_src = pages_src.withColumn("lang", F.lit(None).cast("string"))
-        if "warc_ts" not in pages_src.columns:
-            pages_src = pages_src.withColumn(
-                "warc_ts", F.lit(None).cast("timestamp")
-            )
-        carry_fields = [
-            StructField("rank", LongType()),
-            StructField("pos", LongType()),
-            StructField("lang", StringType()),
-            StructField("warc_ts", TimestampType()),
-            StructField("http_status", IntegerType()),
-            StructField("fetch_ms", LongType()),
-        ]
-        fetch_cols = ["url", "html", "lang", "warc_ts", "http_status", "fetch_ms"]
-    else:
-        pages_src = pages
-        carry_fields = [StructField("rank", LongType())]
-        fetch_cols = ["url", "html"]
-    # content gate for the traversal parse: a disallowed-type / oversize
-    # fetch must never enter the kernel, so it harvests no links; the final
-    # docs pass re-encounters the row and emits its SKIPPED_* status
-    from .operators.contentgate import skip_status_col
-
+        pages_src = _with_fetch_defaults(pages)
+        fcols.append("pos")
+        carry_fields += _DOC_CARRY
+        fetch_cols += ["lang", "warc_ts", "http_status", "fetch_ms"]
+    # content gate for the round parse: a disallowed-type / oversize fetch
+    # spends its admission slot but never enters the kernel, so it harvests
+    # no links; the final docs pass re-encounters the row and emits its
+    # SKIPPED_* status
     gate_skip = skip_status_col(
         config.allowed_content_types,
         config.max_content_bytes,
         content_type_col="content_type" if "content_type" in pages.columns else None,
     )
     if gate_skip is not None and "content_type" in pages.columns:
-        fetch_cols = fetch_cols + ["content_type"]
+        fetch_cols.append("content_type")
 
-    extract_fn, _ = make_extract_pages(
-        config, carry_cols=[f.name for f in carry_fields]
-    )
-    extract_out = extract_schema_with(carry_fields)
+    extract_fn, extract_out = _parse_fn(config, carry_fields)
     raw_parts: List[DataFrame] = []
-    fetched_est = 0
-
     lineage: List[dict] = []
     # background round-table durability writes in flight; each MUST be
     # joined before any manifest commit (a committed manifest must never
     # reference a half-written table)
     pending_writes: List[_AsyncDF] = []
-    frontier_rows = n_seeds
+    # the seen-filter sidecar is built AFTER the resume block below: a resume
+    # either loads the persisted sidecar table or rebuilds from the restored
+    # seen set — building one from the seed seen here would be thrown away
+    sidecar = None
+    if policy.delays is not None:
+        policy.host_state = spark.createDataFrame(
+            [], "host string, next_allowed_ts long"
+        ).localCheckpoint(eager=True)
 
-    start_depth = 0
+    rnd = 0
     resumed_had_rules = False
-    if resume and store is not None:
-        m = store.load_manifest()
-        if m is not None and m.meta.get("stopped_next_depth") is not None:
-            # raw_docs snapshots written under a rules-bearing config carry
-            # non-empty segments; the docs pass's DUPLICATE skip must key off
-            # the UNION of configs, not just the current one (ADVICE r2)
-            resumed_had_rules = bool(m.meta.get("has_content_rules", False))
-            # pick the crawl back up at the committed round boundary: every
-            # table below was written atomically by the stop path
-            start_depth = int(m.meta["stopped_next_depth"])
-            # read url_seen at its MANIFEST version, not at start_depth:
-            # jobs/recrawl.py --evict commits an evicted url_seen at a LATER
-            # version than the stop snapshot, and resuming from the stale
-            # pre-eviction table would silently never re-admit due urls
-            # (ADVICE r4)
-            seen = store.read_table(
-                spark, "url_seen", int(m.tables.get("url_seen", start_depth))
+    m = store.load_manifest() if resume and store is not None else None
+    if m is not None and m.meta.get("stopped_next_depth") is not None:
+        # raw_docs snapshots written under a rules-bearing config carry
+        # non-empty segments; the docs pass's DUPLICATE skip must key off
+        # the UNION of configs, not just the current one (ADVICE r2)
+        resumed_had_rules = bool(m.meta.get("has_content_rules", False))
+        # pick the crawl back up at the committed round boundary: every
+        # table below was written atomically by the stop path
+        rnd = int(m.meta["stopped_next_depth"])
+        # read url_seen at its MANIFEST version, not at the stop round:
+        # jobs/recrawl.py --evict commits an evicted url_seen at a LATER
+        # version than the stop snapshot, and resuming from the stale
+        # pre-eviction table would silently never re-admit due urls
+        # (ADVICE r4)
+        seen = store.read_table(spark, "url_seen", int(m.tables["url_seen"]))
+        traverse, visited = (store.read_table(spark, t, rnd) for t in ("frontier", "visited"))
+        missing = [k for k in _COUNTERS if k not in m.meta]
+        if missing:
+            raise ValueError(
+                f"snapshot manifest lacks {', '.join(missing)}: it was stopped "
+                "before BFS and polite crawls shared one round loop and cannot "
+                "be resumed; restart the crawl without --resume"
             )
-            traverse = store.read_table(spark, "frontier", start_depth)
-            visited = store.read_table(spark, "visited", start_depth)
-            queue_size = int(m.meta["queue_size"])
-            frontier_rows = int(m.meta["frontier_rows"])
-            fetched_est = int(m.meta.get("fetched_est", 0))
-            if with_processor:
-                raw_parts = [
-                    store.read_table(spark, "raw_docs", d)
-                    for d in range(start_depth)
-                ]
-            lineage = [
-                r.asDict() for r in store.read_table(
-                    spark, "lineage_ckpt", start_depth
-                ).collect()
-            ]
-            _sv = m.tables.get(f"{_sf.kind}_sidecar") if _sf is not None else None
-            if _sv is not None and int(_sv) >= start_depth:
-                # the stop path persisted the sidecar — load it instead of
-                # the O(|seen|) rebuild (at 10^10 seen URLs the rebuild is a
-                # full table pass before round 1). The manifest version may be
-                # NEWER than start_depth: jobs/recrawl.py --evict deletes due
-                # fingerprints in place and commits the sidecar at version+1
-                # (ADVICE r4). A legacy snapshot without the table, or one
-                # older than the stop point, falls through to the rebuild.
-                sidecar = store.read_table(spark, f"{_sf.kind}_sidecar", int(_sv))
+        queue_size, frontier_rows, frontier_lo, discovered, fetched_total = (
+            int(m.meta[k]) for k in _COUNTERS
+        )
+        if with_processor:
+            raw_parts = [store.read_table(spark, "raw_docs", r) for r in range(rnd)]
+        lineage = [
+            r.asDict()
+            for r in store.read_table(spark, "lineage_ckpt", rnd).collect()
+        ]
+        if policy.delays is not None:
+            policy.host_state = store.read_table(spark, "host_state", rnd)
+        _sv = m.tables.get(f"{_sf.kind}_sidecar") if _sf is not None else None
+        if _sv is not None and int(_sv) >= rnd:
+            # the stop path persisted the sidecar — load it instead of the
+            # O(|seen|) rebuild (at 10^10 seen URLs the rebuild is a full
+            # table pass before the next round). The manifest version may be
+            # NEWER than the stop round: jobs/recrawl.py --evict deletes due
+            # fingerprints in place and commits the sidecar at version+1
+            # (ADVICE r4). A snapshot older than the stop point falls
+            # through to the rebuild.
+            sidecar = store.read_table(spark, f"{_sf.kind}_sidecar", int(_sv))
 
     if _sf is not None and sidecar is None:
         sidecar = _sf.build(seen).localCheckpoint(eager=True)
 
-    stopped_at: Optional[int] = None
-    for depth in range(start_depth, max_depth + 1):
+    stopped = False
+    while (
+        frontier_rows
+        and rnd < max_rounds
+        and (policy.max_pages is None or fetched_total < policy.max_pages)
+    ):
         if stop is not None and stop():
-            stopped_at = depth
+            stopped = True
             break
         t0 = time.monotonic()
-        trav_side = _frontier_side(traverse, frontier_rows)
-        fetched = pages_src.select(*fetch_cols).join(trav_side, "url", "inner")
+        admitted = traverse
+        if defers:
+            admitted, deferred = policy.split(traverse, rnd, fetched_total)
+        if robots is not None:
+            # blocked urls spent their admission slot but are never fetched
+            # or harvested; the docs pass emits them as SKIPPED_ROBOTS
+            admitted, _ = apply_robots(admitted, robots)
+        fetched = pages_src.select(*fetch_cols).join(
+            _frontier_side(admitted, frontier_rows), "url", "inner"
+        )
         if gate_skip is not None:
             fetched = fetched.filter(gate_skip.isNull()).drop("content_type")
         fetched = _balance_for_parse(spark, fetched, frontier_rows)
         extracted = fetched.mapInPandas(extract_fn, extract_out)
-        fetched_est += frontier_rows
 
         if with_processor:
-            # materialize the round's parse output once (job A); the stats
-            # job and the final docs assembly both read it back — the page is
-            # never parsed again. `text` is redundant with segments for docs
-            # and excluded to keep the raw table lean.
+            # materialize the round's parse output once; the stats job and
+            # the final docs assembly both read it back — the page is never
+            # parsed again. `text` is redundant with segments for docs and
+            # excluded to keep the raw table lean.
             _tr = time.monotonic()
-            raw = extracted.drop("text").withColumn("_ckey", _content_key())
-            if store is not None:
-                store.write_table(raw, "raw_docs", depth)
-                raw = store.read_table(spark, "raw_docs", depth)
-            else:
-                raw = raw.localCheckpoint(eager=True)
-            raw_parts.append(raw)
-            extracted = raw
-            res.timings.append(
-                {"phase": f"r{depth}_raw", "ms": int((time.monotonic() - _tr) * 1000)}
+            extracted = _raw_docs_pin(spark, store, rnd)(
+                extracted.drop("text").withColumn("_ckey", _content_key())
             )
+            raw_parts.append(extracted)
+            _phase(res.timings, f"r{rnd}_raw", _tr)
 
-        # hrefs come out of the kernel already normalized and null-free
+        # hrefs come out of the kernel already normalized and null-free;
+        # ``depth`` is the child's
         links = extracted.select(
-            F.col("rank").alias("parent_rank"),
+            F.col("grank").alias("parent_rank"),
+            (F.col("depth") + 1).alias("depth"),
             F.explode("links").alias("link"),
         ).select(
             "parent_rank",
+            "depth",
             F.col("link.pos").alias("link_pos"),
             F.col("link.href").alias("url"),
         )
@@ -632,58 +720,107 @@ def run_crawl(
                 F.col("url"), config.include_url_patterns, config.exclude_url_patterns
             )
         )
-        # first occurrence within the round (intra-round self-dedup) then the
-        # seen flag — a LEFT join (not anti) so dup rows ride into the stats
-        first = first_occurrence(accepted, "url", ["parent_rank", "link_pos"])
+        # first occurrence within the round (intra-round self-dedup): the
+        # enqueue position follows the global first harvest. Under deferral a
+        # round mixes depths, so the traversal push follows the first
+        # DEPTH-ELIGIBLE harvest (the oracle's per-event rule) — a second,
+        # depth-masked min in the same url-grouped aggregate.
+        if defers:
+            first = accepted.groupBy("url").agg(
+                F.min(F.struct("parent_rank", "link_pos")).alias("_o"),
+                F.min(
+                    F.when(
+                        F.col("depth") <= max_depth,
+                        F.struct("parent_rank", "link_pos", "depth"),
+                    )
+                ).alias("_oe"),
+            ).select(
+                "url",
+                F.col("_o.parent_rank").alias("parent_rank"),
+                F.col("_o.link_pos").alias("link_pos"),
+                F.col("_oe.parent_rank").alias("e_parent_rank"),
+                F.col("_oe.link_pos").alias("e_link_pos"),
+                F.col("_oe.depth").alias("depth"),
+            )
+        else:
+            first = first_occurrence(
+                accepted.drop("depth"), "url", ["parent_rank", "link_pos"]
+            )
         round_caches: List[DataFrame] = []
         # join the previous round's background sidecar checkpoint here — it
         # has been overlapping with this round's parse job up to this point
         sidecar = _resolve_df(sidecar) if sidecar is not None else None
+        # (a deferred traversal may push a url enqueued in an earlier round;
+        # its raw doc needs that queue position, so the seen join carries it)
         flagged = flag_seen(
             first, seen, sidecar=sidecar, cache_registry=round_caches,
             prefilter_fn=_sf.prefilter if _sf is not None else None,
+            carry=("pos",) if defers and with_processor else (),
         )
-        if with_processor:
-            flagged = flagged.withColumn("_vis", F.col("_dup"))
+        # _vis = 0 marks a url this round pushes to the pending frontier
+        if not defers and rnd >= max_depth:
+            vis = F.lit(1)  # harvest-but-don't-traverse round
+        elif not defers and enqueue_seeds:
+            vis = F.col("_dup")
         else:
-            vm = visited.select("url").withColumn("_v", F.lit(1))
-            flagged = (
-                flagged.join(vm, "url", "left")
-                .withColumn("_vis", F.coalesce(F.col("_v"), F.lit(0)))
-                .drop("_v")
+            flagged = flagged.join(
+                visited.select("url").withColumn("_v", F.lit(1)), "url", "left"
             )
+            pushed = F.col("_v").isNull()
+            if defers:
+                pushed = pushed & F.col("e_parent_rank").isNotNull()
+            vis = F.when(pushed, F.lit(0)).otherwise(F.lit(1))
         b = (
-            flagged.withColumn("host_hash", host_hash_col(parse_host(F.col("url"))))
-            .withColumn("_bkt", _bucket_expr(F.col("parent_rank"), frontier_rows, nb))
+            flagged.withColumn("_vis", vis)
+            .withColumn("host_hash", host_hash_col(parse_host(F.col("url"))))
+            .withColumn(
+                "_bkt", _bucket_expr(F.col("parent_rank"), frontier_lo, discovered, nb)
+            )
             .withColumn(
                 "_part",
                 F.pmod(F.col("host_hash"), F.lit(N_LINEAGE_PARTS)).cast("int"),
             )
         )
 
-        # ---- job 1 (the round's ONE heavy non-parse job): evaluate the
-        # harvest chain once, with bucket-LOCAL running sums, straight into
-        # the pinned round table. Global pos/rank offsets are not known yet —
+        # ---- the round's ONE heavy non-parse job: evaluate the harvest
+        # chain once, with bucket-LOCAL running sums, straight into the
+        # pinned round table. Global pos/grank offsets are not known yet —
         # they need the per-bucket counts — so the table stores local ranks
         # and ALL rows (dup rows included, for the stats job); the global
         # offsets fold in lazily as a projection over the pinned table.
-        # Replaces the old persist(b) + groupingSets-over-the-live-chain +
-        # second write pass: no cache pressure, and the stats job below reads
-        # a column-pruned slim parquet instead of re-aggregating the chain.
         _tm = time.monotonic()
         w = Window.partitionBy("_bkt").orderBy("parent_rank", "link_pos").rowsBetween(
             Window.unboundedPreceding, 0
         )
+        cols = ["url", "host_hash", "_bkt", "_part", "_dup", "_vis"]
+        if defers:
+            # traversal ranks follow the depth-eligible harvest: own buckets
+            tb = "_bkte"
+            b = b.withColumn(
+                tb, _bucket_expr(F.col("e_parent_rank"), frontier_lo, discovered, nb)
+            )
+            w_t = Window.partitionBy(tb).orderBy("e_parent_rank", "e_link_pos").rowsBetween(
+                Window.unboundedPreceding, 0
+            )
+            cols += [tb, "depth"] + (["pos"] if with_processor else [])
+        else:
+            tb, w_t = "_bkt", w
         round_local = b.select(
-            "url",
-            "host_hash",
-            "_bkt",
-            "_part",
-            "_dup",
-            "_vis",
+            *cols,
             _running("_dup", w).alias("_lpos"),
-            _running("_vis", w).alias("_lrank"),
+            _running("_vis", w_t).alias("_lrank"),
         )
+        if defers:
+            # deferred frontier rows ride along with null flags: they must be
+            # pinned too — they seed the next round's admission and would
+            # otherwise recompute the whole admission lineage every round
+            round_local = round_local.unionByName(
+                deferred.select(
+                    "url", "depth", F.col("grank").alias("_dgrank"),
+                    *(["pos"] if with_processor else []),
+                ),
+                allowMissingColumns=True,
+            )
         # Pin via eager localCheckpoint in BOTH paths; in the store path the
         # durability parquet write rides a BACKGROUND thread (the round
         # parquet is only ever read by resume/inspection, never by this
@@ -698,8 +835,8 @@ def run_crawl(
         if store is not None:
             pending_writes.append(
                 _AsyncDF(
-                    lambda df=round_local, d=depth: (
-                        store.write_table(df, "round", d),
+                    lambda df=round_local, r=rnd: (
+                        store.write_table(df, "round", r),
                         df,
                     )[1]
                 )
@@ -709,63 +846,77 @@ def run_crawl(
         # one cached relation per round
         for c in round_caches:
             c.unpersist()
-        res.timings.append(
-            {"phase": f"r{depth}_mat", "ms": int((time.monotonic() - _tm) * 1000)}
-        )
+        _phase(res.timings, f"r{rnd}_mat", _tm)
         _ts = time.monotonic()
 
-        # ---- job 2 (tiny, distributed, codegen): per-bucket / per-partition
-        # counts in one grouping-sets pass over the pinned in-memory table —
-        # a few int sums, no count_distinct (hosts_served backfills ONCE at
-        # end of crawl via _fill_lineage_hosts)
+        # ---- the stats job (tiny, codegen): per-bucket / per-partition
+        # counts in one grouping-sets pass over the pinned table — a few int
+        # sums, no count_distinct (hosts_served backfills ONCE at end of
+        # crawl via _fill_lineage_hosts). Under deferral the grand total
+        # counts the deferred rows and their lowest grank: the next round's
+        # frontier size and bucket floor.
+        keys = ["_bkt", "_part"] + ([tb] if defers else [])
+        sets = [["_bkt"], ["_part"]] + ([[tb], []] if defers else [])
+        aggs = [
+            F.sum(1 - F.col("_dup")).alias("n_new"),
+            F.sum("_dup").alias("n_dup"),
+            F.sum(1 - F.col("_vis")).alias("n_trav"),
+        ]
+        if defers:
+            aggs += [
+                F.count(F.when(F.col("_dup").isNull(), 1)).alias("n_def"),
+                F.min("_dgrank").alias("def_lo"),
+            ]
         stats = (
-            round_local.groupingSets([["_bkt"], ["_part"]], "_bkt", "_part")
-            .agg(
-                F.sum(1 - F.col("_dup")).alias("n_new"),
-                F.sum("_dup").alias("n_dup"),
-                F.sum(1 - F.col("_vis")).alias("n_trav"),
-                F.grouping_id().alias("_gid"),
-            )
+            round_local.groupingSets(sets, *keys)
+            .agg(*aggs, F.grouping_id().alias("_gid"))
             .collect()
         )
-        bkt_rows = [r for r in stats if r["_gid"] == 1]
+
+        def grouped(*by: str) -> list:
+            gid = sum(1 << (len(keys) - 1 - i) for i, k in enumerate(keys) if k not in by)
+            return [r for r in stats if r["_gid"] == gid]
+
+        # null bucket / partition groups hold the deferred rows
+        bkt_rows = [r for r in grouped("_bkt") if r["_bkt"] is not None]
         nn_bkt = {r["_bkt"]: int(r["n_new"]) for r in bkt_rows}
-        nt_bkt = {r["_bkt"]: int(r["n_trav"]) for r in bkt_rows}
+        nt_bkt = {r[tb]: int(r["n_trav"]) for r in grouped(tb) if r[tb] is not None}
         n_new = sum(nn_bkt.values())
         n_dup = sum(int(r["n_dup"]) for r in bkt_rows)
         n_trav = sum(nt_bkt.values())
         part_rows = sorted(
-            (int(r["_part"]), int(r["n_new"]))
-            for r in stats
-            if r["_gid"] == 2 and r["n_new"]
+            (int(r["_part"]), int(r["n_new"])) for r in grouped("_part") if r["n_new"]
         )
-        res.timings.append(
-            {"phase": f"r{depth}_stats", "ms": int((time.monotonic() - _ts) * 1000)}
-        )
+        # an empty round table has no grand-total row: grouping sets run as
+        # Expand + keyed Aggregate, which returns nothing for empty input
+        total = next(iter(grouped()), None) if defers else None
+        n_def = int(total["n_def"]) if total else 0
+        _phase(res.timings, f"r{rnd}_stats", _ts)
 
-        # global pos/rank = local running sum + driver prefix-sum offset,
+        # global pos/grank = local running sum + driver prefix-sum offset,
         # a pure projection over the pinned table (no further job)
         pos_off, _ = _offset_map_expr("_bkt", nn_bkt, queue_size)
-        trav_off, _ = _offset_map_expr("_bkt", nt_bkt, 0)
-        round_tbl = (
-            round_local.filter((F.col("_dup") == 0) | (F.col("_vis") == 0))
-            .withColumn(
-                "pos",
-                F.when(
-                    F.col("_dup") == 0, (F.col("_lpos") - 1 + pos_off).cast("long")
-                ),
-            )
-            .withColumn(
-                "rank",
-                F.when(
-                    F.col("_vis") == 0, (F.col("_lrank") - 1 + trav_off).cast("long")
-                ),
-            )
-            .select("url", "host_hash", "pos", "rank")
+        rank_off, _ = _offset_map_expr(tb, nt_bkt, discovered)
+        keep = (F.col("_dup") == 0) | (F.col("_vis") == 0)
+        pos = F.when(F.col("_dup") == 0, (F.col("_lpos") - 1 + pos_off).cast("long"))
+        grank = F.when(F.col("_vis") == 0, (F.col("_lrank") - 1 + rank_off).cast("long"))
+        depth = F.lit(rnd + 1)
+        if defers:
+            # deferred rows, and urls enqueued in an earlier round, keep what
+            # they already had
+            keep = keep | F.col("_dup").isNull()
+            grank = grank.otherwise(F.col("_dgrank"))
+            depth = F.col("depth")
+            if with_processor:
+                pos = pos.otherwise(F.col("pos"))
+        round_tbl = round_local.filter(keep).select(
+            "url", "host_hash", "_dup",
+            pos.alias("pos"), grank.alias("grank"), depth.alias("depth"),
         )
 
-        new_seen = round_tbl.filter(F.col("pos").isNotNull()).select(
-            "url", "pos", "host_hash", F.lit(depth).alias("first_depth")
+        # first_depth is the discovery round (lineage hosts_served keys on it)
+        new_seen = round_tbl.filter(F.col("_dup") == 0).select(
+            "url", "pos", "host_hash", F.lit(rnd).alias("first_depth")
         )
         seen = seen.unionByName(new_seen)
         queue_size += n_new
@@ -777,144 +928,230 @@ def run_crawl(
             merged = _sf.maintain(sidecar, new_seen)
             sidecar = _AsyncDF(lambda m=merged: m.localCheckpoint(eager=True))
 
-        if depth < max_depth:
-            tcols = ["url", "rank", "pos"] if with_processor else ["url", "rank"]
-            traverse = round_tbl.filter(F.col("rank").isNotNull()).select(*tcols)
-            visited = visited.unionByName(traverse.select("url"))
-            frontier_rows = n_trav
+        traverse = round_tbl.filter(F.col("grank").isNotNull()).select(*fcols)
+        visited = visited.unionByName(
+            round_tbl.filter(F.col("grank") >= discovered).select("url")
+        )
+        frontier_lo = int(total["def_lo"]) if n_def else discovered
+        discovered += n_trav
+        fetched_total += frontier_rows - n_def  # this round's admitted count
+        frontier_rows = n_trav + n_def
 
         wall_ms = int((time.monotonic() - t0) * 1000)
-        if not part_rows:
-            # keep ≥1 lineage row per round so round-level dedup counts
-            # survive all-duplicate rounds (they feed the throughput metric)
-            lineage.append(
-                {
-                    "round": depth,
-                    "partition_id": -1,
-                    "hosts_served": 0,
-                    "urls_fetched": 0,
-                    "urls_deduped": n_dup,
-                    "frontier_delta": 0,
-                    "wall_ms": wall_ms,
-                }
-            )
-        for p, n in part_rows:
-            lineage.append(
-                {
-                    "round": depth,
-                    "partition_id": p,
-                    # the one distinct aggregate is deferred: ONE end-of-
-                    # crawl job backfills hosts_served (_fill_lineage_hosts)
-                    "hosts_served": None,
-                    "urls_fetched": n,
-                    "urls_deduped": n_dup,
-                    "frontier_delta": n_new,
-                    "wall_ms": wall_ms,
-                }
-            )
+        # keep ≥1 lineage row per round so round-level dedup counts survive
+        # all-duplicate rounds (they feed the throughput metric). The one
+        # distinct aggregate is deferred: ONE end-of-crawl job backfills the
+        # None hosts_served (_fill_lineage_hosts).
+        lineage += [
+            {
+                "round": rnd,
+                "partition_id": p,
+                "hosts_served": None if n else 0,
+                "urls_fetched": n,
+                "urls_deduped": n_dup,
+                "frontier_delta": n_new,
+                "wall_ms": wall_ms,
+            }
+            for p, n in part_rows or [(-1, 0)]
+        ]
         res.rounds_run += 1
-
-        if depth < max_depth and frontier_rows == 0:
-            break
+        rnd += 1
 
     # join the background round-table writes (both exits commit a manifest
     # that references them)
     for pw in pending_writes:
         pw.result()
 
-    if stopped_at is not None:
-        # stopCrawl(): commit the exact round boundary so resume=True picks
-        # up here — url_seen + pending frontier + visited + lineage so far,
-        # then the scalar counters in the manifest (atomic commit last)
-        res.stopped = True
-        if store is not None:
-            store.write_table(seen, "url_seen", stopped_at)
-            seen = store.read_table(spark, "url_seen", stopped_at)
-            _fill_lineage_hosts(lineage, seen)
-            store.write_table(traverse, "frontier", stopped_at)
-            store.write_table(visited.select("url"), "visited", stopped_at)
-            store.write_table(
-                spark.createDataFrame(lineage, LINEAGE_SCHEMA), "lineage_ckpt",
-                stopped_at,
-            )
-            m = store.load_manifest() or Manifest()
+    # admit-all rounds are depths, so a completed BFS commits at max_depth;
+    # a stopped or deferring crawl commits at its next round
+    version = rnd if stopped or defers else max_depth
+    if store is not None:
+        _tw = time.monotonic()
+        store.write_table(seen, "url_seen", version)
+        seen = store.read_table(spark, "url_seen", version)
+        _phase(res.timings, "url_seen_write", _tw)
+    # ONE deferred hosts_served job per crawl (store path reads the pinned
+    # url_seen parquet, column-pruned to host_hash + first_depth + pos)
+    _fill_lineage_hosts(lineage, seen, seed_rows)
+    if store is not None:
+        m = store.load_manifest() or Manifest()
+        m.tables["url_seen"] = version
+        if stopped:
+            # stopCrawl(): commit the exact round boundary so resume=True
+            # picks up here — pending frontier, visited set, lineage so far,
+            # the timed clocks and the sidecar, then the scalar counters in
+            # the manifest (atomic commit last)
+            for table, df in (
+                ("frontier", traverse),
+                ("visited", visited.select("url")),
+                ("lineage_ckpt", spark.createDataFrame(lineage, LINEAGE_SCHEMA)),
+                ("host_state", policy.host_state),
+            ):
+                if df is not None:
+                    store.write_table(df, table, rnd)
             if _sf is not None and sidecar is not None:
                 # persist the sidecar so resume loads ~n_buckets filter rows
                 # instead of rebuilding from the full seen table
-                store.write_table(
-                    _resolve_df(sidecar), f"{_sf.kind}_sidecar", stopped_at
-                )
-                m.tables[f"{_sf.kind}_sidecar"] = stopped_at
-            m.committed_round = stopped_at - 1
-            m.tables["url_seen"] = stopped_at
-            m.meta["stopped_next_depth"] = stopped_at
-            m.meta["queue_size"] = queue_size
-            m.meta["frontier_rows"] = frontier_rows
-            m.meta["fetched_est"] = fetched_est
+                store.write_table(_resolve_df(sidecar), f"{_sf.kind}_sidecar", rnd)
+                m.tables[f"{_sf.kind}_sidecar"] = rnd
+            m.committed_round = rnd - 1
+            m.meta["stopped_next_depth"] = rnd
+            m.meta.update(
+                zip(_COUNTERS, (queue_size, frontier_rows, frontier_lo, discovered, fetched_total))
+            )
             m.meta["has_content_rules"] = bool(config.has_content_rules) or resumed_had_rules
-            store.commit(m)
         else:
-            _fill_lineage_hosts(lineage, seen)
-        res.queue = seen.select("url", "pos").orderBy("pos")
-        res.seen = seen
-        res.visited = visited
-        res.lineage = lineage
-        res.urls_enqueued = queue_size
-        return res
-
-    _tw = time.monotonic()
-    if store is not None:
-        store.write_table(seen, "url_seen", max_depth)
-        seen = store.read_table(spark, "url_seen", max_depth)
-        res.timings.append(
-            {"phase": "url_seen_write", "ms": int((time.monotonic() - _tw) * 1000)}
-        )
-        m = store.load_manifest() or Manifest()
-        m.committed_round = max_depth
-        m.tables["url_seen"] = max_depth
-        m.meta.pop("stopped_next_depth", None)  # a completed resume clears the stop marker
-        m.meta["entry_url"] = (
-            entry_url if isinstance(entry_url, str) else f"{n_seeds} seeds"
-        )
-        m.meta["queue_size"] = queue_size
+            m.committed_round = version
+            m.meta.pop("stopped_next_depth", None)  # a completed resume clears the stop marker
+            m.meta["entry_url"] = (
+                entry_url if isinstance(entry_url, str) else f"{n_seeds} seeds"
+            )
+            m.meta["queue_size"] = queue_size
         store.commit(m)
 
-    # ONE deferred hosts_served job per crawl (store path reads the pinned
-    # url_seen parquet, column-pruned to host_hash + first_depth)
-    _fill_lineage_hosts(lineage, seen)
+    res.stopped = stopped
     res.queue = seen.select("url", "pos").orderBy("pos")
     res.seen = seen
     res.visited = visited
     res.lineage = lineage
     res.urls_enqueued = queue_size
-
-    if with_processor:
-        raw_all = None
-        for p in raw_parts:
-            if "_ckey" not in p.columns:  # raw table from a pre-_ckey snapshot
-                p = p.withColumn("_ckey", _content_key())
-            raw_all = p if raw_all is None else raw_all.unionByName(p)
+    # the docs pass runs only at natural completion; a resumed run covers
+    # the whole queue, reusing every persisted per-round raw parse
+    if with_processor and not stopped:
         res.docs = process_queue(
             spark,
             seen,
             pages,
             config,
             crawl_ts=crawl_ts,
+            robots=robots,
             queue_rows=queue_size,
-            raw_docs=raw_all,
-            raw_rows=fetched_est,
-            materialize=_tail_materializer(spark, store, max_depth + 1),
+            raw_docs=reduce(DataFrame.unionByName, raw_parts) if raw_parts else None,
+            raw_rows=fetched_total,
+            materialize=_raw_docs_pin(spark, store, version + 1),
             timings=res.timings,
             has_content_rules=config.has_content_rules or resumed_had_rules,
         )
     return res
 
 
-def _tail_materializer(spark: SparkSession, store, version: int):
-    """Materializer for the docs pass's tail parse (see process_queue): the
-    never-traversed queue tail is parsed once and pinned — store-backed as
-    raw_docs[version] when a SnapshotStore exists (resumable, columnar-pruned
-    re-reads), localCheckpoint otherwise."""
+def run_crawl(
+    spark: SparkSession,
+    pages: DataFrame,
+    entry_url,
+    config: CrawlConfig,
+    store: Optional[SnapshotStore] = None,
+    with_processor: bool = True,
+    seen_filter: Optional[str] = None,
+    crawl_ts: str = "2025-06-01 00:00:00",
+    stop=None,
+    resume: bool = False,
+) -> CrawlResult:
+    """CrawlerService.crawl(entryUrl, waitForCompletion=True) as batch rounds:
+    every pending url is admitted, so round d fetches exactly depth d.
+
+    ``entry_url`` may be a single URL (reference semantics), a seed list
+    (README.md seed-list design), or a seeds DataFrame (url [, seed_id]):
+    seeds occupy queue positions 0..n-1 in list order with first-occurrence
+    dedup, and round 0 traverses all of them. Seeds are enqueued only with
+    the processor (CrawlerService.java:110-116).
+
+    Cancellation (O2 — CrawlerService.stopCrawl()/awaitTermination,
+    CrawlerService.java:134-151): ``stop`` is a zero-arg callable polled
+    between rounds — the batch analogue of cancelling the worker pool, where
+    a "round" is the smallest unit that leaves consistent state. When it
+    returns True the crawl halts, and with a ``store`` the full loop state
+    (url_seen, the pending frontier, the visited set, prior lineage and the
+    scalar counters) is committed so ``resume=True`` on the same store
+    continues from the exact round boundary — seeds/entry must match. A
+    stopped result has ``stopped=True`` and no docs (the docs pass runs only
+    at natural completion; a resumed run covers the whole queue, reusing
+    every previously persisted per-round raw parse).
+    """
+    return _crawl(
+        spark, pages, entry_url, config, _Admission(),
+        enqueue_seeds=with_processor, with_processor=with_processor,
+        robots=None, store=store, seen_filter=seen_filter, crawl_ts=crawl_ts,
+        stop=stop, resume=resume,
+    )
+
+
+def run_polite_crawl(
+    spark: SparkSession,
+    pages: DataFrame,
+    entry_url,
+    config: CrawlConfig,
+    robots: Optional[DataFrame] = None,
+    store: Optional[SnapshotStore] = None,
+    with_processor: bool = True,
+    seen_filter: Optional[str] = None,
+    salt_threshold: Optional[int] = None,
+    n_salts: int = 16,
+    delays: Optional[DataFrame] = None,
+    max_rounds: int = 10_000,
+    crawl_ts: str = "2025-06-01 00:00:00",
+    stop=None,
+    resume: bool = False,
+) -> CrawlResult:
+    """The frontier scheduler with per-host politeness windows and a robots
+    gate — semantics fixed by oracle.crawl_oracle_polite (the reference only
+    *designed* these: README.md:55-57,145-147). Seeds are enqueued, except
+    without the processor in a crawl that sets no cap and no robots: that
+    crawl is run_crawl (CrawlerService.java:110-116).
+
+    Each round admits, per host, the first ``config.per_host_budget`` pending
+    URLs in global discovery order (row_number over host ordered by grank;
+    ``max_concurrent_per_domain`` is one more per-host cap); the rest defer
+    unchanged. ``global_qps`` caps the round's total admissions and
+    ``max_pages`` the job's, both as a prefix cut in discovery order.
+    Robots-blocked URLs consume budget, produce no links, and process as
+    SKIPPED_ROBOTS docs. Hot hosts can be salted (``salt_threshold``) at the
+    documented cost of per-salt-only ordering. With no cap set every pending
+    url is admitted and the crawl runs the BFS plan.
+
+    With a ``delays`` table (host, crawl_delay_ms) the scheduler runs TIMED
+    politeness (admission.timed_admit): per-host ``next_allowed_ts`` virtual
+    clocks carry between rounds (config.politeness_window_ms per round), so a
+    crawl delay longer than one round admits one URL every ceil(d/W) rounds —
+    semantics fixed by oracle.crawl_oracle_polite(delays=...). Mutually
+    exclusive with ``salt_threshold`` (salting reorders within hosts, which
+    would make timed budgets rank-unstable).
+
+    ``stop``/``resume`` work as in run_crawl; the stop commit also holds the
+    deferred rows and the timed clocks.
+    """
+    if delays is not None and salt_threshold is not None:
+        raise ValueError("timed politeness and salted admission are exclusive")
+    policy = _Admission(
+        budget=config.per_host_budget,
+        max_concurrent=config.max_concurrent_per_domain,
+        global_cap=(
+            int(config.global_qps * config.politeness_window_ms / 1000)
+            if config.global_qps is not None
+            else None
+        ),
+        max_pages=config.max_pages,
+        salt_threshold=salt_threshold,
+        n_salts=n_salts,
+        delays=delays,
+        window_ms=config.politeness_window_ms,
+    )
+    return _crawl(
+        spark, pages, entry_url, config, policy,
+        # an unbounded crawl without robots is exactly run_crawl
+        enqueue_seeds=with_processor or policy.defers or robots is not None,
+        with_processor=with_processor,
+        robots=robots, store=store, seen_filter=seen_filter, crawl_ts=crawl_ts,
+        stop=stop, resume=resume, max_rounds=max_rounds,
+    )
+
+
+def _raw_docs_pin(spark: SparkSession, store, version: int):
+    """Materializer for a parse output, so the page is never parsed again:
+    store-backed as raw_docs[version] when a SnapshotStore exists
+    (resumable, columnar-pruned re-reads), localCheckpoint otherwise. Each
+    round pins its parse with it, the docs pass its tail parse (see
+    process_queue)."""
 
     if store is not None:
 
@@ -927,8 +1164,6 @@ def _tail_materializer(spark: SparkSession, store, version: int):
 
 
 def _docs_schema() -> StructType:
-    from pyspark.sql.types import ArrayType, TimestampType
-
     return StructType(
         [
             StructField("id", StringType()),
@@ -952,30 +1187,35 @@ def _docs_schema() -> StructType:
     )
 
 
+def _contentless_docs(df: DataFrame, ts, status: Column, **evidence: Column) -> DataFrame:
+    """Docs rows with no parsed content (ERROR_FETCH, ERROR_PARSE, SKIPPED_*),
+    in the docs schema: every content field null, content_length and the
+    fetch duration 0, the hash of no segments. ``evidence`` sets the fetch
+    fields a status keeps (http_status, fetch_duration_ms, content_type,
+    crawl_depth)."""
+    cols = {
+        "url": F.col("url"),
+        "domain": parse_host(F.col("url")),
+        "crawl_ts": ts,
+        "status": status,
+        "fetch_duration_ms": F.lit(0),
+        "content_length": F.lit(0),
+        "hash": content_hash_segments(F.col("url"), F.lit(None).cast("array<string>")),
+        "pos": F.col("pos"),
+        **evidence,
+    }
+    return df.select(
+        *(
+            cols.get(f.name, F.lit(None)).cast(f.dataType).alias(f.name)
+            for f in _docs_schema().fields
+        )
+    )
+
+
 def _robots_docs(skipped_robots: DataFrame, ts) -> DataFrame:
     """SKIPPED_ROBOTS rows (CrawlStatus.java:10-11): never fetched or parsed,
     so every content field is the ERROR_FETCH shape with its own status."""
-    return skipped_robots.select(
-        F.lit(None).cast("string").alias("id"),
-        F.col("url"),
-        parse_host(F.col("url")).alias("domain"),
-        ts.alias("crawl_ts"),
-        F.lit("SKIPPED_ROBOTS").alias("status"),
-        F.lit(None).cast("int").alias("http_status"),
-        F.lit(0).cast("long").alias("fetch_duration_ms"),
-        F.lit(None).cast("int").alias("crawl_depth"),
-        F.lit(None).cast("string").alias("title"),
-        F.lit(None).cast("string").alias("description"),
-        F.lit(None).cast("array<string>").alias("contents"),
-        F.lit(0).cast("long").alias("content_length"),
-        F.lit(None).cast("string").alias("content_type"),
-        F.lit(None).cast("string").alias("language"),
-        F.lit(None).cast("array<string>").alias("out_links"),
-        content_hash_segments(
-            F.col("url"), F.lit(None).cast("array<string>")
-        ).alias("hash"),
-        F.col("pos"),
-    )
+    return _contentless_docs(skipped_robots, ts, F.lit("SKIPPED_ROBOTS"))
 
 
 def _gate_docs(skipped: DataFrame, ts) -> DataFrame:
@@ -999,26 +1239,9 @@ def _gate_docs(skipped: DataFrame, ts) -> DataFrame:
         if "content_type" in skipped.columns
         else F.lit("text/html")
     )
-    return skipped.select(
-        F.lit(None).cast("string").alias("id"),
-        F.col("url"),
-        parse_host(F.col("url")).alias("domain"),
-        ts.alias("crawl_ts"),
-        F.col("skip_status").alias("status"),
-        http.alias("http_status"),
-        fms.alias("fetch_duration_ms"),
-        F.lit(None).cast("int").alias("crawl_depth"),
-        F.lit(None).cast("string").alias("title"),
-        F.lit(None).cast("string").alias("description"),
-        F.lit(None).cast("array<string>").alias("contents"),
-        F.lit(0).cast("long").alias("content_length"),
-        ctype.cast("string").alias("content_type"),
-        F.lit(None).cast("string").alias("language"),
-        F.lit(None).cast("array<string>").alias("out_links"),
-        content_hash_segments(
-            F.col("url"), F.lit(None).cast("array<string>")
-        ).alias("hash"),
-        F.col("pos"),
+    return _contentless_docs(
+        skipped, ts, F.col("skip_status"),
+        http_status=http, fetch_duration_ms=fms, content_type=ctype,
     )
 
 
@@ -1051,40 +1274,18 @@ def _fused_docs(
     else:
         src = q.join(pages, "url", "left")
 
-    if "http_status" not in src.columns:
-        src = src.withColumn("http_status", F.lit(200))
-    if "fetch_ms" not in src.columns:
-        src = src.withColumn("fetch_ms", F.lit(0).cast("long"))
-    if "lang" not in src.columns:
-        src = src.withColumn("lang", F.lit(None).cast("string"))
-    if "warc_ts" not in src.columns:
-        src = src.withColumn("warc_ts", F.lit(None).cast("timestamp"))
+    src = _with_fetch_defaults(src)
 
     # content gate (README.md:60,212): disallowed-type / oversize fetches
     # exit to SKIPPED_* rows HERE — below the scan, above the Python parse
     # stage — so the kernel only ever decodes admitted bytes. Default-off
     # (both knobs None) adds nothing to the plan.
-    from .operators.contentgate import split_gated
-
     src, gate_skipped = split_gated(
         src, config.allowed_content_types, config.max_content_bytes
     )
 
-    extract_fn, _ = make_extract_pages(
-        config,
-        carry_cols=["pos", "lang", "warc_ts", "http_status", "fetch_ms", "fetchok"],
-    )
-    from pyspark.sql.types import TimestampType
-
-    out_schema = extract_schema_with(
-        [
-            StructField("pos", LongType()),
-            StructField("lang", StringType()),
-            StructField("warc_ts", TimestampType()),
-            StructField("http_status", IntegerType()),
-            StructField("fetch_ms", LongType()),
-            StructField("fetchok", BooleanType()),
-        ]
+    extract_fn, out_schema = _parse_fn(
+        config, _DOC_CARRY + [StructField("fetchok", BooleanType())]
     )
     ex = _balance_for_parse(
         spark,
@@ -1221,8 +1422,6 @@ def process_queue(
     q = queue.select("url", "pos")
     skipped_robots = None
     if robots is not None:
-        from .operators.admission import apply_robots
-
         q, blocked = apply_robots(q, robots)
         skipped_robots = blocked
 
@@ -1231,7 +1430,7 @@ def process_queue(
     ts = F.to_timestamp(F.lit(crawl_ts))
 
     if raw_docs is not None:
-        # single-parse reuse (run_crawl raw capture): queue urls already
+        # single-parse reuse (the rounds' raw capture): queue urls already
         # parsed during the crawl rounds skip the fetch+extract path below;
         # only the never-traversed tail (children harvested at maxDepth,
         # plus fetch-missing urls) is joined against pages and parsed here
@@ -1268,38 +1467,15 @@ def process_queue(
         fetched = joined.filter(F.col("html").isNotNull())
         missing = joined.filter(F.col("html").isNull())
 
-    # P2 fidelity columns: thread through when present, else defaults
-    if "http_status" not in fetched.columns:
-        fetched = fetched.withColumn("http_status", F.lit(200))
-    if "fetch_ms" not in fetched.columns:
-        fetched = fetched.withColumn("fetch_ms", F.lit(0).cast("long"))
-    if "lang" not in fetched.columns:
-        fetched = fetched.withColumn("lang", F.lit(None).cast("string"))
-    if "warc_ts" not in fetched.columns:
-        fetched = fetched.withColumn("warc_ts", F.lit(None).cast("timestamp"))
+    fetched = _with_fetch_defaults(fetched)
 
     # content gate (README.md:60,212): skip disallowed-type / oversize rows
     # before the Python parse stage; default-off adds nothing to the plan
-    from .operators.contentgate import split_gated
-
     fetched, gate_skipped = split_gated(
         fetched, config.allowed_content_types, config.max_content_bytes
     )
 
-    extract_fn, _ = make_extract_pages(
-        config, carry_cols=["pos", "lang", "warc_ts", "http_status", "fetch_ms"]
-    )
-    from pyspark.sql.types import TimestampType
-
-    out_schema = extract_schema_with(
-        [
-            StructField("pos", LongType()),
-            StructField("lang", StringType()),
-            StructField("warc_ts", TimestampType()),
-            StructField("http_status", IntegerType()),
-            StructField("fetch_ms", LongType()),
-        ]
-    )
+    extract_fn, out_schema = _parse_fn(config, _DOC_CARRY)
     ex = _balance_for_parse(
         spark,
         fetched.select(
@@ -1327,9 +1503,7 @@ def process_queue(
         _tt = time.monotonic()
         ex = materialize(ex)
         if timings is not None:
-            timings.append(
-                {"phase": "docs_tail_mat", "ms": int((time.monotonic() - _tt) * 1000)}
-            )
+            _phase(timings, "docs_tail_mat", _tt)
     if raw_docs is not None:
         rd = raw_docs.select(
             *excols[:-1],
@@ -1338,12 +1512,8 @@ def process_queue(
             F.greatest(
                 F.lit(0).cast("long"), F.col("fetch_ms").cast("long")
             ).alias("fetch_ms"),
-            # raw tables written by current run_crawl carry _ckey already;
-            # tables from an older snapshot (resume) fall back to computing it
-            *(["_ckey"] if "_ckey" in raw_docs.columns else []),
+            "_ckey",
         )
-        if "_ckey" not in rd.columns:
-            rd = rd.withColumn("_ckey", _content_key())
         ex = ex.unionByName(rd)
 
     parsed = ex.filter(~F.col("parse_error"))
@@ -1366,9 +1536,7 @@ def process_queue(
         )
         n_losers = losers.count()
         if timings is not None:
-            timings.append(
-                {"phase": "docs_losers", "ms": int((time.monotonic() - _tl) * 1000)}
-            )
+            _phase(timings, "docs_losers", _tl)
         keyed = parsed.join(
             _frontier_side(losers.withColumn("_isdup", F.lit(1)), n_losers),
             "url",
@@ -1411,515 +1579,20 @@ def process_queue(
 
     # ERROR_PARSE rows (WebPageProcessor.java:216-227): keep http_status and
     # content_type from the fetch; crawl_depth = maxDepth is the :224 quirk
-    parse_err_docs = ex.filter(F.col("parse_error")).select(
-        F.lit(None).cast("string").alias("id"),
-        F.col("url"),
-        parse_host(F.col("url")).alias("domain"),
-        ts.alias("crawl_ts"),
-        F.lit("ERROR_PARSE").alias("status"),
-        F.col("http_status"),
-        F.col("fetch_ms").alias("fetch_duration_ms"),
-        F.lit(config.max_depth).cast("int").alias("crawl_depth"),
-        F.lit(None).cast("string").alias("title"),
-        F.lit(None).cast("string").alias("description"),
-        F.lit(None).cast("array<string>").alias("contents"),
-        F.lit(0).cast("long").alias("content_length"),
-        F.lit("text/html").alias("content_type"),
-        F.lit(None).cast("string").alias("language"),
-        F.lit(None).cast("array<string>").alias("out_links"),
-        content_hash_segments(F.col("url"), F.lit(None).cast("array<string>")).alias("hash"),
-        F.col("pos"),
+    parse_err_docs = _contentless_docs(
+        ex.filter(F.col("parse_error")), ts, F.lit("ERROR_PARSE"),
+        http_status=F.col("http_status"),
+        fetch_duration_ms=F.col("fetch_ms"),
+        crawl_depth=F.lit(config.max_depth),
+        content_type=F.lit("text/html"),
     )
-
-    err_docs = missing.select(
-        F.lit(None).cast("string").alias("id"),
-        F.col("url"),
-        parse_host(F.col("url")).alias("domain"),
-        ts.alias("crawl_ts"),
-        F.lit("ERROR_FETCH").alias("status"),
-        F.lit(None).cast("int").alias("http_status"),
-        F.lit(0).cast("long").alias("fetch_duration_ms"),
-        F.lit(None).cast("int").alias("crawl_depth"),
-        F.lit(None).cast("string").alias("title"),
-        F.lit(None).cast("string").alias("description"),
-        F.lit(None).cast("array<string>").alias("contents"),
-        F.lit(0).cast("long").alias("content_length"),
-        F.lit(None).cast("string").alias("content_type"),
-        F.lit(None).cast("string").alias("language"),
-        F.lit(None).cast("array<string>").alias("out_links"),
-        content_hash_segments(F.col("url"), F.lit(None).cast("array<string>")).alias("hash"),
-        F.col("pos"),
-    )
+    err_docs = _contentless_docs(missing, ts, F.lit("ERROR_FETCH"))
 
     cols = [f.name for f in _docs_schema().fields]
-    out = (
-        ok_docs.select(*cols)
-        .unionByName(parse_err_docs.select(*cols))
-        .unionByName(err_docs.select(*cols))
-    )
+    out = ok_docs.select(*cols).unionByName(parse_err_docs).unionByName(err_docs)
     if gate_skipped is not None:
-        out = out.unionByName(_gate_docs(gate_skipped, ts).select(*cols))
+        out = out.unionByName(_gate_docs(gate_skipped, ts))
     if skipped_robots is not None:
-        out = out.unionByName(_robots_docs(skipped_robots, ts).select(*cols))
+        out = out.unionByName(_robots_docs(skipped_robots, ts))
     return out
 
-
-# ---------------------------------------------------------------------------
-# Politeness-windowed crawl (per-host admission + robots; north_rule core)
-# ---------------------------------------------------------------------------
-
-def run_polite_crawl(
-    spark: SparkSession,
-    pages: DataFrame,
-    entry_url,
-    config: CrawlConfig,
-    robots: Optional[DataFrame] = None,
-    store: Optional[SnapshotStore] = None,
-    with_processor: bool = True,
-    use_bloom: bool = False,
-    seen_filter: Optional[str] = None,
-    salt_threshold: Optional[int] = None,
-    n_salts: int = 16,
-    delays: Optional[DataFrame] = None,
-    max_rounds: int = 10_000,
-    crawl_ts: str = "2025-06-01 00:00:00",
-) -> CrawlResult:
-    """The frontier scheduler with per-host politeness windows and a robots
-    gate — semantics fixed by oracle.crawl_oracle_polite (the reference only
-    *designed* these: README.md:55-57,145-147).
-
-    Each round admits, per host, the first ``config.per_host_budget`` pending
-    URLs in global discovery order (row_number over host ordered by grank);
-    the rest defer unchanged. Robots-blocked URLs consume budget, produce no
-    links, and process as SKIPPED_ROBOTS docs. Hot hosts can be salted
-    (``salt_threshold``) at the documented cost of per-salt-only ordering.
-
-    Traversal candidates take the first DEPTH-ELIGIBLE harvest (child_depth
-    <= maxDepth), matching the oracle's per-event push rule even when a
-    deferred shallow parent and a max-depth parent harvest the same URL in
-    one round; the enqueue position still follows the global first harvest.
-    Both first-occurrences come out of ONE url-grouped aggregate (min over a
-    plain struct + min over a depth-masked struct).
-
-    With a ``delays`` table (host, crawl_delay_ms) the scheduler runs TIMED
-    politeness (admission.timed_admit): per-host ``next_allowed_ts`` virtual
-    clocks carry between rounds (config.politeness_window_ms per round), so a
-    crawl delay longer than one round admits one URL every ceil(d/W) rounds —
-    semantics fixed by oracle.crawl_oracle_polite(delays=...). Mutually
-    exclusive with ``salt_threshold`` (salting reorders within hosts, which
-    would make timed budgets rank-unstable).
-    """
-    from .operators.admission import (
-        admit,
-        apply_robots,
-        global_cap_admit,
-        salted_admit,
-        timed_admit,
-    )
-
-    if delays is not None and salt_threshold is not None:
-        raise ValueError("timed politeness and salted admission are exclusive")
-
-    # global politeness caps (README.md:55-57): globalQps → per-round global
-    # admission budget; maxConcurrentPerDomain → extra per-host-per-round cap
-    max_conc = config.max_concurrent_per_domain
-    global_cap = (
-        int(config.global_qps * config.politeness_window_ms / 1000)
-        if config.global_qps is not None
-        else None
-    )
-    # maxPages (README.md:50,:144): total admitted-fetch budget per job; the
-    # in-round remainder rides the same global prefix-cut as globalQps
-    max_pages = config.max_pages
-    fetched_total = 0
-    if max_pages is not None and max_pages <= 0:
-        max_rounds = 0  # zero fetch budget: seeds stay discovered, no rounds
-
-    _seed_marks: List[dict] = []
-    traverse, n_seeds = _seed_frontier(
-        spark, entry_url, ("grank", "depth"), timings=_seed_marks
-    )
-    if traverse is None:
-        return _empty_result(spark, with_processor=True)
-    res = CrawlResult(queue=None, seen=None, visited=None, docs=None)  # type: ignore[arg-type]
-    res.timings.extend(_seed_marks)
-
-    max_depth = max(0, config.max_depth)
-    budget = config.per_host_budget
-    nb = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    visited = traverse.select("url")
-    seen = traverse.select(
-        "url",
-        F.col("grank").alias("pos"),
-        host_hash_col(parse_host(F.col("url"))).alias("host_hash"),
-        F.lit(0).alias("first_depth"),
-    )
-    queue_size = n_seeds
-    discovered = n_seeds
-
-    _sf = seen_filter_ops(seen_filter or "bloom") if (seen_filter or use_bloom) else None
-    sidecar = None
-    if _sf is not None:
-        sidecar = _sf.build(seen).localCheckpoint(eager=True)
-
-    extract_fn, _ = make_extract_pages(config, carry_cols=["grank", "depth"])
-    extract_out = extract_schema_with(
-        [StructField("grank", LongType()), StructField("depth", IntegerType())]
-    )
-
-    # content gate for the round parse (mirrors run_crawl): gated fetches
-    # consume their admission slot but harvest nothing; process_queue below
-    # emits their SKIPPED_* docs rows
-    from .operators.contentgate import skip_status_col
-
-    gate_skip = skip_status_col(
-        config.allowed_content_types,
-        config.max_content_bytes,
-        content_type_col="content_type" if "content_type" in pages.columns else None,
-    )
-    fetch_cols = ["url", "html"]
-    if gate_skip is not None and "content_type" in pages.columns:
-        fetch_cols.append("content_type")
-
-    lineage: List[dict] = []
-    # background round-table durability writes; joined before the manifest
-    # commit (same contract as run_crawl)
-    pending_writes: List[_AsyncDF] = []
-    frontier_rows = n_seeds
-
-    host_state = None
-    if delays is not None:
-        host_state = spark.createDataFrame(
-            [], "host string, next_allowed_ts long"
-        ).localCheckpoint(eager=True)
-
-    for rnd in range(max_rounds):
-        t0 = time.monotonic()
-        round_frontier = frontier_rows  # |traverse| before this round mutates it
-        eff_cap = global_cap
-        if max_pages is not None:
-            rem = max(0, max_pages - fetched_total)
-            eff_cap = rem if eff_cap is None else min(eff_cap, rem)
-        tr = traverse.withColumn("host", parse_host(F.col("url")))
-        if delays is not None:
-            admitted, deferred, new_state = timed_admit(
-                tr, budget, delays, host_state,
-                window_ms=config.politeness_window_ms, rnd=rnd,
-                order_cols=("grank",), host_col="host",
-                max_concurrent=max_conc, global_cap=eff_cap,
-            )
-            # tiny table (one row per host ever served); eager so the round's
-            # clock advance is pinned before the frontier mutates
-            host_state = new_state.localCheckpoint(eager=True)
-        elif salt_threshold is not None:
-            from .operators.admission import _min_cap
-
-            # max_concurrent is just another per-host cap: min it into the
-            # budget BEFORE the per-salt split (per-salt enforcement of a
-            # cross-salt host cap would defeat the salting)
-            admitted, deferred = salted_admit(
-                tr.withColumn("rank", F.col("grank")), _min_cap(budget, max_conc),
-                order_cols=("grank",), host_col="host",
-                salt_threshold=salt_threshold, n_salts=n_salts,
-            )
-            admitted = admitted.drop("rank")
-            deferred = deferred.drop("rank")
-            admitted, deferred = global_cap_admit(
-                admitted, deferred, eff_cap, order_cols=("grank",)
-            )
-        else:
-            admitted, deferred = admit(
-                tr, budget, order_cols=("grank",), host_col="host",
-                max_concurrent=max_conc,
-            )
-            admitted, deferred = global_cap_admit(
-                admitted, deferred, eff_cap, order_cols=("grank",)
-            )
-        if robots is not None:
-            allowed, _blocked = apply_robots(admitted, robots)
-        else:
-            allowed = admitted
-        allowed = allowed.drop("host")
-        deferred = deferred.drop("host")
-
-        allowed_side = _frontier_side(allowed, frontier_rows)
-        fetched = pages.select(*fetch_cols).join(allowed_side, "url", "inner")
-        if gate_skip is not None:
-            fetched = fetched.filter(gate_skip.isNull()).drop("content_type")
-        fetched = _balance_for_parse(spark, fetched, frontier_rows)
-        extracted = fetched.mapInPandas(extract_fn, extract_out)
-
-        links = extracted.select(
-            F.col("grank").alias("parent_rank"),
-            (F.col("depth") + 1).alias("child_depth"),
-            F.explode("links").alias("link"),
-        ).select(
-            "parent_rank",
-            "child_depth",
-            F.col("link.pos").alias("link_pos"),
-            F.col("link.href").alias("url"),
-        )
-        accepted = links.filter(
-            accepted_by_filters(
-                F.col("url"), config.include_url_patterns, config.exclude_url_patterns
-            )
-        )
-        # one url-grouped pass, two first-occurrences: global (enqueue pos)
-        # and depth-eligible (traversal push) — min skips the masked nulls
-        packed = accepted.groupBy("url").agg(
-            F.min(F.struct("parent_rank", "link_pos", "child_depth")).alias("_o"),
-            F.min(
-                F.when(
-                    F.col("child_depth") <= max_depth,
-                    F.struct("parent_rank", "link_pos", "child_depth"),
-                )
-            ).alias("_oe"),
-        )
-        first = packed.select(
-            "url",
-            F.col("_o.parent_rank").alias("parent_rank"),
-            F.col("_o.link_pos").alias("link_pos"),
-            F.col("_o.child_depth").alias("child_depth"),
-            F.col("_oe.parent_rank").alias("e_parent_rank"),
-            F.col("_oe.link_pos").alias("e_link_pos"),
-            F.col("_oe.child_depth").alias("e_child_depth"),
-        )
-        round_caches: List[DataFrame] = []
-        # join the previous round's background sidecar checkpoint here — it
-        # has been overlapping with this round's parse job up to this point
-        sidecar = _resolve_df(sidecar) if sidecar is not None else None
-        flagged = flag_seen(
-            first, seen, sidecar=sidecar, cache_registry=round_caches,
-            prefilter_fn=_sf.prefilter if _sf is not None else None,
-        )
-        vm = visited.select("url").withColumn("_v", F.lit(1))
-        flagged = (
-            flagged.join(vm, "url", "left")
-            .withColumn(
-                "_ntrav",
-                F.when(
-                    F.col("e_parent_rank").isNotNull() & F.col("_v").isNull(),
-                    F.lit(0),
-                ).otherwise(F.lit(1)),
-            )
-            .drop("_v")
-        )
-        b = (
-            flagged.withColumn("host_hash", host_hash_col(parse_host(F.col("url"))))
-            .withColumn("_bkt", _bucket_expr(F.col("parent_rank"), discovered, nb))
-            .withColumn(
-                "_bkte", _bucket_expr(F.col("e_parent_rank"), discovered, nb)
-            )
-            .withColumn(
-                "_part",
-                F.pmod(F.col("host_hash"), F.lit(N_LINEAGE_PARTS)).cast("int"),
-            )
-        )
-
-        # ---- job 1 (the round's ONE heavy non-parse job): evaluate the
-        # harvest chain once, with bucket-LOCAL running sums, straight into
-        # the pinned round table. Deferred frontier rows ride along (they
-        # must be pinned too — they seed the next round's admission and would
-        # otherwise recompute the whole admission lineage every round) with
-        # null stat flags. Replaces the old persist(b) + groupingSets over
-        # the live chain + second write pass + count() — two driver barriers
-        # per round instead of four.
-        _tm = time.monotonic()
-        w_o = Window.partitionBy("_bkt").orderBy("parent_rank", "link_pos").rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-        w_e = Window.partitionBy("_bkte").orderBy(
-            "e_parent_rank", "e_link_pos"
-        ).rowsBetween(Window.unboundedPreceding, 0)
-        b_local = b.select(
-            "url",
-            "host_hash",
-            "_bkt",
-            "_bkte",
-            "_part",
-            "_dup",
-            "_ntrav",
-            F.col("child_depth").cast("int").alias("first_depth"),
-            F.col("e_child_depth").cast("int").alias("depth"),
-            F.lit(None).cast("long").alias("_dgrank"),
-            _running("_dup", w_o).alias("_lpos"),
-            _running("_ntrav", w_e).alias("_lgrank"),
-        )
-        deferred_local = deferred.select(
-            "url",
-            F.lit(None).cast("long").alias("host_hash"),
-            F.lit(None).cast("int").alias("_bkt"),
-            F.lit(None).cast("int").alias("_bkte"),
-            F.lit(None).cast("int").alias("_part"),
-            F.lit(None).cast("int").alias("_dup"),
-            F.lit(None).cast("int").alias("_ntrav"),
-            F.lit(None).cast("int").alias("first_depth"),
-            F.col("depth").cast("int").alias("depth"),
-            F.col("grank").cast("long").alias("_dgrank"),
-            F.lit(None).cast("long").alias("_lpos"),
-            F.lit(None).cast("long").alias("_lgrank"),
-        )
-        round_local = b_local.unionByName(deferred_local)
-        # pin in-memory; the durability parquet write rides a background
-        # thread (nothing in this crawl reads it back — resume/inspection
-        # only), joined before the manifest commit below (mirrors run_crawl)
-        round_local = round_local.localCheckpoint(eager=True)
-        if store is not None:
-            pending_writes.append(
-                _AsyncDF(
-                    lambda df=round_local, r=rnd: (
-                        store.write_table(df, "round", r),
-                        df,
-                    )[1]
-                )
-            )
-        for c in round_caches:  # release the round's bloom prefilter cache
-            c.unpersist()
-
-        # ---- job 2 (tiny): all round stats in one collect over the pinned
-        # slim table (gid: {_bkt}=3, {_bkte}=5, {_part}=6, grand total=7 —
-        # the grand total also counts the deferred rows, so loop termination
-        # no longer needs its own count() action)
-        stats = (
-            round_local.groupingSets(
-                [["_bkt"], ["_bkte"], ["_part"], []], "_bkt", "_bkte", "_part"
-            )
-            .agg(
-                F.sum(1 - F.col("_dup")).alias("n_new"),
-                F.sum("_dup").alias("n_dup"),
-                F.sum(1 - F.col("_ntrav")).alias("n_trav"),
-                F.count_distinct(
-                    F.when(F.col("_dup") == 0, F.col("host_hash"))
-                ).alias("hosts"),
-                F.count(F.when(F.col("_dup").isNull(), 1)).alias("n_def"),
-                F.grouping_id().alias("_gid"),
-            )
-            .collect()
-        )
-        bkt_rows = [r for r in stats if r["_gid"] == 3 and r["_bkt"] is not None]
-        bkte_rows = [r for r in stats if r["_gid"] == 5 and r["_bkte"] is not None]
-        part_rows = [r for r in stats if r["_gid"] == 6 and r["n_new"]]
-        n_new = sum(r["n_new"] for r in bkt_rows)
-        n_dup = sum(r["n_dup"] for r in bkt_rows)
-        n_trav = sum(r["n_trav"] for r in bkte_rows)
-        n_def = next((r["n_def"] for r in stats if r["_gid"] == 7), 0)
-
-        # global pos/grank = local running sum + driver prefix-sum offset, a
-        # pure projection over the pinned table (no further job); deferred
-        # rows keep their existing grank
-        pos_off, _ = _offset_map_expr(
-            "_bkt", {r["_bkt"]: r["n_new"] for r in bkt_rows}, queue_size
-        )
-        grank_off, _ = _offset_map_expr(
-            "_bkte", {r["_bkte"]: r["n_trav"] for r in bkte_rows}, discovered
-        )
-        round_tbl = (
-            round_local.filter(
-                (F.col("_dup") == 0)
-                | (F.col("_ntrav") == 0)
-                | F.col("_dup").isNull()
-            )
-            .withColumn(
-                "pos",
-                F.when(
-                    F.col("_dup") == 0, (F.col("_lpos") - 1 + pos_off).cast("long")
-                ),
-            )
-            .withColumn(
-                "grank",
-                F.when(
-                    F.col("_ntrav") == 0,
-                    (F.col("_lgrank") - 1 + grank_off).cast("long"),
-                ).otherwise(F.col("_dgrank")),
-            )
-            .select("url", "host_hash", "pos", "grank", "first_depth", "depth")
-        )
-
-        new_seen = round_tbl.filter(F.col("pos").isNotNull()).select(
-            "url", "pos", "host_hash", "first_depth"
-        )
-        seen = seen.unionByName(new_seen)
-        queue_size += n_new
-        if _sf is not None:
-            # delta maintenance + checkpoint on a BACKGROUND thread; the next
-            # round joins it right before flag_seen (overlaps the parse job)
-            merged = _sf.maintain(sidecar, new_seen)
-            sidecar = _AsyncDF(lambda m=merged: m.localCheckpoint(eager=True))
-
-        traverse_next = round_tbl.filter(F.col("grank").isNotNull()).select(
-            "url", "grank", "depth"
-        )
-        new_children = round_tbl.filter(
-            F.col("grank").isNotNull() & (F.col("grank") >= discovered)
-        )
-        visited = visited.unionByName(new_children.select("url"))
-        discovered += n_trav
-        # deferred + new children, straight from the stats collect: drives
-        # both loop termination and the next broadcast decision
-        n_next_total = n_trav + n_def
-        frontier_rows = n_next_total
-
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        if not part_rows:
-            lineage.append(
-                {
-                    "round": rnd,
-                    "partition_id": -1,
-                    "hosts_served": 0,
-                    "urls_fetched": 0,
-                    "urls_deduped": n_dup,
-                    "frontier_delta": 0,
-                    "wall_ms": wall_ms,
-                }
-            )
-        for r in part_rows:
-            lineage.append(
-                {
-                    "round": rnd,
-                    "partition_id": r["_part"],
-                    "hosts_served": r["hosts"],
-                    "urls_fetched": r["n_new"],
-                    "urls_deduped": n_dup,
-                    "frontier_delta": n_new,
-                    "wall_ms": wall_ms,
-                }
-            )
-        res.rounds_run += 1
-        fetched_total += round_frontier - n_def  # this round's admitted count
-        if n_next_total == 0:
-            break
-        if max_pages is not None and fetched_total >= max_pages:
-            break  # fetch budget exhausted; discovery state stays committed
-        traverse = traverse_next
-
-    for pw in pending_writes:  # a manifest must not reference unfinished writes
-        pw.result()
-
-    if store is not None:
-        store.write_table(seen, "url_seen", res.rounds_run)
-        seen = store.read_table(spark, "url_seen", res.rounds_run)
-        m = store.load_manifest() or Manifest()
-        m.committed_round = res.rounds_run
-        m.tables["url_seen"] = res.rounds_run
-        m.meta["entry_url"] = (
-            entry_url if isinstance(entry_url, str) else f"{n_seeds} seeds"
-        )
-        m.meta["queue_size"] = queue_size
-        store.commit(m)
-
-    res.queue = seen.select("url", "pos").orderBy("pos")
-    res.seen = seen
-    res.visited = visited
-    res.lineage = lineage
-    res.urls_enqueued = queue_size
-    if with_processor:
-        res.docs = process_queue(
-            spark, seen, pages, config, crawl_ts=crawl_ts, robots=robots,
-            queue_rows=queue_size,
-            materialize=_tail_materializer(spark, store, res.rounds_run + 1)
-            if store is not None
-            else None,
-            timings=res.timings,
-        )
-    return res
