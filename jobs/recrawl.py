@@ -146,6 +146,11 @@ def run(spark, pages_path: str, state_dir: str, now: str,
             # now-smaller url_seen (correct, at rebuild cost)
             del m.tables["bloom_sidecar"]
             sidecar_action = "bloom_dropped_for_rebuild"
+            print(
+                "warning: bloom sidecar dropped; the resumed crawl rebuilds it "
+                "from url_seen at O(|seen|) cost",
+                file=sys.stderr,
+            )
     store.commit(m)
 
     return {
@@ -171,7 +176,9 @@ def main() -> int:
     ap.add_argument("--horizon-hours", type=float, default=24.0,
                     help="evict urls scheduled within this window")
     ap.add_argument("--evict", action="store_true",
-                    help="evict due urls from url_seen + cuckoo sidecar")
+                    help="evict due urls from url_seen; a cuckoo sidecar "
+                    "deletes them in place, a bloom sidecar is dropped and "
+                    "rebuilt on resume at O(|seen|) cost")
     args = ap.parse_args()
 
     from webcrawler_spark.session import get_spark

@@ -75,7 +75,7 @@ def _gated_corpus_bits():
 
 @pytest.mark.slow
 def test_gated_crawl_matches_sequential_oracle_fused(spark):
-    """The FUSED docs path (no content rules) with the gate on: statuses and
+    """The rules-less docs pass (no losers job) with the gate on: statuses and
     queue order must match the sequential oracle with the same gate."""
     from webcrawler_spark.config import CrawlConfig
     from webcrawler_spark.oracle import crawl_oracle

@@ -149,6 +149,40 @@ def test_search_snippets_plan_has_no_exchange(spark):
     assert "CartesianProduct" not in p
 
 
+@pytest.mark.parametrize("queue_rows", [None, 3], ids=["left_join", "broadcast"])
+@pytest.mark.parametrize("rules", [False, True], ids=["rules_less", "content_rules"])
+def test_docs_plan_has_one_parse_and_no_window(spark, rules, queue_rows):
+    """process_queue assembles docs in one plan: one MapInPandas parse stage
+    feeds one conditional projection, on either fetch side. DUPLICATE losers
+    come from a slim eager job and join back as a checkpointed table, so no
+    Window over the full parse payload is left in the docs plan."""
+    import re
+
+    from webcrawler_spark.config import CrawlConfig
+    from webcrawler_spark.rounds import process_queue
+
+    pages = spark.createDataFrame(
+        [(u, bytearray(b"<p>same words</p>")) for u in ("https://a.com/x", "https://a.com/y")],
+        "url string, html binary",
+    )
+    queue = spark.createDataFrame(
+        [("https://a.com/x", 0), ("https://a.com/y", 1), ("https://a.com/gone", 2)],
+        "url string, pos long",
+    )
+    rules_cfg = {"minCharacter": 0, "tagName": "p"} if rules else None
+    cfg = CrawlConfig(max_depth=1, content_rules=rules_cfg)
+    docs = process_queue(spark, queue, pages, cfg, queue_rows=queue_rows)
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    plan = docs._jdf.queryExecution().explainString(mode)
+    ops = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
+    assert ops.count("MapInPandas") == 1, ops
+    assert not [op for op in ops if op.startswith("Window")], ops
+    exp = {"OK", "ERROR_FETCH"} | ({"DUPLICATE"} if rules else set())
+    assert {r["status"] for r in docs.collect()} == exp
+
+
 def test_content_gate_filter_sits_below_the_parse_stage(spark):
     """The content gate's whole point at 100 TB: disallowed-type / oversize
     rows must be filtered out BEFORE rows cross into the Python parse stage

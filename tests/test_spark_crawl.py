@@ -146,13 +146,13 @@ def test_docs_match_oracle(spark, pages_df, small_corpus):
 
 @pytest.mark.slow
 def test_fused_docs_rules_less_matches_oracle(spark, pages_df, small_corpus):
-    """Rules-less crawls take the fused single-pass docs plan (_fused_docs:
-    one left join, fetch-missing rows riding the kernel as null-html rows,
-    one conditional projection, no tail pin). Every docs column must still
+    """Rules-less crawls take process_queue's plan without a losers job or
+    tail pin (one left join, fetch-missing rows riding the kernel as
+    null-html rows, one conditional projection). Every docs column must still
     match the sequential oracle — including ERROR_FETCH rows (null
     http_status/content_type), ERROR_PARSE rows (crawl_depth=maxDepth quirk)
     and OK rows whose contents are empty by reference semantics."""
-    cfg = CrawlConfig(max_depth=2)  # no content rules anywhere -> fused
+    cfg = CrawlConfig(max_depth=2)  # no content rules anywhere -> no losers job
     oracle = crawl_oracle(
         _corpus_dict(small_corpus), small_corpus.seeds, cfg,
         with_processor=True, meta=small_corpus.meta,
@@ -557,6 +557,26 @@ def test_fetch_duration_clamped_nonnegative(spark):
     docs = {r["url"]: r for r in process_queue(spark, queue, pages, cfg).collect()}
     assert docs["https://h.example.com/a"]["fetch_duration_ms"] == 0
     assert docs["https://h.example.com/b"]["fetch_duration_ms"] == 456
+
+
+def test_docs_pass_same_rows_pinned_or_lazy(spark, pages_df, small_corpus):
+    """process_queue returns the same docs whether its tail parse is pinned
+    (``materialize``, as the crawl calls it) or left lazy (a direct call),
+    on a queue that yields DUPLICATE, ERROR_FETCH and ERROR_PARSE rows."""
+    from webcrawler_spark.rounds import _raw_docs_pin, process_queue
+
+    urls = sorted(small_corpus.pages) + ["https://missing.example.com/nowhere"]
+    queue = spark.createDataFrame(list(zip(urls, range(len(urls)))), "url string, pos long")
+    cfg = CrawlConfig(max_depth=1, content_rules={"minCharacter": 0, "tagName": "p"})
+
+    def rows(materialize):
+        docs = process_queue(spark, queue, pages_df, cfg, materialize=materialize)
+        return sorted((r.asDict() for r in docs.collect()), key=lambda d: d["url"])
+
+    lazy = rows(None)
+    assert len(lazy) == len(urls)
+    assert {"DUPLICATE", "ERROR_FETCH", "ERROR_PARSE"} <= {d["status"] for d in lazy}
+    assert rows(_raw_docs_pin(spark, None, 0)) == lazy
 
 
 def _stop_after(n_rounds):

@@ -1212,28 +1212,12 @@ def _contentless_docs(df: DataFrame, ts, status: Column, **evidence: Column) -> 
     )
 
 
-def _robots_docs(skipped_robots: DataFrame, ts) -> DataFrame:
-    """SKIPPED_ROBOTS rows (CrawlStatus.java:10-11): never fetched or parsed,
-    so every content field is the ERROR_FETCH shape with its own status."""
-    return _contentless_docs(skipped_robots, ts, F.lit("SKIPPED_ROBOTS"))
-
-
 def _gate_docs(skipped: DataFrame, ts) -> DataFrame:
     """SKIPPED_CONTENT_TYPE / SKIPPED_TOO_LARGE rows (operators/contentgate;
     README.md:60,212 declared-only knobs): fetched but never parsed. Unlike
     SKIPPED_ROBOTS the fetch DID happen, so http_status, fetch duration and
     the response's real content type are preserved as evidence of why the
     gate fired; every content field stays empty."""
-    http = (
-        F.col("http_status").cast("int")
-        if "http_status" in skipped.columns
-        else F.lit(200)
-    )
-    fms = (
-        F.greatest(F.lit(0).cast("long"), F.col("fetch_ms").cast("long"))
-        if "fetch_ms" in skipped.columns
-        else F.lit(0).cast("long")
-    )
     ctype = (
         F.col("content_type")
         if "content_type" in skipped.columns
@@ -1241,129 +1225,12 @@ def _gate_docs(skipped: DataFrame, ts) -> DataFrame:
     )
     return _contentless_docs(
         skipped, ts, F.col("skip_status"),
-        http_status=http, fetch_duration_ms=fms, content_type=ctype,
-    )
-
-
-def _fused_docs(
-    spark: SparkSession,
-    q: DataFrame,
-    pages: DataFrame,
-    config: CrawlConfig,
-    ts,
-    queue_rows: Optional[int],
-    raw_docs: Optional[DataFrame],
-) -> DataFrame:
-    """Single-pass docs assembly for crawls with no content rules (DUPLICATE
-    pass statically empty — see process_queue). One job end-to-end: the never-
-    traversed queue tail left-joins pages ONCE (broadcast inner + slim url
-    anti-join under the byte gate, a true left join above it), fetch-missing
-    rows ride through the extraction kernel as null-html rows carrying a
-    ``fetchok`` flag, and a single conditional projection emits OK /
-    ERROR_PARSE / ERROR_FETCH rows. Compared to the pinned shape this removes
-    a full tail-payload parquet write + re-read (IO that is flat in core
-    count) and the double evaluation of the fetch join that the old
-    fetched/missing split caused in one union job."""
-    if queue_rows is not None and queue_rows * FRONTIER_ROW_BYTES <= BROADCAST_MAX_BYTES:
-        fetched = pages.join(F.broadcast(q), "url", "inner")
-        # the anti side reads the pages url column only — no html decode
-        missing = q.join(pages.select("url"), "url", "left_anti").withColumn(
-            "html", F.lit(None).cast("binary")
-        )
-        src = fetched.unionByName(missing, allowMissingColumns=True)
-    else:
-        src = q.join(pages, "url", "left")
-
-    src = _with_fetch_defaults(src)
-
-    # content gate (README.md:60,212): disallowed-type / oversize fetches
-    # exit to SKIPPED_* rows HERE — below the scan, above the Python parse
-    # stage — so the kernel only ever decodes admitted bytes. Default-off
-    # (both knobs None) adds nothing to the plan.
-    src, gate_skipped = split_gated(
-        src, config.allowed_content_types, config.max_content_bytes
-    )
-
-    extract_fn, out_schema = _parse_fn(
-        config, _DOC_CARRY + [StructField("fetchok", BooleanType())]
-    )
-    ex = _balance_for_parse(
-        spark,
-        src.select(
-            "url", "html", "pos", "lang", "warc_ts",
-            F.col("http_status").cast("int").alias("http_status"),
-            # P8 (WebPageProcessor.java:238-240) duration clamp; greatest
-            # skips nulls so fetch-missing rows land at 0
-            F.greatest(F.lit(0).cast("long"), F.col("fetch_ms").cast("long")).alias(
-                "fetch_ms"
-            ),
-            F.col("html").isNotNull().alias("fetchok"),
+        http_status=F.col("http_status"),
+        fetch_duration_ms=F.greatest(
+            F.lit(0).cast("long"), F.col("fetch_ms").cast("long")
         ),
-        queue_rows,
-    ).mapInPandas(extract_fn, out_schema)
-    excols = [
-        "url", "title", "segments", "links", "parse_error",
-        "pos", "lang", "warc_ts", "http_status", "fetchok", "fetch_ms",
-    ]
-    ex = ex.select(*excols[:-1], "fetch_ms")
-    if raw_docs is not None:
-        # rows already parsed during the crawl rounds: pinned raw tables,
-        # all fetched by construction (the rounds join pages inner)
-        rd = raw_docs.select(
-            *excols[:-2],
-            F.lit(True).alias("fetchok"),
-            F.greatest(
-                F.lit(0).cast("long"), F.col("fetch_ms").cast("long")
-            ).alias("fetch_ms"),
-        )
-        ex = ex.unionByName(rd)
-
-    is_fetch_err = ~F.col("fetchok")
-    is_parse_err = F.col("fetchok") & F.col("parse_error")
-    is_ok = F.col("fetchok") & ~F.col("parse_error")
-    null_segs = F.lit(None).cast("array<string>")
-    out = ex.select(
-        F.when(is_ok, doc_id_col(F.col("url"))).alias("id"),
-        F.col("url"),
-        parse_host(F.col("url")).alias("domain"),
-        ts.alias("crawl_ts"),
-        F.when(is_fetch_err, F.lit("ERROR_FETCH"))
-        .when(is_parse_err, F.lit("ERROR_PARSE"))
-        .otherwise(F.lit("OK"))
-        .alias("status"),
-        # ERROR_FETCH never got a response: http_status stays null even when
-        # the pages table carries a default column
-        F.when(~is_fetch_err, F.col("http_status")).alias("http_status"),
-        F.when(is_fetch_err, F.lit(0).cast("long"))
-        .otherwise(F.col("fetch_ms"))
-        .alias("fetch_duration_ms"),
-        # the reference's crawlDepth = maxDepth quirk on parse errors
-        # (WebPageProcessor.java:224); null otherwise
-        F.when(is_parse_err, F.lit(config.max_depth)).cast("int").alias("crawl_depth"),
-        F.when(is_ok, F.col("title")).alias("title"),
-        F.lit(None).cast("string").alias("description"),
-        F.when(is_ok, F.col("segments")).alias("contents"),
-        F.when(is_ok, content_length_col(F.col("segments")))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("content_length"),
-        F.when(is_fetch_err, F.lit(None).cast("string"))
-        .otherwise(F.lit("text/html"))
-        .alias("content_type"),
-        F.when(is_ok, F.col("lang")).alias("language"),
-        F.when(is_ok, F.transform(F.col("links"), lambda l: l["href"])).alias(
-            "out_links"
-        ),
-        F.when(
-            is_ok, content_hash_segments(F.col("url"), F.col("segments"))
-        )
-        .otherwise(content_hash_segments(F.col("url"), null_segs))
-        .alias("hash"),
-        F.col("pos"),
+        content_type=ctype,
     )
-    if gate_skipped is not None:
-        out = out.unionByName(_gate_docs(gate_skipped, ts))
-    return out
 
 
 def process_queue(
@@ -1389,41 +1256,42 @@ def process_queue(
     ERROR_PARSE row carrying http_status/content_type and the reference's
     ``crawlDepth = maxDepth`` quirk (:216-227, :224). With a ``robots`` table,
     disallowed URLs become SKIPPED_ROBOTS rows (CrawlStatus.java:10-11) and
-    are never fetched/parsed.
-
-    Content-hash dedup (CrawlStatus.DUPLICATE, model/CrawlStatus.java:19-20;
-    README.md:156 "skip if content hash unchanged"): OK docs with identical
-    NON-EMPTY extracted contents are marked DUPLICATE except the first by
-    queue position — one uniform hash-partitioned window, skew-free keys.
+    are never fetched/parsed; the content gate's SKIPPED_* rows are fetched
+    but never parsed.
 
     Per-page fetch fidelity (P2): when the pages table carries
     ``http_status``/``fetch_ms`` columns they flow into the docs (Jsoup
     ignoreHttpErrors(true): non-200 pages still parse as OK); absent columns
     default to 200/0.
 
-    ``materialize`` (df -> pinned df, e.g. a SnapshotStore write+read) makes
-    the pass EAGER and switches the DUPLICATE computation from a full-payload
-    window to the scale shape: the tail parse is materialized once, a slim
-    (url, pos, content-key) job finds the duplicate LOSERS, and the losers
-    (typically a small fraction of the queue) broadcast-join back onto the
-    payload — the multi-KB contents/links columns never enter a shuffle.
-    Without it the pass stays lazy (tests, driver-compared queries) and uses
-    the single-pass window, which is semantically identical.
+    One plan builds every row. Queue urls a crawl round already parsed come
+    from ``raw_docs``; the rest (the tail) join pages ONCE — a broadcast
+    inner join plus a url-only anti join under the byte gate, a true left
+    join above it — and fetch-missing rows ride through the single parse
+    stage as null-html rows with a ``fetchok`` flag. One conditional
+    projection then emits ERROR_FETCH / ERROR_PARSE / DUPLICATE / OK.
 
-    With NO content rules anywhere (``has_content_rules`` false — the
-    rules-less frontier-refresh shape, the common 10^10-scale crawl), every
-    doc's contents are empty by reference semantics so the DUPLICATE pass is
-    statically empty; the whole assembly collapses to the fused single-pass
-    plan in ``_fused_docs`` and ``materialize`` is ignored (callers resuming
-    from a snapshot pass has_content_rules = current config OR the snapshot's
-    recorded flag, so raw tables written under a rules-bearing config never
-    take the fused path).
+    Content-hash dedup (CrawlStatus.DUPLICATE, model/CrawlStatus.java:19-20;
+    README.md:156 "skip if content hash unchanged"): OK docs with identical
+    NON-EMPTY extracted contents are marked DUPLICATE except the first by
+    queue position. A slim eager job over (url, pos, content key) finds the
+    duplicate LOSERS, which broadcast-join back onto the payload — the
+    multi-KB contents/links columns never enter a shuffle. ``materialize``
+    (df -> pinned df, e.g. a SnapshotStore write+read) pins the tail parse
+    first, so the losers job and the docs write never parse a page twice;
+    without it the tail parse stays lazy and each of the two runs it.
+
+    With NO content rules anywhere (``has_content_rules`` false) every doc's
+    contents are empty by reference semantics, so no doc can be a DUPLICATE:
+    there is no losers job, ``materialize`` is unused and the tail parse
+    streams straight into the docs write. Callers resuming from a snapshot
+    pass has_content_rules = current config OR the snapshot's recorded flag,
+    so raw tables written under a rules-bearing config still get the pass.
     """
     q = queue.select("url", "pos")
     skipped_robots = None
     if robots is not None:
-        q, blocked = apply_robots(q, robots)
-        skipped_robots = blocked
+        q, skipped_robots = apply_robots(q, robots)
 
     if has_content_rules is None:
         has_content_rules = config.has_content_rules
@@ -1438,22 +1306,6 @@ def process_queue(
         if queue_rows is not None:
             queue_rows = max(0, queue_rows - (raw_rows or 0))
 
-    if not has_content_rules:
-        # fused single-pass docs (the rules-less frontier-refresh shape, i.e.
-        # the common 10^10-scale crawl): with the DUPLICATE pass skipped the
-        # tail parse output has exactly ONE consumer, so pinning it to a raw
-        # table would add a full payload write + re-read whose IO cost is
-        # flat in core count (measured docs E = 0.40 at 4 -> 16 cores). The
-        # tail parse instead streams straight into the docs write: one left
-        # join, missing-ness carried through the kernel as a flag, one
-        # conditional projection emitting every status row. ``materialize``
-        # is deliberately unused — resumability is unaffected because the
-        # docs pass is one idempotent job over the committed round tables.
-        out = _fused_docs(spark, q, pages, config, ts, queue_rows, raw_docs)
-        if skipped_robots is not None:
-            out = out.unionByName(_robots_docs(skipped_robots, ts))
-        return out
-
     if queue_rows is not None and queue_rows * FRONTIER_ROW_BYTES <= BROADCAST_MAX_BYTES:
         # broadcast the queue: the pages table (html payload) streams through
         # a broadcast hash join instead of shuffling wholesale; the missing
@@ -1462,137 +1314,120 @@ def process_queue(
         missing = q.join(pages.select("url"), "url", "left_anti").withColumn(
             "html", F.lit(None).cast("binary")
         )
+        src = fetched.unionByName(missing, allowMissingColumns=True)
     else:
-        joined = q.join(pages, "url", "left")
-        fetched = joined.filter(F.col("html").isNotNull())
-        missing = joined.filter(F.col("html").isNull())
+        src = q.join(pages, "url", "left")
 
-    fetched = _with_fetch_defaults(fetched)
-
-    # content gate (README.md:60,212): skip disallowed-type / oversize rows
-    # before the Python parse stage; default-off adds nothing to the plan
-    fetched, gate_skipped = split_gated(
-        fetched, config.allowed_content_types, config.max_content_bytes
+    # content gate (README.md:60,212): disallowed-type / oversize fetches
+    # exit to SKIPPED_* rows HERE — below the scan, above the Python parse
+    # stage — so the kernel only ever decodes admitted bytes. Default-off
+    # (both knobs None) adds nothing to the plan.
+    src, gate_skipped = split_gated(
+        _with_fetch_defaults(src), config.allowed_content_types, config.max_content_bytes
     )
 
-    extract_fn, out_schema = _parse_fn(config, _DOC_CARRY)
+    extract_fn, out_schema = _parse_fn(
+        config, _DOC_CARRY + [StructField("fetchok", BooleanType())]
+    )
     ex = _balance_for_parse(
         spark,
-        fetched.select(
+        src.select(
             "url", "html", "pos", "lang", "warc_ts",
             F.col("http_status").cast("int").alias("http_status"),
-            # P8 (WebPageProcessor.java:238-240): durationMs clamps negative
-            # wall-clock deltas (clock skew mid-fetch) to 0
-            F.greatest(F.lit(0).cast("long"), F.col("fetch_ms").cast("long")).alias(
-                "fetch_ms"
-            ),
+            F.col("fetch_ms").cast("long").alias("fetch_ms"),
+            F.col("html").isNotNull().alias("fetchok"),
         ),
         queue_rows,
-    ).mapInPandas(extract_fn, out_schema)
-    excols = [
-        "url", "title", "segments", "links", "parse_error",
-        "pos", "lang", "warc_ts", "http_status", "fetch_ms",
-    ]
-    # compute the content-dedup key INSIDE the parse job so the pinned table
-    # carries it: the duplicate pass below then reads url+pos+_ckey only
-    # (parquet column pruning skips the multi-KB segments payload entirely)
-    ex = ex.select(*excols).withColumn("_ckey", _content_key())
-    if materialize is not None:
-        # pin the tail parse: the slim dup pass and the payload pass below
-        # both read it, and the page must not be parsed twice
-        _tt = time.monotonic()
-        ex = materialize(ex)
-        if timings is not None:
-            _phase(timings, "docs_tail_mat", _tt)
-    if raw_docs is not None:
-        rd = raw_docs.select(
-            *excols[:-1],
-            # P8 clamp for the raw-captured side (the extract path above
-            # already clamps)
-            F.greatest(
-                F.lit(0).cast("long"), F.col("fetch_ms").cast("long")
-            ).alias("fetch_ms"),
-            "_ckey",
-        )
-        ex = ex.unionByName(rd)
+    ).mapInPandas(extract_fn, out_schema).drop("text")
 
-    parsed = ex.filter(~F.col("parse_error"))
-    w_dup = Window.partitionBy("_ckey")
-    if materialize is not None:
-        # scale shape: every input is now a pinned table CARRYING _ckey, so
-        # the duplicate LOSERS (pos > first pos of their content key) come out
-        # of a slim column-pruned pass — url+pos+_ckey only, ~100 B/row read
-        # and shuffled, never touching the multi-KB contents/links payload —
-        # and then broadcast-join back onto the payload by url (unique in the
-        # queue). Degrade path: a loser set past the broadcast ceiling
-        # shuffle-joins; that is the window plan minus its sort, so never worse.
+    is_dup = F.lit(False)
+    if has_content_rules:
+        # compute the content-dedup key INSIDE the parse job so the pinned
+        # table carries it: the losers job below then reads url+pos+_ckey
+        # only (parquet column pruning skips the multi-KB segments payload)
+        ex = ex.withColumn("_ckey", _content_key())
+        if materialize is not None:
+            _tt = time.monotonic()
+            ex = materialize(ex)
+            if timings is not None:
+                _phase(timings, "docs_tail_mat", _tt)
+    if raw_docs is not None:
+        # rows already parsed during the crawl rounds: pinned raw tables,
+        # all fetched by construction (the rounds join pages inner)
+        ex = ex.unionByName(
+            raw_docs.withColumn("fetchok", F.lit(True)).select(*ex.columns)
+        )
+    if has_content_rules:
+        # duplicate LOSERS (pos > first pos of their content key), ~100 B
+        # per row read and shuffled, broadcast back by url (unique in the
+        # queue). A loser set past the broadcast ceiling shuffle-joins.
         _tl = time.monotonic()
         losers = (
-            parsed.select("url", "pos", "_ckey")
-            .withColumn("_first_pos", F.min("pos").over(w_dup))
+            ex.filter(~F.col("parse_error"))
+            .select("url", "pos", "_ckey")
+            .withColumn("_first_pos", F.min("pos").over(Window.partitionBy("_ckey")))
             .filter(F.col("pos") > F.col("_first_pos"))
-            .select("url")
+            .select("url", F.lit(True).alias("_dup"))
             .localCheckpoint(eager=True)
         )
         n_losers = losers.count()
         if timings is not None:
             _phase(timings, "docs_losers", _tl)
-        keyed = parsed.join(
-            _frontier_side(losers.withColumn("_isdup", F.lit(1)), n_losers),
-            "url",
-            "left",
-        )
-        dup_status = (
-            F.when(F.col("_isdup") == 1, F.lit("DUPLICATE")).otherwise(F.lit("OK"))
-        )
-    else:
-        keyed = parsed.withColumn("_first_pos", F.min("pos").over(w_dup))
-        dup_status = (
-            F.when(F.col("pos") > F.col("_first_pos"), F.lit("DUPLICATE"))
-            .otherwise(F.lit("OK"))
-        )
-    ok_docs = (
-        keyed
-        .select(
-            doc_id_col(F.col("url")).alias("id"),
-            F.col("url"),
-            parse_host(F.col("url")).alias("domain"),
-            ts.alias("crawl_ts"),
-            dup_status.alias("status"),
-            F.col("http_status"),
-            F.col("fetch_ms").alias("fetch_duration_ms"),
-            F.lit(None).cast("int").alias("crawl_depth"),
-            F.col("title"),
-            F.lit(None).cast("string").alias("description"),
-            F.col("segments").alias("contents"),
-            content_length_col(F.col("segments")).alias("content_length"),
-            F.lit("text/html").alias("content_type"),
-            F.col("lang").alias("language"),
-            content_hash_segments(F.col("url"), F.col("segments")).alias("hash"),
-            F.col("pos"),
-            # out_links: the kernel already emits normalized, null-free hrefs
-            # in document order — a plain column transform, no explode/regroup/
-            # self-join (which would also evaluate the extraction twice)
-            F.transform(F.col("links"), lambda l: l["href"]).alias("out_links"),
-        )
-    )
+        ex = ex.join(_frontier_side(losers, n_losers), "url", "left")
+        is_dup = F.col("_dup").isNotNull()
 
-    # ERROR_PARSE rows (WebPageProcessor.java:216-227): keep http_status and
-    # content_type from the fetch; crawl_depth = maxDepth is the :224 quirk
-    parse_err_docs = _contentless_docs(
-        ex.filter(F.col("parse_error")), ts, F.lit("ERROR_PARSE"),
-        http_status=F.col("http_status"),
-        fetch_duration_ms=F.col("fetch_ms"),
-        crawl_depth=F.lit(config.max_depth),
-        content_type=F.lit("text/html"),
+    is_fetch_err = ~F.col("fetchok")
+    is_parse_err = F.col("fetchok") & F.col("parse_error")
+    is_ok = F.col("fetchok") & ~F.col("parse_error")  # OK or DUPLICATE
+    null_segs = F.lit(None).cast("array<string>")
+    out = ex.select(
+        F.when(is_ok, doc_id_col(F.col("url"))).alias("id"),
+        F.col("url"),
+        parse_host(F.col("url")).alias("domain"),
+        ts.alias("crawl_ts"),
+        F.when(is_fetch_err, F.lit("ERROR_FETCH"))
+        .when(is_parse_err, F.lit("ERROR_PARSE"))
+        .when(is_dup, F.lit("DUPLICATE"))
+        .otherwise(F.lit("OK"))
+        .alias("status"),
+        # ERROR_FETCH never got a response: http_status stays null even when
+        # the pages table carries a default column
+        F.when(~is_fetch_err, F.col("http_status")).alias("http_status"),
+        # P8 (WebPageProcessor.java:238-240): durationMs clamps negative
+        # wall-clock deltas (clock skew mid-fetch) to 0
+        F.when(is_fetch_err, F.lit(0).cast("long"))
+        .otherwise(F.greatest(F.lit(0).cast("long"), F.col("fetch_ms")))
+        .alias("fetch_duration_ms"),
+        # the reference's crawlDepth = maxDepth quirk on parse errors
+        # (WebPageProcessor.java:224); null otherwise
+        F.when(is_parse_err, F.lit(config.max_depth)).cast("int").alias("crawl_depth"),
+        F.when(is_ok, F.col("title")).alias("title"),
+        F.lit(None).cast("string").alias("description"),
+        F.when(is_ok, F.col("segments")).alias("contents"),
+        F.when(is_ok, content_length_col(F.col("segments")))
+        .otherwise(F.lit(0))
+        .cast("long")
+        .alias("content_length"),
+        F.when(is_fetch_err, F.lit(None).cast("string"))
+        .otherwise(F.lit("text/html"))
+        .alias("content_type"),
+        F.when(is_ok, F.col("lang")).alias("language"),
+        # out_links: the kernel already emits normalized, null-free hrefs in
+        # document order — a plain column transform, no explode/regroup
+        F.when(is_ok, F.transform(F.col("links"), lambda l: l["href"])).alias(
+            "out_links"
+        ),
+        F.when(
+            is_ok, content_hash_segments(F.col("url"), F.col("segments"))
+        )
+        .otherwise(content_hash_segments(F.col("url"), null_segs))
+        .alias("hash"),
+        F.col("pos"),
     )
-    err_docs = _contentless_docs(missing, ts, F.lit("ERROR_FETCH"))
-
-    cols = [f.name for f in _docs_schema().fields]
-    out = ok_docs.select(*cols).unionByName(parse_err_docs).unionByName(err_docs)
     if gate_skipped is not None:
         out = out.unionByName(_gate_docs(gate_skipped, ts))
     if skipped_robots is not None:
-        out = out.unionByName(_robots_docs(skipped_robots, ts))
+        out = out.unionByName(
+            _contentless_docs(skipped_robots, ts, F.lit("SKIPPED_ROBOTS"))
+        )
     return out
-
