@@ -151,9 +151,8 @@ def run_one(cores: int, corpus: str, entry: str, max_depth: int, zip_path: str,
         "--max-depth", str(max_depth),
         *extra,
     ]
-    env = dict(os.environ, SPARK_GRAFT_CPUS=str(cores))
     t0 = time.monotonic()
-    proc = subprocess.run(cmd, capture_output=True, text=True, env=env, cwd=tempfile.gettempdir())
+    proc = subprocess.run(cmd, capture_output=True, text=True, cwd=tempfile.gettempdir())
     total_wall = time.monotonic() - t0
     shutil.rmtree(state, ignore_errors=True)
     if proc.returncode != 0:

@@ -226,6 +226,10 @@ def main() -> int:
         "engine_timings": res.timings,
         "state_dir": args.state_dir,
         "stopped": res.stopped,
+        # what the session ran with (the launch's settings, engine defaults)
+        "master": spark.sparkContext.master,
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
     }
     if args.expire_keep is not None:
         expired = store.expire_snapshots(keep_last=args.expire_keep)

@@ -166,12 +166,11 @@ def main() -> int:
     ap.add_argument("--no-near-dedup", action="store_true")
     ap.add_argument("--quality", choices=("gopher", "off"), default="gopher")
     ap.add_argument("--canonical", choices=("min-id", "longest"), default="min-id")
-    ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
     from webcrawler_spark.session import get_spark
 
-    spark = get_spark(app_name="curate", master=args.master)
+    spark = get_spark(app_name="curate")
     summary = run(
         spark,
         docs_path=args.docs,

@@ -46,10 +46,8 @@ def _spark_submit(cores: int, zip_path: str, script: str, *args: str) -> dict:
         "--py-files", zip_path,
         os.path.join(REPO, "jobs", script), *args,
     ]
-    env = dict(os.environ, SPARK_GRAFT_CPUS=str(cores))
     proc = subprocess.run(
-        cmd, capture_output=True, text=True, env=env,
-        cwd=tempfile.gettempdir(),
+        cmd, capture_output=True, text=True, cwd=tempfile.gettempdir()
     )
     if proc.returncode != 0:
         sys.stderr.write(proc.stdout[-2000:] + proc.stderr[-3000:])

@@ -136,12 +136,11 @@ def main() -> int:
     ap.add_argument("--d", type=int, default=4)
     ap.add_argument("--w", type=int, default=4096)
     ap.add_argument("--topk", type=int, default=20)
-    ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
     from webcrawler_spark.session import get_spark
 
-    spark = get_spark(app_name="monitor", master=args.master)
+    spark = get_spark(app_name="monitor")
     print(json.dumps(run(spark, args.pages, args.state_dir, args.d, args.w, args.topk)))
     spark.stop()
     return 0

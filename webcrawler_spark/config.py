@@ -32,10 +32,6 @@ class CrawlConfig:
     max_depth: int = 2
     include_url_patterns: List[str] = field(default_factory=list)
     exclude_url_patterns: List[str] = field(default_factory=list)
-    user_agent: str = "SparkCrawler/0.1"
-    request_timeout_ms: int = 10000
-    queue_namespace: str = "crawler"
-    index_prefix: Optional[str] = None
     content_rules: Optional[dict] = None       # generic rules config
     pages: List[PageConfig] = field(default_factory=list)
     # engine-only extensions (reference README design, not in its code):
@@ -120,6 +116,10 @@ class CrawlConfig:
     # -- (de)serialization ------------------------------------------------------
     @classmethod
     def from_dict(cls, d: dict) -> "CrawlConfig":
+        """Load a WebCrawlerConfig.json-shaped dict. The reference's
+        ``userAgent``, ``requestTimeoutMs``, ``queueNamespace`` and
+        ``indexPrefix`` keys are accepted and ignored: the engine has no HTTP
+        client, Redis queue or ES index."""
         pages = [
             PageConfig(
                 url_pattern=p.get("urlPattern", ""),
@@ -132,10 +132,6 @@ class CrawlConfig:
             max_depth=d.get("maxDepth", 2),
             include_url_patterns=d.get("includeUrlPatterns", []) or [],
             exclude_url_patterns=d.get("excludeUrlPatterns", []) or [],
-            user_agent=d.get("userAgent", "SparkCrawler/0.1"),
-            request_timeout_ms=d.get("requestTimeoutMs", 10000),
-            queue_namespace=d.get("queueNamespace", "crawler"),
-            index_prefix=d.get("indexPrefix"),
             content_rules=d.get("contentRules"),
             pages=pages,
             per_host_budget=d.get("perHostBudget"),
@@ -152,12 +148,3 @@ class CrawlConfig:
     def from_json(cls, path: str) -> "CrawlConfig":
         with open(path, "r", encoding="utf-8") as f:
             return cls.from_dict(json.load(f))
-
-
-def index_name(index_prefix: Optional[str], tenant_id: Optional[str]) -> Optional[str]:
-    """CrawlerUtils.getIndexName (util/CrawlerUtils.java:27-35):
-    prefix + '-' + tenant; null/blank prefix -> None; blank tenant -> 'default'."""
-    if index_prefix is None or index_prefix.strip() == "":
-        return None
-    tenant = tenant_id if tenant_id is not None and tenant_id.strip() != "" else "default"
-    return f"{index_prefix}-{tenant}"

@@ -55,7 +55,6 @@ crashed round overwrites its versioned dirs — idempotent by construction.
 
 from __future__ import annotations
 
-import os
 import threading
 import time
 from dataclasses import dataclass, field
@@ -138,19 +137,15 @@ LINEAGE_SCHEMA = StructType(
 # degrades to shuffle — a cluster deployment co-locates by bucketing pages and
 # frontier on url instead.
 FRONTIER_ROW_BYTES = 96
-BROADCAST_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_BROADCAST_MAX_BYTES", str(256 * 1024 * 1024))
-)
+BROADCAST_MAX_BYTES = 256 * 1024 * 1024
 
 # Frontiers at or under this many rows are round-robin repartitioned before
 # the Python parse stage; larger ones run on the scan-partition layout.
-PARSE_REBALANCE_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_PARSE_REBALANCE_MAX_ROWS", "100000")
-)
+PARSE_REBALANCE_MAX_ROWS = 100_000
 # Partitions for the rebalance shuffle, as a multiple of defaultParallelism:
 # finer tasks shorten the stage's straggler tail (a wave is 1/mult of the
 # stage; one slow core costs 1/(mult*cores), not 1/cores).
-PARSE_REBALANCE_MULT = int(os.environ.get("SPARK_GRAFT_PARSE_REBALANCE_MULT", "2"))
+PARSE_REBALANCE_MULT = 2
 
 N_LINEAGE_PARTS = 32
 
