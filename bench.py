@@ -30,7 +30,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 HEADLINE = [
     "flagship_frontier_round",
     "f1_dedup_anti_join",
-    "f1_dedup_bloom",
     "f2_admission_salted",
     "t3_urlnorm",
     "t4_url_filter",
@@ -87,7 +86,6 @@ HEADLINE = [
     "lang_ppl_buckets",
     "recrawl_conditional",
     "domain_gate",
-    "f1_dedup_cuckoo",
     "robots_cache_ttl",
     "decontaminate_containment",
 ]

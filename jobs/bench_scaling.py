@@ -124,8 +124,7 @@ def workload_ceiling(pages: str, cores_low: int, cores_high: int,
     }
 
 
-def run_one(cores: int, corpus: str, entry: str, max_depth: int, zip_path: str,
-            extra: list) -> dict:
+def run_one(cores: int, corpus: str, entry: str, max_depth: int, zip_path: str) -> dict:
     state = tempfile.mkdtemp(prefix=f"scale-{cores}-")
     cmd = [
         # Pin the whole process tree (JVM + pyspark workers) to exactly
@@ -149,7 +148,6 @@ def run_one(cores: int, corpus: str, entry: str, max_depth: int, zip_path: str,
         "--entry", entry,
         "--state-dir", state,
         "--max-depth", str(max_depth),
-        *extra,
     ]
     t0 = time.monotonic()
     proc = subprocess.run(cmd, capture_output=True, text=True, cwd=tempfile.gettempdir())
@@ -178,16 +176,10 @@ def main() -> int:
     ap.add_argument("--cores-high", type=int, default=32)
     ap.add_argument("--max-depth", type=int, default=2)
     ap.add_argument("--repeat", type=int, default=2)
-    ap.add_argument("--use-bloom", action="store_true")
-    ap.add_argument(
-        "--seen-filter", choices=["bloom", "cuckoo"], default=None,
-        help="seen-set sidecar strategy forwarded to jobs/crawl.py "
-        "(default: exact anti-join only)",
-    )
     ap.add_argument(
         "--only-cores", type=int, default=None,
         help="run a single pinned leg at this core count (skip the low/high "
-        "protocol and the ceiling probes) — for strategy comparisons at the "
+        "protocol and the ceiling probes) — for comparisons at the "
         "committed scale",
     )
     ap.add_argument("--out", default=None)
@@ -211,16 +203,12 @@ def main() -> int:
     zip_path = shutil.make_archive(
         os.path.join(tmp, "engine"), "zip", root_dir=REPO, base_dir="webcrawler_spark"
     )
-    extra = ["--use-bloom"] if args.use_bloom else []
-    if args.seen_filter:
-        extra += ["--seen-filter", args.seen_filter]
 
     if args.only_cores is not None:
         best_s: dict = {}
         walls_1 = []
         for _ in range(args.repeat):
-            s = run_one(args.only_cores, pages, args.entry, args.max_depth,
-                        zip_path, extra)
+            s = run_one(args.only_cores, pages, args.entry, args.max_depth, zip_path)
             walls_1.append(s["wall_sec"])
             if not best_s or s["wall_sec"] < best_s["wall_sec"]:
                 best_s = s
@@ -234,7 +222,6 @@ def main() -> int:
             "metric": "urls_fetched+deduped_per_sec",
             "corpus": pages,
             "max_depth": args.max_depth,
-            "seen_filter": args.seen_filter or "exact",
             f"local[{args.only_cores}]": best_s,
         }
         print(json.dumps(out))
@@ -254,7 +241,7 @@ def main() -> int:
     walls: dict = {args.cores_low: [], args.cores_high: []}
     for _ in range(args.repeat):
         for cores in (args.cores_low, args.cores_high):
-            s = run_one(cores, pages, args.entry, args.max_depth, zip_path, extra)
+            s = run_one(cores, pages, args.entry, args.max_depth, zip_path)
             walls[cores].append(s["wall_sec"])
             if cores not in best or s["wall_sec"] < best[cores]["wall_sec"]:
                 best[cores] = s
@@ -289,7 +276,6 @@ def main() -> int:
         "metric": "urls_fetched+deduped_per_sec",
         "corpus": pages,
         "max_depth": args.max_depth,
-        "seen_filter": args.seen_filter or ("bloom" if args.use_bloom else "exact"),
         "low": lo,
         "high": hi,
         "scale_factor": factor,

@@ -5,8 +5,8 @@ Usage:
         --pages /path/pages.parquet --entry https://host000.example.com/page/0 \
         --state-dir /tmp/crawl-state [--config crawl.json] [--max-depth 2] \
         [--per-host-budget N] [--max-pages N] [--robots robots.parquet \
-        [--timed-politeness]] [--salt-threshold N] [--seen-filter bloom|cuckoo] \
-        [--stop-file PATH] [--resume] [--no-processor] [--expire-keep N]
+        [--timed-politeness]] [--salt-threshold N] [--stop-file PATH] \
+        [--resume] [--no-processor] [--expire-keep N]
 
 Every flag works in every mode: with no politeness flag the crawl admits
 every pending url (plain BFS). Prints one summary JSON line and writes
@@ -60,14 +60,6 @@ def main() -> int:
         "--timed-politeness", action="store_true",
         help="use per-host next_allowed_ts clocks driven by the robots "
         "table's crawl_delay_ms (requires --robots)",
-    )
-    ap.add_argument(
-        "--seen-filter", choices=["bloom", "cuckoo"], default=None,
-        help="url-seen sidecar strategy (cuckoo supports deletion)",
-    )
-    ap.add_argument(
-        "--use-bloom", dest="seen_filter", action="store_const", const="bloom",
-        help="shorthand for --seen-filter bloom",
     )
     ap.add_argument(
         "--no-processor", action="store_true",
@@ -182,7 +174,6 @@ def main() -> int:
         robots=robots_df,
         store=store,
         with_processor=not args.no_processor,
-        seen_filter=args.seen_filter,
         salt_threshold=args.salt_threshold,
         delays=delays_df,
         stop=stop,

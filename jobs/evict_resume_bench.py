@@ -2,12 +2,12 @@
 
 Drives the full recrawl-eviction contract once at corpus scale, end to end:
 
-1. start a cuckoo-sidecar crawl over a generated corpus, stop it at a round
-   boundary via the stop-file (the sidecar + url_seen commit atomically),
+1. start a crawl over a generated corpus, stop it at a round boundary via
+   the stop-file (url_seen and the loop state commit atomically),
 2. recrawl pass 1 bootstraps hash state for the snapshot,
 3. recrawl pass 2 sees a slice of pages modified (html suffix planted via a
    snapshot rewrite), schedules them sooner, and --evict removes the due
-   slice from the committed url_seen AND the cuckoo sidecar in place,
+   slice from the committed url_seen,
 4. resume the crawl; the resumed rounds re-admit exactly the due urls they
    re-encounter as links,
 5. verify: evicted == due ∩ seen (from the job's own counts), re-admitted ==
@@ -79,12 +79,11 @@ def main() -> int:
         base_dir="webcrawler_spark",
     )
 
-    # ---- 1. stopped cuckoo crawl: halt once round 0's table lands so the
+    # ---- 1. stopped crawl: halt once round 0's table lands so the
     # stop triggers at the next boundary (a mid-crawl stop, not a no-op)
     crawl_args = [
         "--pages", pages, "--entry", f"@{seeds}", "--state-dir", state,
-        "--max-depth", str(args.max_depth), "--seen-filter", "cuckoo",
-        "--stop-file", stop_file,
+        "--max-depth", str(args.max_depth), "--stop-file", stop_file,
     ]
     import threading
 
@@ -193,7 +192,6 @@ def main() -> int:
         "seen_at_stop": int(s_crawl["urls_enqueued"]),
         "due_for_refetch": s_evict["due_for_refetch"],
         "evicted_from_seen": s_evict["evicted_from_seen"],
-        "sidecar": s_evict["sidecar"],
         "readmitted_reencountered": len(readmitted),
         "readmitted_matches_exactly": ok,
         "walls_sec": {

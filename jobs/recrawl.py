@@ -20,13 +20,9 @@ Each invocation:
    refetch sooner, stable urls back off exponentially),
 4. with ``--evict``: urls DUE for refetch within ``--horizon-hours``
    (next_fetch_ts <= now + horizon — "the next crawl runs within H hours,
-   hand it everything scheduled by then") are evicted from the crawl's committed ``url_seen`` (exact) AND, when the
-   snapshot store carries a ``cuckoo_sidecar`` (a stopped crawl persists
-   one), their fingerprints are deleted IN PLACE via
-   cuckoo.cuckoo_sidecar_delete — the resumed crawl then re-admits exactly
-   the due urls. A bloom sidecar cannot delete; if one is present it is
-   dropped from the manifest so the resume falls back to the O(|seen|)
-   rebuild (the honest cost of choosing bloom).
+   hand it everything scheduled by then") are deleted from the crawl's
+   committed ``url_seen``. That table is the crawl's only dedup gate, so a
+   crawl resumed from the stopped state re-admits exactly the due urls.
 
 State tables (SnapshotStore versions, manifest-committed atomically):
 ``recrawl_state`` (url, hash) and ``recrawl_history`` (url, fetch_ts,
@@ -34,8 +30,7 @@ outcome — capped at the last 16 fetches per url). First invocation
 bootstraps from an empty state: every snapshot url classifies NEW.
 
 Scale shape: every join/agg is url-keyed (one shuffle family); the due
-list is a small fraction of seen; cuckoo deletion touches only the due
-urls' buckets. Prints ONE JSON summary line.
+list is a small fraction of seen. Prints ONE JSON summary line.
 """
 
 from __future__ import annotations
@@ -117,40 +112,13 @@ def run(spark, pages_path: str, state_dir: str, now: str,
     m.tables["recrawl_history"] = nxt
 
     evicted = 0
-    sidecar_action = "none"
     if evict and n_due and "url_seen" in m.tables:
-        from webcrawler_spark.operators.cuckoo import cuckoo_sidecar_delete
-
         sv = m.tables["url_seen"]
         seen = store.read_table(spark, "url_seen", sv)
         kept = seen.join(due, "url", "left_anti")
         evicted = seen.count() - kept.count()
         store.write_table(kept, "url_seen", sv + 1)
         m.tables["url_seen"] = sv + 1
-        if "cuckoo_sidecar" in m.tables:
-            cv = m.tables["cuckoo_sidecar"]
-            side = store.read_table(spark, "cuckoo_sidecar", cv)
-            # deletion contract: only keys that were inserted — the due list
-            # intersected with seen satisfies it by construction. kept= hands
-            # the exact surviving rows over so the chain-collision repair
-            # re-inserts any collaterally stripped fingerprint (no false
-            # negatives survive the eviction — cuckoo.py module docstring)
-            side2 = cuckoo_sidecar_delete(
-                side, seen.join(due, "url", "left_semi"), kept=kept
-            )
-            store.write_table(side2, "cuckoo_sidecar", cv + 1)
-            m.tables["cuckoo_sidecar"] = cv + 1
-            sidecar_action = "cuckoo_deleted_in_place"
-        elif "bloom_sidecar" in m.tables:
-            # bloom cannot delete: drop it so resume rebuilds from the
-            # now-smaller url_seen (correct, at rebuild cost)
-            del m.tables["bloom_sidecar"]
-            sidecar_action = "bloom_dropped_for_rebuild"
-            print(
-                "warning: bloom sidecar dropped; the resumed crawl rebuilds it "
-                "from url_seen at O(|seen|) cost",
-                file=sys.stderr,
-            )
     store.commit(m)
 
     return {
@@ -161,7 +129,6 @@ def run(spark, pages_path: str, state_dir: str, now: str,
         "gone": counts.get("GONE", 0),
         "due_for_refetch": n_due,
         "evicted_from_seen": evicted,
-        "sidecar": sidecar_action,
         "wall_sec": round(time.monotonic() - t0, 2),
     }
 
@@ -176,9 +143,8 @@ def main() -> int:
     ap.add_argument("--horizon-hours", type=float, default=24.0,
                     help="evict urls scheduled within this window")
     ap.add_argument("--evict", action="store_true",
-                    help="evict due urls from url_seen; a cuckoo sidecar "
-                    "deletes them in place, a bloom sidecar is dropped and "
-                    "rebuilt on resume at O(|seen|) cost")
+                    help="evict due urls from url_seen, so a resumed crawl "
+                    "re-admits them")
     args = ap.parse_args()
 
     from webcrawler_spark.session import get_spark

@@ -62,3 +62,15 @@ def test_registry_window_queries_emit_no_nested_columns(spark):
             if f.dataType.typeName() in ("array", "map", "struct")
         }
         assert nested == set(), f"{name} emits driver-unhashable columns {nested}"
+
+
+def test_registry_oracle_and_window_keys_agree():
+    """Every query has exactly one DuckDB twin and every driver-window key
+    names a registered query, so deleting a query cannot leave an orphan
+    oracle or window entry behind. Pure Python: no session, no data."""
+    import __spark_entry__ as entry_mod
+
+    registry = entry_mod._query_registry()
+    missing = [k for k in entry_mod._DRIVER_WINDOW_R5 if k not in registry]
+    assert missing == [], f"driver window names unregistered queries {missing}"
+    assert set(entry_mod.queries()) == set(registry) == set(entry_mod.oracle_sql())

@@ -130,105 +130,3 @@ def test_extract_page_total_on_arbitrary_bytes(raw):
 
     out = extract_page(raw, "https://x.test/a")     # bytes: decode w/ replace
     assert out.text == out.text.strip()
-
-
-# ---------------------------------------------------------------------------
-# Cuckoo chain kernel (operators/cuckoo.py): approximate-membership
-# invariants under ARBITRARY key sets, interleavings, and capacities —
-# the surface a Zipf-skewed frontier feeds.
-
-import numpy as np
-
-from webcrawler_spark.operators.cuckoo import (
-    _to_bytes,
-    chain_contains_hashed,
-    chain_delete_hashed,
-    chain_insert_hashed,
-    cuckoo_new,
-)
-
-_hash_pairs = st.lists(
-    st.tuples(
-        st.integers(min_value=-(2**63), max_value=2**63 - 1),
-        st.integers(min_value=-(2**63), max_value=2**63 - 1),
-    ),
-    min_size=0,
-    max_size=400,
-)
-
-
-def _np(pairs):
-    if not pairs:
-        return (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64))
-    a = np.array([p[0] for p in pairs], dtype=np.int64)
-    b = np.array([p[1] for p in pairs], dtype=np.int64)
-    return a, b
-
-
-@settings(max_examples=150, deadline=None)
-@given(_hash_pairs, st.sampled_from([16, 32, 128]))
-def test_cuckoo_chain_no_false_negatives_any_capacity(pairs, m0):
-    """Every inserted key answers maybe=True, for ANY key set and ANY
-    (tiny) first-table capacity — growth must never lose a key, including
-    the displaced-victim path."""
-    h1, h2 = _np(pairs)
-    chain = [cuckoo_new(m0)]
-    chain_insert_hashed(chain, h1, h2)
-    assert chain_contains_hashed(chain, h1, h2).all()
-
-
-@settings(max_examples=100, deadline=None)
-@given(_hash_pairs, st.randoms(use_true_random=False))
-def test_cuckoo_chain_bytes_are_a_function_of_the_key_set(pairs, rnd):
-    """Chain bytes are identical for any insertion ORDER of the same key
-    set (the engine's cross-run determinism contract)."""
-    h1, h2 = _np(pairs)
-    shuffled = list(pairs)
-    rnd.shuffle(shuffled)
-    s1, s2 = _np(shuffled)
-    a, b = [cuckoo_new(32)], [cuckoo_new(32)]
-    chain_insert_hashed(a, h1, h2)
-    chain_insert_hashed(b, s1, s2)
-    assert [_to_bytes(t) for t in a] == [_to_bytes(t) for t in b]
-
-
-@settings(max_examples=100, deadline=None)
-@given(_hash_pairs)
-def test_cuckoo_chain_delete_keeps_other_keys(pairs):
-    """Deleting any subset never produces a false negative on the rest
-    (the deletion-contract half the crawl relies on). The halves must be
-    disjoint KEY SETS: the filter stores the seen SET (duplicate inserts
-    collapse), so deleting a key removes its one copy for all duplicates —
-    hypothesis found exactly that with pairs=[(0,0),(0,0)]."""
-    uniq = sorted(set(pairs))
-    h1, h2 = _np(uniq)
-    chain = [cuckoo_new(32)]
-    chain_insert_hashed(chain, h1, h2)
-    half = len(uniq) // 2
-    deleted = chain_delete_hashed(chain, h1[:half], h2[:half])
-    assert deleted.all()
-    if len(uniq) > half:
-        assert chain_contains_hashed(chain, h1[half:], h2[half:]).all()
-
-
-@settings(max_examples=100, deadline=None)
-@given(_hash_pairs)
-def test_cuckoo_chain_delete_with_repair_restores_survivors(pairs):
-    """The delete + kept-repair pair (cuckoo_sidecar_delete(kept=...)):
-    after deleting any subset and running chain_reinsert_missing over the
-    survivors, every survivor answers maybe=True — for ANY key set and a
-    tiny first table (forced chaining), i.e. including the cross-sub-filter
-    fingerprint-collision case the raw delete cannot guarantee (ADVICE r4)."""
-    from webcrawler_spark.operators.cuckoo import chain_reinsert_missing
-
-    uniq = sorted(set(pairs))
-    h1, h2 = _np(uniq)
-    chain = [cuckoo_new(16)]
-    chain_insert_hashed(chain, h1, h2)
-    half = len(uniq) // 2
-    chain_delete_hashed(chain, h1[:half], h2[:half])
-    n = chain_reinsert_missing(chain, h1[half:], h2[half:])
-    if len(uniq) > half:
-        assert chain_contains_hashed(chain, h1[half:], h2[half:]).all()
-    else:
-        assert n == 0

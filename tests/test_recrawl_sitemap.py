@@ -365,15 +365,13 @@ def test_robots_cache_states_boundaries(spark):
 
 
 @pytest.mark.slow
-def test_recrawl_job_diff_schedule_and_cuckoo_eviction(spark, tmp_path):
+def test_recrawl_job_diff_schedule_and_eviction(spark, tmp_path):
     """jobs/recrawl.py end-to-end: NEW -> MODIFIED/NOT_MODIFIED/GONE
     classification across passes, bounded history + adaptive schedule, and
-    --evict deleting due urls from url_seen AND the cuckoo sidecar in
-    place (the deletion capability doing its real job)."""
+    --evict deleting due urls from the stopped crawl's url_seen."""
     from jobs.recrawl import run as recrawl_run
     from webcrawler_spark.config import CrawlConfig
     from webcrawler_spark.corpus import generate_corpus
-    from webcrawler_spark.operators.cuckoo import cuckoo_prefilter
     from webcrawler_spark.rounds import run_crawl
     from webcrawler_spark.storage import SnapshotStore
     from pyspark.sql import functions as F
@@ -382,17 +380,17 @@ def test_recrawl_job_diff_schedule_and_cuckoo_eviction(spark, tmp_path):
     pages = spark.createDataFrame(corpus.rows())
     state = str(tmp_path / "state")
 
-    # a stopped cuckoo crawl persists url_seen + cuckoo_sidecar
+    # a stopped crawl persists url_seen
     stops = iter([False, True, True, True])
     res = run_crawl(
         spark, pages, corpus.seeds[0], CrawlConfig(max_depth=2),
-        store=SnapshotStore(state), seen_filter="cuckoo",
+        store=SnapshotStore(state),
         stop=lambda: next(stops), with_processor=False,
     )
     assert res.stopped
     store = SnapshotStore(state)
     m = store.load_manifest()
-    assert "cuckoo_sidecar" in m.tables and "url_seen" in m.tables
+    assert "url_seen" in m.tables
 
     snap1 = str(tmp_path / "snap1")
     pages.write.parquet(snap1)
@@ -426,7 +424,6 @@ def test_recrawl_job_diff_schedule_and_cuckoo_eviction(spark, tmp_path):
     assert s2["new"] == 0
     # every url in snapshot 2 is exactly one of modified / not_modified
     assert s2["modified"] + s2["not_modified"] == len(all_urls) - 1
-    assert s2["sidecar"] == "cuckoo_deleted_in_place"
     assert s2["evicted_from_seen"] == len(seen_before & changed)
 
     # url_seen shrank by exactly the evicted urls
@@ -435,26 +432,13 @@ def test_recrawl_job_diff_schedule_and_cuckoo_eviction(spark, tmp_path):
     }
     assert seen_before - seen_after == seen_before & changed
 
-    # the updated sidecar answers definite-new for evicted urls and still
-    # has no false negatives for the kept ones
-    m2 = store.load_manifest()
-    side = store.read_table(spark, "cuckoo_sidecar", m2.tables["cuckoo_sidecar"])
-    evicted_df = spark.createDataFrame(
-        [(u,) for u in sorted(seen_before & changed)], "url string"
-    )
-    new, maybe = cuckoo_prefilter(evicted_df, side)
-    assert maybe.count() == 0 and new.count() == len(seen_before & changed)
-    kept_df = spark.createDataFrame([(u,) for u in sorted(seen_after)], "url string")
-    n2, m2_ = cuckoo_prefilter(kept_df, side)
-    assert n2.count() == 0
-
 
 @pytest.mark.slow
 def test_resume_after_evict_readmits_due_urls(spark, tmp_path):
     """The full evict-then-resume loop (ADVICE r4 high): jobs/recrawl.py
-    --evict commits url_seen / cuckoo_sidecar at versions NEWER than the
-    stop snapshot; run_crawl(resume=True) must load those (not the stale
-    stop-version tables) so the due urls are re-admitted — and, with the
+    --evict commits url_seen at a version NEWER than the stop snapshot;
+    run_crawl(resume=True) must load that one (not the stale stop-version
+    table) so the due urls are re-admitted — and, with the
     processor on (_vis = _dup), re-traversed, i.e. actually refetched in
     the next round's frontier join. With the pre-fix resume (pinned at
     start_depth) the re-admitted set is empty."""
@@ -479,7 +463,7 @@ def test_resume_after_evict_readmits_due_urls(spark, tmp_path):
 
         return run_crawl(
             spark, pages, entry, cfg, store=SnapshotStore(state),
-            seen_filter="cuckoo", stop=stop, with_processor=True,
+            stop=stop, with_processor=True,
         )
 
     # ---- control: stop → resume, NO eviction; harvest the links each
@@ -487,8 +471,8 @@ def test_resume_after_evict_readmits_due_urls(spark, tmp_path):
     state_c = str(tmp_path / "control")
     assert stopped_run(state_c).stopped
     store_c = SnapshotStore(state_c)
-    run_crawl(spark, pages, entry, cfg, store=store_c, seen_filter="cuckoo",
-              resume=True, with_processor=True)
+    run_crawl(spark, pages, entry, cfg, store=store_c, resume=True,
+              with_processor=True)
     encountered = set()
     for d in (1, 2):
         encountered |= {
@@ -519,12 +503,11 @@ def test_resume_after_evict_readmits_due_urls(spark, tmp_path):
         spark, snap2, state_e, now="2025-06-01 02:00:00",
         horizon_ms=int(1.2 * 3_600_000), evict=True,
     )
-    assert s2["sidecar"] == "cuckoo_deleted_in_place"
     evicted = seen_before & changed
     assert s2["evicted_from_seen"] == len(evicted) > 0
 
-    res = run_crawl(spark, pages, entry, cfg, store=store_e,
-                    seen_filter="cuckoo", resume=True, with_processor=True)
+    res = run_crawl(spark, pages, entry, cfg, store=store_e, resume=True,
+                    with_processor=True)
 
     # re-admitted = evicted urls the resumed rounds re-encountered as links;
     # they re-enter url_seen with a resumed-round first_depth

@@ -1,2 +1,3 @@
-"""Distributed operators: frontier ordering/dedup/admission, bloom sidecar,
-and the training-data ops (dedup, similarity, text stats)."""
+"""Distributed crawl operators: frontier ordering, exact URL-seen dedup,
+admission, robots, content and domain gates, recrawl scheduling, retry,
+as-of joins and sitemaps."""

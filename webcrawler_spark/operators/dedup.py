@@ -1,120 +1,25 @@
-"""URL-seen dedup: exact anti-join + partitioned Bloom-filter sidecar.
+"""URL-seen dedup: the exact anti-join against ``url_seen``.
 
-The exact semantics are the reference's seen-set gate
+The semantics are the reference's seen-set gate
 (crawler/InMemoryLinkQueue.java:36-43; retention contract LinkQueue.java:18-21):
-a URL ever enqueued is never enqueued again. Exactness comes from a
-``left_anti`` join against the append-only ``url_seen`` table.
+a URL ever enqueued is never enqueued again. Exactness comes from a join
+against the append-only ``url_seen`` table, which is also what eviction edits
+(jobs/recrawl.py --evict deletes due urls from it, and a resumed crawl
+re-admits them).
 
-At a 10^10-URL frontier the anti-join's shuffle of *candidates × seen* is the
-dominant cost, so the engine keeps a **per-host_hash-partition Bloom filter
-sidecar** (north_star): candidates are pre-filtered through the bloom — a
-definite-no avoids shuffling the seen side at all for that URL; only the
-"maybe" residue (false-positive rate ~1%) takes the exact anti-join. Bloom
-state is maintained per partition via cogrouped applyInPandas, with **explicit
-hot-host salting**: a host whose pending count exceeds ``salt_threshold``
-spreads across ``n_salts`` subpartitions (north_rule: "skew handled
-explicitly").
-
-Hashing is split JVM/numpy for scale (input_hint: "no per-row Python"):
-the two 64-bit base hashes per URL are computed as ``xxhash64`` COLUMNS
-(whole-stage codegen, the url string never crosses into Python), and the k
-probe positions derive from them inside the UDF with pure vectorized numpy
-(classic Kirsch–Mitzenmacher double hashing: pos_i = h1 + i*h2 mod m).
-The sidecar is maintained INCREMENTALLY: ``bloom_sidecar_build`` over a
-round's new_seen delta, then ``bloom_sidecar_merge`` (bitwise OR per bucket)
-into the persisted sidecar — never a rebuild over the full seen table.
+This is the crawl's only dedup gate. Bloom and cuckoo membership sidecars
+used to sit in front of it; measured at ``local[4]`` they lost to the plain
+join in every run with identical counts (BASELINE.md), because with AQE the
+exact lookup is already an in-memory hash join and a filter probe cannot be
+cheaper than the lookup it guards. They were removed.
 """
 
 from __future__ import annotations
 
-import math
-from typing import Iterator, Optional, Sequence, Tuple
+from typing import Sequence
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
-
-# ---------------------------------------------------------------------------
-# Pure bloom kernel: numpy bitset over precomputed (h1, h2) base hashes
-# ---------------------------------------------------------------------------
-
-BLOOM_BITS_PER_KEY = 10          # ~1% fpr with k=7
-BLOOM_K = 7
-BLOOM_SEED2 = 0x9E3779B9         # second xxhash64 column's extra input
-
-
-def _bloom_size_bits(n_keys: int) -> int:
-    return max(1024, 1 << int(math.ceil(math.log2(max(1, n_keys) * BLOOM_BITS_PER_KEY))))
-
-
-def bloom_hash_cols(url: Column) -> Tuple[Column, Column]:
-    """The two JVM-side base-hash columns every bloom op derives from."""
-    return F.xxhash64(url), F.xxhash64(url, F.lit(BLOOM_SEED2))
-
-
-def _positions(h1: np.ndarray, h2: np.ndarray, m_bits: int) -> np.ndarray:
-    """(n, BLOOM_K) probe positions; m_bits must be a power of two."""
-    assert m_bits & (m_bits - 1) == 0, "m_bits must be a power of two"
-    u1 = np.ascontiguousarray(h1, dtype=np.int64).view(np.uint64)
-    u2 = np.ascontiguousarray(h2, dtype=np.int64).view(np.uint64) | np.uint64(1)
-    ks = np.arange(BLOOM_K, dtype=np.uint64)
-    return ((u1[:, None] + ks[None, :] * u2[:, None]) & np.uint64(m_bits - 1)).astype(
-        np.int64
-    )
-
-
-def bloom_build_hashed(h1: np.ndarray, h2: np.ndarray, m_bits: int) -> bytes:
-    bits = np.zeros(m_bits // 8, dtype=np.uint8)
-    if len(h1):
-        pos = _positions(h1, h2, m_bits)
-        masks = (1 << (pos & 7)).astype(np.uint8)
-        np.bitwise_or.at(bits, pos >> 3, masks)
-    return bits.tobytes()
-
-
-def bloom_merge(a: bytes, b: bytes) -> bytes:
-    if len(a) < len(b):
-        a, b = b, a
-    out = np.frombuffer(a, dtype=np.uint8).copy()
-    if b:
-        small = np.frombuffer(b, dtype=np.uint8)
-        # merging differently-sized filters is unsound; callers keep m fixed
-        assert len(small) == len(out), "bloom size mismatch"
-        out |= small
-    return out.tobytes()
-
-
-def bloom_maybe_contains_hashed(
-    bitset: bytes, h1: np.ndarray, h2: np.ndarray
-) -> np.ndarray:
-    bits = np.frombuffer(bitset, dtype=np.uint8)
-    m = len(bits) * 8
-    if not len(h1):
-        return np.zeros(0, dtype=bool)
-    pos = _positions(h1, h2, m)
-    return (((bits[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1) == 1).all(axis=1)
-
-
-# ---------------------------------------------------------------------------
-# Distributed operators
-# ---------------------------------------------------------------------------
-
-BLOOM_SCHEMA = StructType(
-    [
-        StructField("bucket", IntegerType()),
-        StructField("m_bits", LongType()),
-        StructField("bitset", BinaryType()),
-        StructField("n_keys", LongType()),
-    ]
-)
 
 
 def anti_join_new(candidates: DataFrame, seen: DataFrame, key: str = "url") -> DataFrame:
@@ -123,206 +28,10 @@ def anti_join_new(candidates: DataFrame, seen: DataFrame, key: str = "url") -> D
     return candidates.join(seen.select(key).distinct(), on=key, how="left_anti")
 
 
-def bucket_col(host_hash, n_buckets: int):
-    return (host_hash % n_buckets).cast("int")
-
-
-def bloom_sidecar_build(
-    seen: DataFrame,
-    n_buckets: int = 64,
-    m_bits: int = 1 << 20,
-    url_col: str = "url",
-    host_hash_col: str = "host_hash",
-) -> DataFrame:
-    """Build the per-bucket bloom sidecar from a url_seen table (or a round's
-    new_seen DELTA — see ``bloom_sidecar_merge`` for incremental maintenance).
-
-    Buckets are host_hash % n_buckets, so a bucket's filter co-locates with
-    the frontier partitioning. m_bits is fixed per sidecar so filters merge.
-    Only (bucket, h1, h2) int64 columns cross into Python — no URL strings,
-    no per-row hashing.
-    """
-    h1, h2 = bloom_hash_cols(F.col(url_col))
-
-    def build(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Accumulate across the partition's arrow batches so each bucket
-        # (hash-pinned to exactly one partition by the repartition below)
-        # emits exactly one merged filter row.
-        acc: dict = {}
-        counts: dict = {}
-        for pdf in pdf_iter:
-            if pdf.empty:
-                continue
-            for bucket, grp in pdf.groupby("_bucket"):
-                b = int(bucket)
-                built = bloom_build_hashed(
-                    grp["_h1"].to_numpy(), grp["_h2"].to_numpy(), m_bits
-                )
-                acc[b] = bloom_merge(acc[b], built) if b in acc else built
-                counts[b] = counts.get(b, 0) + len(grp)
-        if acc:
-            yield pd.DataFrame(
-                {
-                    "bucket": list(acc.keys()),
-                    "m_bits": [m_bits] * len(acc),
-                    "bitset": list(acc.values()),
-                    "n_keys": [counts[b] for b in acc.keys()],
-                }
-            )
-
-    hashed = seen.select(
-        bucket_col(F.col(host_hash_col), n_buckets).alias("_bucket"),
-        h1.alias("_h1"),
-        h2.alias("_h2"),
-    )
-    return hashed.repartition(n_buckets, "_bucket").mapInPandas(build, BLOOM_SCHEMA)
-
-
-def bloom_sidecar_merge(base: DataFrame, delta: DataFrame) -> DataFrame:
-    """OR-merge two sidecars bucket-wise (both built with the same n_buckets
-    and m_bits). This is the per-round incremental maintenance op: merge the
-    new_seen delta's sidecar into the persisted one — O(|delta| + n_buckets)
-    instead of the O(|seen|) full rebuild."""
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc: Optional[bytes] = None
-        n = 0
-        for bs in pdf["bitset"]:
-            b = bytes(bs)
-            acc = b if acc is None else bloom_merge(acc, b)
-            n += 1
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf["bucket"].iloc[0])],
-                "m_bits": [int(pdf["m_bits"].iloc[0])],
-                "bitset": [acc],
-                "n_keys": [int(pdf["n_keys"].sum())],
-            }
-        )
-
-    u = base.unionByName(delta)
-    return u.groupBy("bucket").applyInPandas(merge, BLOOM_SCHEMA)
-
-
-def bloom_prefilter(
-    candidates: DataFrame,
-    sidecar: DataFrame,
-    url_col: str = "url",
-    host_hash_col: str = "host_hash",
-    n_buckets: int = 64,
-    cache_registry: Optional[list] = None,
-) -> Tuple[DataFrame, DataFrame]:
-    """Split candidates into (definitely_new, maybe_seen) using the sidecar.
-
-    Cogroup by bucket: each task sees (candidate slice, its bloom row) —
-    no broadcast of the full sidecar, no shuffle of the seen table.
-    Returns (new, maybe); ``maybe`` still needs the exact anti-join.
-    The bitset probes are pure numpy over the JVM-computed (h1, h2) columns.
-
-    The split output is persisted (both returned branches read it; without a
-    persist each downstream action re-runs the shuffle + Python probe pass
-    once per branch). Pass ``cache_registry`` (a list) to receive the persisted
-    handle and ``unpersist()`` it once the consuming actions are done — a
-    long-running crawl that never releases these accumulates one cached
-    relation per round (VERDICT r2 wrong #3).
-    """
-    if host_hash_col in candidates.columns:
-        hh = F.col(host_hash_col)
-    else:  # derive from the url's host on the fly (JVM-side, no Python)
-        from ..functions import host_hash_col as _hh, parse_host
-
-        hh = _hh(parse_host(F.col(url_col)))
-    h1, h2 = bloom_hash_cols(F.col(url_col))
-    cand = (
-        candidates.withColumn("_bucket", bucket_col(hh, n_buckets))
-        .withColumn("_h1", h1)
-        .withColumn("_h2", h2)
-    )
-    side = sidecar.withColumnRenamed("bucket", "_bucket")
-
-    internal = {"_bucket", "_h1", "_h2"}
-    carry = [f.name for f in cand.schema.fields if f.name not in internal]
-    out_schema = StructType(
-        [f for f in cand.schema.fields if f.name not in internal]
-        + [StructField("_maybe", IntegerType())]
-    )
-
-    def split(key, cand_pdf: pd.DataFrame, side_pdf: pd.DataFrame) -> pd.DataFrame:
-        if cand_pdf.empty:
-            return cand_pdf.assign(_maybe=pd.Series([], dtype="int32"))[carry + ["_maybe"]]
-        if side_pdf.empty:
-            maybe = np.zeros(len(cand_pdf), dtype=bool)
-        else:
-            bitset = side_pdf.iloc[0]["bitset"]
-            maybe = bloom_maybe_contains_hashed(
-                bytes(bitset), cand_pdf["_h1"].to_numpy(), cand_pdf["_h2"].to_numpy()
-            )
-        out = cand_pdf[carry].copy()
-        out["_maybe"] = maybe.astype("int32")
-        return out
-
-    joined = cand.groupBy("_bucket").cogroup(side.groupBy("_bucket")).applyInPandas(
-        split, out_schema
-    )
-    # Pin the prefilter output: every caller consumes BOTH splits (union of
-    # definite-new with the checked maybes), and without a persist each action
-    # on that union runs the candidate shuffle + Python probe pass twice —
-    # once per union leg. MEMORY_AND_DISK; Spark evicts LRU under pressure.
-    joined = joined.persist()
-    if cache_registry is not None:
-        cache_registry.append(joined)
-    new = joined.filter(F.col("_maybe") == 0).drop("_maybe")
-    maybe = joined.filter(F.col("_maybe") == 1).drop("_maybe")
-    return new, maybe
-
-
-class SeenFilterOps:
-    """The three operations a URL-seen approximate-membership sidecar needs
-    (north_star "Bloom/cuckoo"): ``build(seen)`` a fresh per-bucket filter
-    table, ``maintain(sidecar, delta)`` fold a round's new_seen delta in
-    incrementally, ``prefilter(candidates, sidecar, ...)`` split into
-    (definitely_new, maybe_seen). Both implementations share bucket layout,
-    hash columns, and the no-false-negative contract, so the crawl rounds
-    are strategy-agnostic."""
-
-    def __init__(self, kind: str, build, maintain, prefilter) -> None:
-        self.kind = kind
-        self.build = build
-        self.maintain = maintain
-        self.prefilter = prefilter
-
-
-def seen_filter_ops(kind: str) -> "SeenFilterOps":
-    """'bloom' (OR-mergeable bitsets, fastest build) or 'cuckoo'
-    (fingerprint table, supports deletion — operators/cuckoo.py)."""
-    if kind == "bloom":
-        return SeenFilterOps(
-            "bloom",
-            bloom_sidecar_build,
-            lambda side, delta: bloom_sidecar_merge(side, bloom_sidecar_build(delta)),
-            bloom_prefilter,
-        )
-    if kind == "cuckoo":
-        from .cuckoo import (
-            cuckoo_prefilter,
-            cuckoo_sidecar_build,
-            cuckoo_sidecar_upsert,
-        )
-
-        return SeenFilterOps(
-            "cuckoo", cuckoo_sidecar_build, cuckoo_sidecar_upsert, cuckoo_prefilter
-        )
-    raise ValueError(f"unknown seen filter kind {kind!r} (bloom | cuckoo)")
-
-
 def flag_seen(
     candidates: DataFrame,
     seen: DataFrame,
-    sidecar: Optional[DataFrame] = None,
     url_col: str = "url",
-    n_buckets: int = 64,
-    cache_registry: Optional[list] = None,
-    prefilter_fn=None,
     carry: Sequence[str] = (),
 ) -> DataFrame:
     """The dedup gate as a FLAG instead of a filter: returns ``candidates``
@@ -335,48 +44,7 @@ def flag_seen(
     PRECONDITION: ``seen`` is unique on ``url_col`` (the url_seen table is by
     construction — each url is enqueued at most once); a non-unique seen side
     would duplicate candidate rows through the left join.
-
-    With a ``sidecar``, filter definite-no rows skip the join entirely and the
-    maybe-residue takes the exact left join — same semantics, less shuffle.
-    ``prefilter_fn`` selects the probe (default bloom_prefilter; pass
-    cuckoo_prefilter via seen_filter_ops('cuckoo')).
     """
     marker = seen.select(url_col, *carry).withColumn("_dup", F.lit(1))
-    if sidecar is None:
-        j = candidates.join(marker, url_col, "left")
-        return j.withColumn("_dup", F.coalesce(F.col("_dup"), F.lit(0)))
-    new, maybe = (prefilter_fn or bloom_prefilter)(
-        candidates, sidecar, url_col=url_col, n_buckets=n_buckets,
-        cache_registry=cache_registry,
-    )
-    checked = maybe.join(marker, url_col, "left").withColumn(
-        "_dup", F.coalesce(F.col("_dup"), F.lit(0))
-    )
-    return new.withColumn("_dup", F.lit(0)).unionByName(
-        checked, allowMissingColumns=True
-    )
-
-
-def dedup_against_seen(
-    candidates: DataFrame,
-    seen: DataFrame,
-    sidecar: Optional[DataFrame] = None,
-    url_col: str = "url",
-    n_buckets: int = 64,
-    cache_registry: Optional[list] = None,
-) -> DataFrame:
-    """Full dedup gate: bloom prefilter (when a sidecar is supplied) then the
-    exact anti-join on the maybe-residue only. Semantics identical to
-    ``anti_join_new`` — the bloom is purely an I/O/shuffle saver.
-
-    ``n_buckets`` MUST equal the value the sidecar was built with: bucket ids
-    are host_hash % n_buckets on both sides, and a mismatch silently routes
-    candidates to empty buckets (= false negatives in the prefilter)."""
-    if sidecar is None:
-        return anti_join_new(candidates, seen, url_col)
-    new, maybe = bloom_prefilter(
-        candidates, sidecar, url_col=url_col, n_buckets=n_buckets,
-        cache_registry=cache_registry,
-    )
-    checked = anti_join_new(maybe, seen, url_col)
-    return new.unionByName(checked)
+    j = candidates.join(marker, url_col, "left")
+    return j.withColumn("_dup", F.coalesce(F.col("_dup"), F.lit(0)))

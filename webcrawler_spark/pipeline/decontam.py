@@ -11,7 +11,7 @@ Plan shape at 100 TB: the eval side is benchmark-sized (thousands of docs) —
 its distinct hashed grams broadcast everywhere; the corpus side explodes its
 grams (the unavoidable cost, ~|tokens| rows) into a broadcast semi-join, so
 the only wide op is the final distinct on flagged doc keys. At extreme eval
-sizes, swap the broadcast for a bloom filter built from the eval grams and
+sizes, swap the broadcast for a membership filter built from the eval grams and
 re-check survivors exactly — same join key either way.
 
 Tokenization/gram conventions mirror ``textprep`` (and the DuckDB oracle in

@@ -26,9 +26,9 @@ Scale shapes:
   KMV distinct-count estimator: D ≈ (k-1) · H / h_k for hash range H.
 
 The reference has no sketch surface (its seen-set is an exact in-memory Set,
-`InMemoryLinkQueue.java:34`); these extend the engine the same way the Bloom
-sidecar does for membership (operators/dedup.py) — bounded state standing in
-for unbounded exactness, with the error knob explicit.
+`InMemoryLinkQueue.java:34`, kept exact by operators/dedup.py); these
+sketches add bounded state standing in for unbounded exactness, with the
+error knob explicit, where an estimate is all a caller needs.
 """
 
 from __future__ import annotations

@@ -72,14 +72,6 @@ def shingles_col(toks: Column, k: int) -> Column:
     return F.array_distinct(runs)
 
 
-def minhash_col(shingles: Column, seed: int) -> Column:
-    """Min over shingles of sha256(seed:shingle) — one minhash coordinate.
-    Lexicographic min over fixed-width hex == numeric min over the digest."""
-    return F.array_min(
-        F.transform(shingles, lambda s: F.sha2(F.concat(F.lit(f"{seed}:"), s), 256))
-    )
-
-
 def dot_double(a: Column, b: Column) -> Column:
     """Σ a_i*b_i in index order, computed in double (inputs cast first so
     Spark and DuckDB see identical float64 operands)."""

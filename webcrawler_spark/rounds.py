@@ -93,7 +93,7 @@ from .operators.admission import (
     timed_admit,
 )
 from .operators.contentgate import skip_status_col, split_gated
-from .operators.dedup import flag_seen, seen_filter_ops
+from .operators.dedup import flag_seen
 from .operators.ordering import first_occurrence
 from .storage import Manifest, SnapshotStore
 from .udfs import extract_schema_with, make_extract_pages, normalize_url_udf
@@ -334,8 +334,8 @@ def _fill_lineage_hosts(lineage: List[dict], seen: DataFrame, seed_rows: int) ->
 
 
 class _AsyncDF:
-    """Run a DataFrame-producing callable (an eager checkpoint, typically) on
-    a background thread so its Spark job overlaps with the caller's next
+    """Run a DataFrame-producing callable (a round table's durability write)
+    on a background thread so its Spark job overlaps with the caller's next
     foreground job — Spark schedulers accept concurrent job submission from
     multiple driver threads. ``result()`` joins and re-raises any error."""
 
@@ -356,11 +356,6 @@ class _AsyncDF:
         if self._err is not None:
             raise self._err
         return self._out
-
-
-def _resolve_df(df):
-    """DataFrame-or-_AsyncDF -> DataFrame (join the background checkpoint)."""
-    return df.result() if isinstance(df, _AsyncDF) else df
 
 
 def _running(flag_zero_col: str, w: Window) -> Column:
@@ -520,7 +515,6 @@ def _crawl(
     with_processor: bool,
     robots: Optional[DataFrame],
     store: Optional[SnapshotStore],
-    seen_filter: Optional[str],
     crawl_ts: str,
     stop,
     resume: bool,
@@ -534,8 +528,6 @@ def _crawl(
     round's parse output is a complete raw doc.
     """
     _t0 = time.monotonic()
-    # url-seen sidecar strategy ('bloom' | 'cuckoo'); None = exact joins only
-    _sf = seen_filter_ops(seen_filter) if seen_filter else None
     res = CrawlResult(queue=None, seen=None, visited=None, docs=None)  # type: ignore[arg-type]
     traverse, n_seeds = _seed_frontier(spark, entry_url, timings=res.timings)
     if traverse is None:
@@ -602,10 +594,6 @@ def _crawl(
     # joined before any manifest commit (a committed manifest must never
     # reference a half-written table)
     pending_writes: List[_AsyncDF] = []
-    # the seen-filter sidecar is built AFTER the resume block below: a resume
-    # either loads the persisted sidecar table or rebuilds from the restored
-    # seen set — building one from the seed seen here would be thrown away
-    sidecar = None
     if policy.delays is not None:
         policy.host_state = spark.createDataFrame(
             [], "host string, next_allowed_ts long"
@@ -647,19 +635,6 @@ def _crawl(
         ]
         if policy.delays is not None:
             policy.host_state = store.read_table(spark, "host_state", rnd)
-        _sv = m.tables.get(f"{_sf.kind}_sidecar") if _sf is not None else None
-        if _sv is not None and int(_sv) >= rnd:
-            # the stop path persisted the sidecar — load it instead of the
-            # O(|seen|) rebuild (at 10^10 seen URLs the rebuild is a full
-            # table pass before the next round). The manifest version may be
-            # NEWER than the stop round: jobs/recrawl.py --evict deletes due
-            # fingerprints in place and commits the sidecar at version+1
-            # (ADVICE r4). A snapshot older than the stop point falls
-            # through to the rebuild.
-            sidecar = store.read_table(spark, f"{_sf.kind}_sidecar", int(_sv))
-
-    if _sf is not None and sidecar is None:
-        sidecar = _sf.build(seen).localCheckpoint(eager=True)
 
     stopped = False
     while (
@@ -741,15 +716,10 @@ def _crawl(
             first = first_occurrence(
                 accepted.drop("depth"), "url", ["parent_rank", "link_pos"]
             )
-        round_caches: List[DataFrame] = []
-        # join the previous round's background sidecar checkpoint here — it
-        # has been overlapping with this round's parse job up to this point
-        sidecar = _resolve_df(sidecar) if sidecar is not None else None
         # (a deferred traversal may push a url enqueued in an earlier round;
         # its raw doc needs that queue position, so the seen join carries it)
         flagged = flag_seen(
-            first, seen, sidecar=sidecar, cache_registry=round_caches,
-            prefilter_fn=_sf.prefilter if _sf is not None else None,
+            first, seen,
             carry=("pos",) if defers and with_processor else (),
         )
         # _vis = 0 marks a url this round pushes to the pending frontier
@@ -836,11 +806,6 @@ def _crawl(
                     )[1]
                 )
             )
-        # the round table is pinned; nothing re-reads the bloom prefilter
-        # cache after this point — release it or a deep crawl accumulates
-        # one cached relation per round
-        for c in round_caches:
-            c.unpersist()
         _phase(res.timings, f"r{rnd}_mat", _tm)
         _ts = time.monotonic()
 
@@ -915,13 +880,6 @@ def _crawl(
         )
         seen = seen.unionByName(new_seen)
         queue_size += n_new
-        if _sf is not None:
-            # the delta maintenance + checkpoint runs on a BACKGROUND thread:
-            # the next round resolves it right before flag_seen, so it
-            # overlaps with the next round's parse job (_AsyncDF). bloom:
-            # OR-merge of the delta's bitsets; cuckoo: in-place upsert.
-            merged = _sf.maintain(sidecar, new_seen)
-            sidecar = _AsyncDF(lambda m=merged: m.localCheckpoint(eager=True))
 
         traverse = round_tbl.filter(F.col("grank").isNotNull()).select(*fcols)
         visited = visited.unionByName(
@@ -974,8 +932,8 @@ def _crawl(
         if stopped:
             # stopCrawl(): commit the exact round boundary so resume=True
             # picks up here — pending frontier, visited set, lineage so far,
-            # the timed clocks and the sidecar, then the scalar counters in
-            # the manifest (atomic commit last)
+            # the timed clocks, then the scalar counters in the manifest
+            # (atomic commit last)
             for table, df in (
                 ("frontier", traverse),
                 ("visited", visited.select("url")),
@@ -984,11 +942,6 @@ def _crawl(
             ):
                 if df is not None:
                     store.write_table(df, table, rnd)
-            if _sf is not None and sidecar is not None:
-                # persist the sidecar so resume loads ~n_buckets filter rows
-                # instead of rebuilding from the full seen table
-                store.write_table(_resolve_df(sidecar), f"{_sf.kind}_sidecar", rnd)
-                m.tables[f"{_sf.kind}_sidecar"] = rnd
             m.committed_round = rnd - 1
             m.meta["stopped_next_depth"] = rnd
             m.meta.update(
@@ -1037,7 +990,6 @@ def run_crawl(
     config: CrawlConfig,
     store: Optional[SnapshotStore] = None,
     with_processor: bool = True,
-    seen_filter: Optional[str] = None,
     crawl_ts: str = "2025-06-01 00:00:00",
     stop=None,
     resume: bool = False,
@@ -1066,7 +1018,7 @@ def run_crawl(
     return _crawl(
         spark, pages, entry_url, config, _Admission(),
         enqueue_seeds=with_processor, with_processor=with_processor,
-        robots=None, store=store, seen_filter=seen_filter, crawl_ts=crawl_ts,
+        robots=None, store=store, crawl_ts=crawl_ts,
         stop=stop, resume=resume,
     )
 
@@ -1079,7 +1031,6 @@ def run_polite_crawl(
     robots: Optional[DataFrame] = None,
     store: Optional[SnapshotStore] = None,
     with_processor: bool = True,
-    seen_filter: Optional[str] = None,
     salt_threshold: Optional[int] = None,
     n_salts: int = 16,
     delays: Optional[DataFrame] = None,
@@ -1136,7 +1087,7 @@ def run_polite_crawl(
         # an unbounded crawl without robots is exactly run_crawl
         enqueue_seeds=with_processor or policy.defers or robots is not None,
         with_processor=with_processor,
-        robots=robots, store=store, seen_filter=seen_filter, crawl_ts=crawl_ts,
+        robots=robots, store=store, crawl_ts=crawl_ts,
         stop=stop, resume=resume, max_rounds=max_rounds,
     )
 

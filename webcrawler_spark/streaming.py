@@ -379,7 +379,7 @@ def _read_sketch_state(sketch_dir: str) -> Optional[dict]:
                 best = max(best, int(m.group(1)))
     if best == 0:
         return None
-    # Each version carries a sidecar v=N.meta.json (written before the
+    # Each version carries a metadata file v=N.meta.json (written before the
     # manifest commit; kept OUTSIDE the parquet dir so readers never trip on
     # a non-parquet file), so recovery knows which batch the surviving
     # version already folded — a replayed micro-batch is NOT folded twice.
@@ -467,7 +467,7 @@ def cms_monitor(
         vdir = os.path.join(sketch_dir, f"v={nv}")
         delta.write.mode("overwrite").parquet(vdir)
         # Commit protocol (same tmp-file + os.replace discipline as
-        # SnapshotStore, storage.py): (1) per-version fold-metadata sidecar,
+        # SnapshotStore, storage.py): (1) per-version fold-metadata file,
         # so manifest loss never replays an already-folded batch;
         # (2) atomic manifest swap — a crash at any byte leaves either the
         # old complete manifest or the new complete one, never a torn file.
