@@ -472,8 +472,8 @@ def q_stream_events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming: watermarked 1-day tumbling windows over the
     events stream, drained with Trigger.AvailableNow into a memory sink.
     Only windows the final watermark (max(ts) − 2 days) closed are emitted —
-    a deterministic, SQL-checkable subset (streaming.windowed_status_counts
-    pattern; reference has no streaming ops, SURVEY §2.9)."""
+    a deterministic, SQL-checkable subset (reference has no streaming ops,
+    SURVEY §2.9)."""
     import tempfile
     import uuid
 
@@ -4047,8 +4047,8 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Letterbox resize geometry over decoded dims (multimodal.resize_plan):
     pure JVM column algebra chained onto the Arrow-batched decode — out dims
     + scale for a 224×224 target. The pixel resample slots into the same
-    mapInPandas seam (codec libs absent; decode_image_real is the honest
-    stub)."""
+    mapInPandas seam (codec libs absent; a real codec plugs in as
+    decode_batch's decoder)."""
     from webcrawler_spark.pipeline.multimodal import decode_batch, resize_plan
 
     d = _t(spark, sf_dir, "documents").select(

@@ -96,6 +96,13 @@ def main() -> int:
         config.per_host_budget = args.per_host_budget
     if args.max_pages is not None:
         config.max_pages = args.max_pages
+    if config.obey_robots and not args.robots:
+        # the robots gate needs a robots table; crawling without one would
+        # silently ignore the config's request
+        raise SystemExit(
+            "config sets obeyRobotsTxt: true but no --robots table was given; "
+            "pass --robots robots.parquet or set obeyRobotsTxt to false"
+        )
 
     spark = get_spark(app_name="crawl")
     # Warm the JVM (codegen/JIT) and the Python worker pool before the timed

@@ -191,25 +191,20 @@ def test_domain_gate_semantics(spark):
 
 
 def test_domain_gate_seq_and_df_paths_agree(spark):
-    from webcrawler_spark.operators.domaingate import split_domains
+    from webcrawler_spark.operators.domaingate import SKIPPED_BLACKLISTED, tag_domains
 
     hosts = [f"h{i}.dom{i % 5}.com" for i in range(40)]
     black_seq = ["dom1.com", "dom3.com"]
     black_df = spark.createDataFrame([(d,) for d in black_seq], "domain string")
-    a1, s1 = split_domains(_frontier(spark, hosts), blacklist=black_seq)
-    a2, s2 = split_domains(_frontier(spark, hosts), blacklist=black_df)
-    assert sorted(r.host for r in a1.collect()) == sorted(r.host for r in a2.collect())
-    assert sorted(r.host for r in s1.collect()) == sorted(r.host for r in s2.collect())
-    # blacklist-only: no whitelist status can appear
-    assert {r.domain_gate_status for r in s1.collect()} == {"SKIPPED_DOMAIN_BLACKLISTED"}
 
+    def statuses(blacklist):
+        tagged = tag_domains(_frontier(spark, hosts), blacklist=blacklist)
+        return {r.url: r.domain_gate_status for r in tagged.collect()}
 
-def test_domain_gate_off_is_identity(spark):
-    from webcrawler_spark.operators.domaingate import split_domains
-
-    f = _frontier(spark, ["x.com"])
-    adm, skipped = split_domains(f)
-    assert skipped is None and adm is f
+    seq, df = statuses(black_seq), statuses(black_df)
+    assert seq == df
+    # blacklist-only: no whitelist status can appear, and both outcomes occur
+    assert set(seq.values()) == {None, SKIPPED_BLACKLISTED}
 
 
 def test_domain_gate_plan_strategies(spark):

@@ -74,3 +74,57 @@ def test_registry_oracle_and_window_keys_agree():
     missing = [k for k in entry_mod._DRIVER_WINDOW_R5 if k not in registry]
     assert missing == [], f"driver window names unregistered queries {missing}"
     assert set(entry_mod.queries()) == set(registry) == set(entry_mod.oracle_sql())
+
+
+# Public engine definitions that no program file calls, kept on purpose.
+_UNCALLED_ALLOWED = {
+    "write_parquet": "the corpus writer; tests/conftest.py writes its test corpora with it",
+    "reset": "storage.reset is the only implementation of queue reset (SURVEY §2.1 F4)",
+    "search_topk_snippets": "SURVEY §2.10 build-brief search surface",
+    "read_warc_files": "SURVEY §2.10 build-brief WARC reader",
+    "warc_to_pages": "SURVEY §2.10 build-brief WARC-to-pages projection",
+}
+
+
+def _program_files(repo):
+    dirs = ("webcrawler_spark", "jobs", "tools", "perfbench")
+    files = [p for d in dirs for p in sorted((repo / d).rglob("*.py"))]
+    files += [repo / "bench.py", repo / "__spark_entry__.py"]
+    return [p for p in files if not p.name.startswith("test_") and p.name != "conftest.py"]
+
+
+def _references(path):
+    """Name tokens of a module, strings and comments dropped, minus the name
+    of each ``def``/``class`` statement (a definition is not a use)."""
+    import io
+    import tokenize
+
+    refs, prev = [], None
+    for tok in tokenize.generate_tokens(io.StringIO(path.read_text()).readline):
+        if tok.type == tokenize.NAME and prev not in ("def", "class"):
+            refs.append(tok.string)
+        if tok.type not in (tokenize.NL, tokenize.NEWLINE, tokenize.COMMENT):
+            prev = tok.string
+    return refs
+
+
+def test_every_public_engine_definition_has_a_caller():
+    """Each public module-level def/class in ``webcrawler_spark/`` is named by
+    some program file (not a test); the only exceptions are listed above with
+    their reason, and each of those must still be uncalled."""
+    import ast
+    from collections import Counter
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    used = Counter(n for p in _program_files(repo) for n in _references(p))
+    uncalled = set()
+    for p in sorted((repo / "webcrawler_spark").rglob("*.py")):
+        for node in ast.parse(p.read_text()).body:
+            kinds = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            if isinstance(node, kinds) and not node.name.startswith("_"):
+                if not used[node.name]:
+                    uncalled.add(f"{p.relative_to(repo)}:{node.name}")
+    dead = sorted(u for u in uncalled if u.split(":")[1] not in _UNCALLED_ALLOWED)
+    assert dead == [], f"engine definitions only tests call: {dead}"
+    assert {u.split(":")[1] for u in uncalled} == set(_UNCALLED_ALLOWED)

@@ -431,13 +431,6 @@ def test_decode_batch_matches_local_fake(spark, blobs):
     assert got == local
 
 
-def test_decode_real_is_stub(spark):
-    from webcrawler_spark.pipeline.multimodal import decode_image_real
-
-    with pytest.raises(NotImplementedError):
-        decode_image_real(b"\x89PNG")
-
-
 def test_frame_sample_shape(spark, blobs):
     from webcrawler_spark.pipeline.multimodal import frame_sample
 

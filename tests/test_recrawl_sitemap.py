@@ -15,7 +15,7 @@ def spark():
 
 
 def test_recrawl_diff_all_statuses(spark):
-    from webcrawler_spark.operators.recrawl import fetch_set, recrawl_diff
+    from webcrawler_spark.operators.recrawl import recrawl_diff
 
     prev = spark.createDataFrame(
         [("u1", "h1"), ("u2", "h2"), ("u3", "h3")], "url string, hash string"
@@ -30,9 +30,6 @@ def test_recrawl_diff_all_statuses(spark):
         "u3": "GONE",
         "u4": "NEW",
     }
-    # the parse/index job consumes only NEW + MODIFIED
-    fs = {r["url"] for r in fetch_set(recrawl_diff(prev, cur)).collect()}
-    assert fs == {"u2", "u4"}
 
 
 def test_recrawl_diff_empty_prev_is_all_new(spark):
@@ -113,29 +110,6 @@ def test_recrawl_conditional_carries_validators_forward(spark):
     }
     assert got["u-304"] == ('"e1"', lm)
     assert got["u-200"] == ('"e2-v2"', None)
-
-
-def test_conditional_fetch_plan_headers(spark):
-    from webcrawler_spark.operators.recrawl import conditional_fetch_plan
-
-    lm = "Mon, 01 Jan 2024 00:00:00 GMT"
-    prev = spark.createDataFrame(
-        [
-            ("u1", "h", '"e1"', lm),
-            ("u2", "h", None, lm),
-            ("u3", "h", None, None),
-        ],
-        _COND_PREV,
-    )
-    got = {
-        r["url"]: (r["if_none_match"], r["if_modified_since"], r["conditional"])
-        for r in conditional_fetch_plan(prev).collect()
-    }
-    assert got == {
-        "u1": ('"e1"', lm, True),
-        "u2": (None, lm, True),
-        "u3": (None, None, False),
-    }
 
 
 def test_sitemap_entries_limit_order_and_trim(spark):

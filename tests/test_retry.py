@@ -62,21 +62,3 @@ def test_retry_max_attempts_truncates(spark):
     rows = [("x", 1, 503, None), ("x", 2, 500, None), ("x", 3, 200, None)]
     got = _resolve(spark, rows, max_attempts=2)
     assert got["x"] == (500, 2, 2000, "DEAD_LETTER")
-
-
-def test_dead_letter_table(spark):
-    from webcrawler_spark.operators.retry import (
-        dead_letter_table,
-        resolve_fetch_attempts,
-    )
-
-    rows = [
-        ("ok", 1, 200, None),
-        ("dl", 1, 503, None), ("dl", 2, 503, None), ("dl", 3, 503, None),
-    ]
-    df = spark.createDataFrame(
-        rows, "url string, attempt int, http_status int, retry_after_ms long"
-    )
-    dl = dead_letter_table(resolve_fetch_attempts(df)).collect()
-    assert [r["url"] for r in dl] == ["dl"]
-    assert dl[0]["final_status"] == 503

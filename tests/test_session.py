@@ -6,7 +6,9 @@ and job flags own crawl settings.
 - no engine module reads environment knobs (the one read is the driver heap
   for a plain-Python JVM launch);
 - a reference-shaped WebCrawlerConfig.json loads, its HTTP/queue/index keys
-  ignored.
+  ignored;
+- a config asking for robots compliance without a robots table is refused
+  before any session starts.
 """
 
 import ast
@@ -113,6 +115,28 @@ def test_env_lint_sees_every_read_shape(tmp_path):
     assert sorted(_env_reads(mod), key=str) == sorted(
         [(2, None), (3, "A"), (4, "B"), (5, "C"), (6, None)], key=str
     )
+
+
+def test_crawl_job_refuses_obey_robots_without_table(tmp_path):
+    """``obeyRobotsTxt: true`` with no ``--robots`` exits non-zero naming the
+    flag, before ``get_spark``: JAVA_HOME points nowhere, so a session start
+    would fail with a gateway error instead of this message."""
+    cfg = tmp_path / "crawl.json"
+    cfg.write_text(json.dumps({"obeyRobotsTxt": True, "maxDepth": 0}))
+    env = dict(os.environ, JAVA_HOME=str(tmp_path / "no-java"))
+    r = subprocess.run(
+        [
+            sys.executable, str(REPO / "jobs" / "crawl.py"),
+            "--pages", str(tmp_path / "pages.parquet"),
+            "--entry", "https://h.example.com/", "--state-dir", str(tmp_path / "state"),
+            "--config", str(cfg),
+        ],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert r.returncode != 0
+    assert "obeyRobotsTxt" in r.stderr and "--robots" in r.stderr, r.stderr[-3000:]
+    assert "JAVA_GATEWAY" not in r.stderr and r.stdout == ""
+    assert not (tmp_path / "state").exists()
 
 
 def test_reference_shaped_config_loads():

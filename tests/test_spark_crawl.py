@@ -542,6 +542,21 @@ def test_docs_pass_same_rows_pinned_or_lazy(spark, pages_df, small_corpus):
     assert rows(_raw_docs_pin(spark, None, 0)) == lazy
 
 
+@pytest.mark.parametrize(
+    "content_rules", [None, {"minCharacter": 80, "tagName": "p"}], ids=["rules-less", "rules"]
+)
+def test_docs_pass_records_tail_size(spark, pages_df, small_corpus, content_rules):
+    """Both docs plans record how many queue urls the docs pass fetches and
+    parses itself: at depth 0 round 0 parses the seeds, the tail is every
+    harvested child."""
+    seeds = small_corpus.seeds
+    cfg = CrawlConfig(max_depth=0, content_rules=content_rules)
+    res = run_crawl(spark, pages_df, seeds, cfg)
+    tail = [t for t in res.timings if t["phase"] == "docs_tail"]
+    assert tail == [{"phase": "docs_tail", "rows": res.urls_enqueued - len(seeds)}]
+    assert tail[0]["rows"] > 0
+
+
 def _stop_after(n_rounds):
     """stopCrawl() test double: returns True once ``n_rounds`` rounds ran
     (the callback is polled once at the top of every round)."""

@@ -1,133 +1,8 @@
-"""Structured Streaming surface: the availableNow drain must equal the batch
-pipeline on the same input (stream/batch unification), and the watermarked
-window aggregation must emit exactly the finalized windows."""
+"""Structured Streaming surface: the stateful sessionizer, first-seen dedup
+and the count-min monitor each drain with Trigger.AvailableNow and must equal
+their batch twins, exactly once across re-runs on the same checkpoint."""
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
-
-
-@pytest.fixture(scope="module")
-def pages_dir(small_corpus, tmp_path_factory):
-    """Pages split across two parquet files (two ingest 'arrivals')."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    out = str(tmp_path_factory.mktemp("stream-pages"))
-    rows = small_corpus.rows()
-    mid = len(rows) // 2
-    for i, chunk in enumerate((rows[:mid], rows[mid:])):
-        tbl = pa.table(
-            {
-                "url": [r["url"] for r in chunk],
-                "warc_ts": pa.array(
-                    [r["warc_ts"] for r in chunk], pa.timestamp("us", tz="UTC")
-                ),
-                "html": pa.array([r["html"] for r in chunk], pa.binary()),
-                "text": [r["text"] for r in chunk],
-                "lang": [r["lang"] for r in chunk],
-            }
-        )
-        pq.write_table(tbl, f"{out}/part-{i}.parquet")
-    return out
-
-
-def _config():
-    from webcrawler_spark.config import CrawlConfig
-
-    return CrawlConfig.from_dict(
-        {"contentRules": {"minCharacter": 80, "tagName": "p"}}
-    )
-
-
-def test_available_now_drain_equals_batch(spark, pages_dir, tmp_path):
-    from webcrawler_spark.streaming import (
-        docs_stream,
-        read_pages_stream,
-        run_available_now,
-    )
-
-    cfg = _config()
-    stream = docs_stream(read_pages_stream(spark, pages_dir), cfg)
-    out = str(tmp_path / "docs-out")
-    ckpt = str(tmp_path / "ckpt")
-    run_available_now(stream, out, ckpt)
-
-    got = spark.read.parquet(out)
-    batch_pages = spark.read.parquet(pages_dir)
-    from webcrawler_spark.streaming import docs_stream as _ds  # same projection
-
-    # batch twin: identical transformations on the static relation
-    expected = _ds(batch_pages, cfg)
-
-    g = {(r["id"], r["content_length"], r["hash"]) for r in got.collect()}
-    e = {(r["id"], r["content_length"], r["hash"]) for r in expected.collect()}
-    assert g == e and len(g) == batch_pages.count()
-
-    # extraction really ran: the min-80-char <p> rule yields nonzero content
-    assert got.agg(F.sum("content_length")).collect()[0][0] > 0
-
-
-def test_available_now_is_incremental(spark, pages_dir, tmp_path):
-    """Re-running on an unchanged input drains nothing new (checkpoint offsets
-    — the cron consumer's idempotent wake-drain-stop cycle)."""
-    from webcrawler_spark.streaming import (
-        docs_stream,
-        read_pages_stream,
-        run_available_now,
-    )
-
-    cfg = _config()
-    out = str(tmp_path / "docs-out")
-    ckpt = str(tmp_path / "ckpt")
-    for _ in range(2):
-        stream = docs_stream(read_pages_stream(spark, pages_dir), cfg)
-        run_available_now(stream, out, ckpt)
-    n = spark.read.parquet(out).count()
-    assert n == spark.read.parquet(pages_dir).count()  # no duplicates
-
-
-def test_windowed_status_counts_finalized_windows(spark, pages_dir, tmp_path):
-    from webcrawler_spark.streaming import (
-        docs_stream,
-        read_pages_stream,
-        run_available_now,
-        windowed_status_counts,
-    )
-
-    cfg = _config()
-    win, wm = "1 day", "2 days"
-    stream = windowed_status_counts(
-        docs_stream(read_pages_stream(spark, pages_dir), cfg), win, wm
-    )
-    out = str(tmp_path / "win-out")
-    ckpt = str(tmp_path / "wckpt")
-    run_available_now(stream, out, ckpt)
-    got = {
-        (r["win_start"], r["status"], r["n_docs"], r["total_chars"])
-        for r in spark.read.parquet(out).collect()
-    }
-
-    # batch expectation restricted to windows the final watermark closed:
-    # watermark = max(event time) - wm; a window emits iff win_end <= watermark
-    docs_b = docs_stream(spark.read.parquet(pages_dir), cfg)
-    max_ts = docs_b.agg(F.max("crawl_ts")).collect()[0][0]
-    exp_all = (
-        docs_b.groupBy(F.window("crawl_ts", win).alias("w"), "status")
-        .agg(F.count("*").alias("n"), F.sum("content_length").alias("c"))
-        .collect()
-    )
-    import datetime
-
-    cutoff = max_ts - datetime.timedelta(days=2)
-    expected = {
-        (r["w"]["start"], r["status"], r["n"], r["c"])
-        for r in exp_all
-        if r["w"]["end"] <= cutoff
-    }
-    assert got == expected
-    assert len(got) > 0  # the 30-day corpus spread must close most windows
 
 
 def test_stateful_sessionize_matches_batch_twin(spark, tmp_path):

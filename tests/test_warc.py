@@ -141,36 +141,3 @@ def test_entry_roundtrip_matches_duckdb_oracle(spark):
     want = {r[0]: tuple(r[1:]) for r in con.execute(entry._WARC_SQL).fetchall()}
     assert len(got) == len(want) > 0
     assert got == want
-
-
-def test_stream_warc_ingest_incremental_and_exactly_once(spark, tmp_path):
-    """Streaming WARC ingest: shards drain incrementally into the pages
-    table; re-running the drain on the same checkpoint ingests NOTHING new
-    (exactly-once), and a shard landing later is picked up alone."""
-    from webcrawler_spark.sources.warc import stream_warc_files, warc_to_pages
-    from webcrawler_spark.streaming import run_available_now
-
-    src = tmp_path / "drop"; src.mkdir()
-    out = str(tmp_path / "pages"); ckpt = str(tmp_path / "ckpt")
-    (src / "s0.warc.gz").write_bytes(write_warc_bytes(
-        [("https://a.test/%d" % i, "2025-01-01T00:00:00Z", b"A%d" % i) for i in range(4)]
-    ))
-
-    def drain():
-        stream = warc_to_pages(stream_warc_files(spark, str(src), max_files_per_trigger=1))
-        run_available_now(stream, out, ckpt)
-
-    drain()
-    got = spark.read.parquet(out)
-    assert got.count() == 4
-
-    drain()                                   # nothing new -> no duplicates
-    assert spark.read.parquet(out).count() == 4
-
-    (src / "s1.warc").write_bytes(write_warc_bytes(
-        [("https://b.test/0", "2025-01-02T00:00:00Z", b"B0")], gzip_members=False
-    ))
-    drain()                                   # only the new shard ingests
-    final = spark.read.parquet(out)
-    assert final.count() == 5
-    assert final.filter("url = 'https://b.test/0'").count() == 1

@@ -108,9 +108,6 @@ class IndexCatalog:
             shutil.rmtree(table_dir)
         return True
 
-    def index_exists(self, name: str) -> bool:
-        return name in self._load()["indexes"]
-
     def get_settings(self, name: str) -> dict:
         cat = self._load()
         if name not in cat["indexes"]:

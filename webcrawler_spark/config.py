@@ -36,7 +36,7 @@ class CrawlConfig:
     pages: List[PageConfig] = field(default_factory=list)
     # engine-only extensions (reference README design, not in its code):
     per_host_budget: Optional[int] = None      # politeness: URLs/host/round
-    obey_robots: bool = False
+    obey_robots: bool = False                  # jobs/crawl.py needs --robots for it
     # virtual round length for timed politeness (README.md:55-57 designs
     # politenessDelayMs 2000 ≈ 5 fetches per 10 s window): round r spans
     # [r·W, (r+1)·W) ms and per-host next_allowed_ts carries between rounds

@@ -22,7 +22,6 @@ from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
 from typing import Dict, List, Optional, Tuple
 
-from .kernel.dom import parse
 from .kernel.extract import extract_page
 
 EPOCH = datetime(2025, 6, 1, tzinfo=timezone.utc)
@@ -48,10 +47,6 @@ class SyntheticCorpus:
     # ignoreHttpErrors(true) means non-200 pages still parse -> OK docs carry
     # their real http status (WebPageProcessor.java:149-153,176).
     meta: Dict[str, Tuple[int, int]] = field(default_factory=dict)
-
-    def html_of(self, url: str) -> Optional[str]:
-        row = self.pages.get(url)
-        return row[1] if row else None
 
     def rows(self) -> List[dict]:
         out = []

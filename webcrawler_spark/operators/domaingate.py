@@ -19,7 +19,7 @@ Semantics (documented order, matching how operators reason about lists):
 2. whitelist second — when a whitelist is configured, any domain NOT on it
    is skipped with ``SKIPPED_DOMAIN_NOT_WHITELISTED`` (allowlist-only
    crawls: vertical search, sanctioned-domain corpora).
-3. both off → the gate is inert and callers keep it out of the plan.
+3. both off → every row is admitted (status NULL).
 
 Scale: a list is a dimension relation, never frontier-sized. Two physical
 strategies, chosen by input type:
@@ -125,25 +125,3 @@ def tag_domains(
         if aux in out.columns:
             out = out.drop(aux)
     return out
-
-
-def split_domains(
-    frontier: DataFrame,
-    blacklist: Optional[DomainList] = None,
-    whitelist: Optional[DomainList] = None,
-    host_col: str = "host",
-) -> Tuple[DataFrame, Optional[DataFrame]]:
-    """Split the frontier into (admitted, skipped-with-status).
-
-    ``skipped`` is None when both lists are off — and ``admitted`` is the
-    untouched input, zero plan delta, mirroring contentgate.split_gated.
-    """
-    if blacklist is None and whitelist is None:
-        return frontier, None
-    tagged = tag_domains(frontier, blacklist, whitelist, host_col=host_col)
-    admitted = (
-        tagged.filter(F.col("domain_gate_status").isNull())
-        .drop("domain_gate_status", "reg_domain")
-    )
-    skipped = tagged.filter(F.col("domain_gate_status").isNotNull())
-    return admitted, skipped

@@ -60,38 +60,6 @@ def recrawl_diff(
     return j.select("url", status.alias("status"), "prev_hash", "cur_hash")
 
 
-def fetch_set(diff: DataFrame) -> DataFrame:
-    """The slice the parse/index job actually processes: NEW + MODIFIED."""
-    return diff.filter(F.col("status").isin(NEW, MODIFIED)).select("url", "cur_hash")
-
-
-def conditional_fetch_plan(prev: DataFrame, url_col: str = "url") -> DataFrame:
-    """The request-header table a recrawl fetcher derives from the prior
-    snapshot BEFORE any fetch (the gap README.md:149 leaves open: without
-    stored validators a recrawl cannot know which urls are 304-skippable
-    until it has already paid for the body).
-
-    ``prev``: (url, etag, last_modified, ...). Returns per url the
-    conditional-request headers (RFC 9110 §13.1):
-
-    - ``if_none_match``     = stored ETag (strong validator, wins when both
-      are present — §13.1.2: a server evaluates If-None-Match first)
-    - ``if_modified_since`` = stored Last-Modified timestamp
-    - ``conditional``       = either validator present: the fetch can be a
-      conditional GET; false = plain unconditional GET (full body always).
-
-    Pure projection — zero shuffle; at 10^10 urls this column-prunes to the
-    three validator columns of the snapshot scan."""
-    return prev.select(
-        F.col(url_col).alias("url"),
-        F.col("etag").alias("if_none_match"),
-        F.col("last_modified").alias("if_modified_since"),
-        (F.col("etag").isNotNull() | F.col("last_modified").isNotNull()).alias(
-            "conditional"
-        ),
-    )
-
-
 def recrawl_conditional(
     prev: DataFrame,
     cur: DataFrame,

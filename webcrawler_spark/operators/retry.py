@@ -103,11 +103,3 @@ def resolve_fetch_attempts(
         .otherwise(F.lit(FAILED))
         .alias("outcome"),
     )
-
-
-def dead_letter_table(resolved: DataFrame) -> DataFrame:
-    """The dead-letter list (README.md:161): urls whose transient failures
-    exhausted the retry budget — the re-crawl seed set for a later job."""
-    return resolved.filter(F.col("outcome") == DEAD_LETTER).select(
-        "url", "final_status", "n_attempts", "total_backoff_ms"
-    )

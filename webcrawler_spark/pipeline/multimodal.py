@@ -3,11 +3,10 @@
 Media payloads are opaque ``binary`` columns with typed metadata, exactly how
 a 100 TB crawl stores them (WARC payload bytes next to the url row). What is
 REAL here and tested: the schema, the Arrow batch shape, the mapInPandas UDF
-signatures, partitioning-friendly metadata derivation. What is STUBBED: the
-actual codec decode — this container has no PIL/ffmpeg — behind
-``decode_image_real`` raising NotImplementedError, with ``decode_image_fake``
-as a deterministic byte-derived stand-in so the distributed plumbing is
-end-to-end testable.
+signatures, partitioning-friendly metadata derivation. No codec library
+(PIL/ffmpeg) is a dependency: ``decode_image_fake`` is a deterministic
+byte-derived stand-in so the distributed plumbing is end-to-end testable, and
+a real decoder plugs in through ``decode_batch(decoder=...)``.
 
 Operators:
 - ``with_media_meta``   — JVM-side metadata: byte length, sha256, magic-byte
@@ -28,7 +27,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
     IntegerType,
     LongType,
@@ -62,20 +60,8 @@ def with_media_meta(df: DataFrame, blob_col: str = "blob") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Decoders (pluggable). Real one is a stub: no media libs in this container.
+# Decoders (pluggable through decode_batch's ``decoder`` argument).
 # ---------------------------------------------------------------------------
-
-def decode_image_real(data: bytes) -> Tuple[int, int, int]:
-    """Decode image dimensions with a real codec library.
-
-    STUB: PIL/libvips are not installed in this environment. The Spark-side
-    plumbing (schema, batching, partitioning) is identical for any decoder —
-    swap this in on a cluster with the codec baked into the image.
-    """
-    raise NotImplementedError(
-        "image codec not available in this environment; use decode_image_fake"
-    )
-
 
 def decode_image_fake(data: bytes) -> Tuple[int, int, int]:
     """Deterministic byte-derived fake decode: (width, height, channels) as a
@@ -177,8 +163,8 @@ def resize_plan(
 
     This is the metadata half of a resize stage — pure JVM column algebra
     (zero Python, zero shuffle); the pixel resampling itself plugs into the
-    same mapInPandas seam as decode_batch (no codec libs in this sandbox —
-    see decode_image_real). At 100 TB the geometry runs in the scan's
+    same mapInPandas seam as decode_batch (a real codec is passed as its
+    ``decoder``). At 100 TB the geometry runs in the scan's
     codegen stage for free and the resample stage reads only rows whose
     (out_w, out_h) != (width, height) if pass-through is allowed.
     """

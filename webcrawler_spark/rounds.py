@@ -134,8 +134,7 @@ LINEAGE_SCHEMA = StructType(
 # point where building the driver-side hash relation costs more than it saves.
 # Shuffling the multi-KB html payload is ~30-50× the frontier's bytes, so the
 # ceiling is set generously high (256 MB ≈ 2.8M url rows); beyond it the join
-# degrades to shuffle — a cluster deployment co-locates by bucketing pages and
-# frontier on url instead.
+# degrades to a shuffle of both sides.
 FRONTIER_ROW_BYTES = 96
 BROADCAST_MAX_BYTES = 256 * 1024 * 1024
 
@@ -1251,6 +1250,9 @@ def process_queue(
         q = q.join(raw_docs.select("url"), "url", "left_anti")
         if queue_rows is not None:
             queue_rows = max(0, queue_rows - (raw_rows or 0))
+    if timings is not None and queue_rows is not None:
+        # the tail size: queue urls no round admitted, fetched and parsed here
+        timings.append({"phase": "docs_tail", "rows": queue_rows})
 
     if queue_rows is not None and queue_rows * FRONTIER_ROW_BYTES <= BROADCAST_MAX_BYTES:
         # broadcast the queue: the pages table (html payload) streams through

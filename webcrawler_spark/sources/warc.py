@@ -273,21 +273,3 @@ def warc_to_pages(records: DataFrame) -> DataFrame:
         F.lit(None).cast("string").alias("text"),
         F.lit(None).cast("string").alias("lang"),
     )
-
-
-def stream_warc_files(spark: SparkSession, path: str, max_files_per_trigger=None) -> DataFrame:
-    """STREAMING twin of ``read_warc_files``: incrementally ingest WARC
-    shards as they land (the Common-Crawl drop-folder pattern) into response
-    rows. ``binaryFile`` is a file-stream source, so the exactly-once
-    contract comes from the sink checkpoint: a shard is parsed once, a crash
-    resumes from the last committed batch, and ``maxFilesPerTrigger`` bounds
-    micro-batch size (ingest backpressure). Combine with
-    ``warc_to_pages`` + ``streaming.run_available_now`` for the cron-style
-    wake -> drain -> stop cycle the reference's scheduler implies (O4)."""
-    reader = spark.readStream.format("binaryFile").schema(
-        "path string, modificationTime timestamp, length long, content binary"
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    files = reader.load(path)
-    return read_warc_bytes(files, "content")

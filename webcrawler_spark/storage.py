@@ -268,34 +268,3 @@ class InvertedDocStore:
         if t is None:
             raise FileNotFoundError("inverted_docs table not committed")
         return t.limit(limit)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    spark: SparkSession,
-    name: str,
-    key: str,
-    n_buckets: int,
-    path: Optional[str] = None,
-) -> DataFrame:
-    """Bucketed + sorted co-location layout for repeat-joined tables.
-
-    The crawl's hottest join — frontier × pages on url — repeats every round
-    over the same huge pages table. Writing both sides ``bucketBy(n, key)``
-    + ``sortBy(key)`` persists the hash partitioning in the table layout, so
-    every subsequent equi-join on the key runs with ZERO exchange and zero
-    sort (SortMergeJoin directly over the bucketed scans). On a real cluster
-    this is the difference between reshuffling 100 TB of pages per round and
-    never shuffling them at all (rounds.py:115 documents the deployment
-    story; this helper is the mechanism). Bucket count should match the
-    cluster's target parallelism and, like shuffle partitions, be a number
-    both tables agree on.
-
-    Returns the table as a DataFrame (read back through the catalog so the
-    bucketing metadata is live for the optimizer).
-    """
-    w = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, key).sortBy(key)
-    if path is not None:
-        w = w.option("path", path)
-    w.saveAsTable(name)
-    return spark.table(name)

@@ -6,20 +6,19 @@ The reference has no true streaming operators (SURVEY §2.9: "Streaming ops:
 none — the 3-min cron + pull queue is micro-batch-like"), so this module is
 the Spark-native upgrade path rather than a parity requirement:
 
-- ``read_pages_stream``     — incremental ingest of newly-landed page files
-  (the "crawler keeps writing, processor keeps consuming" loop).
-- ``docs_stream``           — the same vectorized extraction kernel applied to
-  the stream; stateless transforms are batch/stream agnostic in Spark, so the
-  whole doc pipeline (WebPageProcessor semantics) is reused verbatim.
-- ``windowed_status_counts``— event-time windowed per-status doc counts with a
-  watermark for late pages (the O3 status aggregation, continuously).
 - ``run_available_now``     — drain-everything-then-stop execution
   (``Trigger.AvailableNow``): exactly the cron consumer's "wake, drain queue,
   stop" contract, with exactly-once sink semantics from the checkpoint dir.
+- ``first_seen``            — exactly-once first arrival per key (the
+  streaming twin of the frontier seen-set).
+- ``cms_monitor``           — a count-min sketch folded across micro-batches
+  (``read_sketch`` reads its latest committed version).
+- ``sessionize_stateful``   — per-user inactivity-gap sessions with
+  ``applyInPandasWithState``.
 
-At scale this is the ingestion story: the fetch fleet appends parquet/Iceberg
-files; this job incrementally extracts + indexes them with bounded state
-(watermark) and per-micro-batch lineage, resumable from its checkpoint.
+``PAGES_SCHEMA`` is the schema a page-file stream is read with
+(``jobs/monitor.py``). Documents are built only by ``rounds.process_queue``;
+this module runs no extraction of its own.
 """
 
 from __future__ import annotations
@@ -36,15 +35,6 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .config import CrawlConfig
-from .functions import (
-    content_hash_segments,
-    content_length_col,
-    doc_id_col,
-    parse_host,
-)
-from .udfs import extract_schema_with, make_extract_pages
-
 PAGES_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -54,82 +44,6 @@ PAGES_SCHEMA = StructType(
         StructField("lang", StringType()),
     ]
 )
-
-
-def read_pages_stream(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: Optional[int] = None,
-) -> DataFrame:
-    """Incremental scan of a pages parquet directory (input_hint schema).
-
-    ``maxFilesPerTrigger`` bounds micro-batch size — the streaming analogue of
-    the per-round admission budget (backpressure, not politeness).
-    """
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
-
-
-def docs_stream(
-    pages: DataFrame,
-    config: CrawlConfig,
-    crawl_ts_col: str = "warc_ts",
-) -> DataFrame:
-    """WebPageProcessor.processUrl over a *stream* of fetched pages.
-
-    The same columns as rounds.process_queue gives an OK row (id, url, domain,
-    crawl_ts, status, title, contents, content_length, hash, language): the
-    extraction kernel (mapInPandas) and all derived-column built-ins are
-    stateless, so Spark runs them unchanged on the unbounded relation.
-    """
-    extract_fn, _ = make_extract_pages(config, carry_cols=["lang", "warc_ts"])
-    out_schema = extract_schema_with(
-        [StructField("lang", StringType()), StructField("warc_ts", TimestampType())]
-    )
-    ex = pages.select("url", "html", "lang", "warc_ts").mapInPandas(extract_fn, out_schema)
-    return ex.select(
-        doc_id_col(F.col("url")).alias("id"),
-        F.col("url"),
-        parse_host(F.col("url")).alias("domain"),
-        F.col(crawl_ts_col).alias("crawl_ts"),
-        F.lit("OK").alias("status"),
-        F.col("title"),
-        F.col("segments").alias("contents"),
-        content_length_col(F.col("segments")).alias("content_length"),
-        F.col("lang").alias("language"),
-        content_hash_segments(F.col("url"), F.col("segments")).alias("hash"),
-    )
-
-
-def windowed_status_counts(
-    docs: DataFrame,
-    window_duration: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "crawl_ts",
-) -> DataFrame:
-    """Per-window, per-status doc counts + content volume with late-data bound.
-
-    The watermark caps state: windows older than max(event time) − watermark
-    are finalized and evicted — this is what makes the aggregation runnable
-    forever at crawl scale (the O3 aggregate, continuously maintained).
-    """
-    return (
-        docs.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_duration).alias("win"), F.col("status"))
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("content_length").alias("total_chars"),
-        )
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "status",
-            "n_docs",
-            "total_chars",
-        )
-    )
 
 
 SESSION_OUT_SCHEMA = (

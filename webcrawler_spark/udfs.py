@@ -1,11 +1,12 @@
 """Vectorized (Arrow/pandas) UDF kernels — the only Python in the hot path.
 
-Three kernels per SURVEY §7 "Built-in vs custom":
+The kernels per SURVEY §7 "Built-in vs custom":
 - ``extract_pages``   — html -> (title, text, segments, links[pos]) via
   mapInPandas; one DOM parse per page, config broadcast.
 - ``normalize_url_udf`` — URL normalization (pandas_udf, arrow batches).
-- ``domain_udf``      — URI host extraction twin of ``parse_url(url,'HOST')``
-  for rows where Java-URI reject semantics matter.
+- ``page_meta_udf``   — meta description + canonical link per page.
+- ``anchor_texts_fn`` — one (url, href, anchor_text, pos) row per link
+  (mapInPandas).
 
 Everything else (hashes, lengths, regex filters, window ranks) stays JVM-side
 in ``functions.py`` built-ins.
@@ -28,7 +29,7 @@ from pyspark.sql.types import (
 
 from .config import CrawlConfig
 from .kernel.extract import extract_page
-from .kernel.urlnorm import domain_of, normalize_url
+from .kernel.urlnorm import normalize_url
 
 # Schema of the fused page-extraction kernel output. ``parse_error`` marks
 # pages the kernel refused/failed to parse (dom.ParseError or any unexpected
@@ -151,11 +152,6 @@ def extract_schema_with(carry_fields: list) -> StructType:
 @F.pandas_udf(StringType())
 def normalize_url_udf(urls: pd.Series) -> pd.Series:
     return urls.map(lambda u: normalize_url(u) if u is not None else None)
-
-
-@F.pandas_udf(StringType())
-def domain_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: domain_of(u) if u is not None else None)
 
 
 META_SCHEMA = StructType(
