@@ -10,23 +10,29 @@ Usage:
 
 Every flag works in every mode: with no politeness flag the crawl admits
 every pending url (plain BFS). Prints one summary JSON line and writes
-queue/docs/url_seen/lineage tables under --state-dir (SnapshotStore layout,
-resumable).
+raw_docs (one version per round), url_seen, docs and lineage tables under
+--state-dir (SnapshotStore layout, resumable; a stop also writes the loop
+state a resume reads).
 """
 
 from __future__ import annotations
 
 import argparse
+import importlib.util
 import json
 import os
 import sys
 import time
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _REPO)
-# local-mode python workers inherit the driver env, not driver sys.path;
-# without this a plain-python launch from outside the repo breaks mapInPandas
-os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
+if importlib.util.find_spec("webcrawler_spark") is None:
+    # no engine on the path (no --py-files): use this checkout. Local-mode
+    # python workers inherit the driver env, not driver sys.path; without
+    # PYTHONPATH a plain-python launch from outside the repo breaks
+    # mapInPandas. With --py-files the driver keeps the shipped engine, the
+    # one its workers import.
+    _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, _REPO)
+    os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 
 def main() -> int:
@@ -79,11 +85,13 @@ def main() -> int:
     ap.add_argument(
         "--expire-keep", type=int, default=None,
         help="after the crawl, expire old table snapshots keeping the last N "
-        "versions per table (the committed version always survives); a deep "
-        "crawl otherwise stores one copy of frontier/url_seen/docs per round",
+        "versions per table (the committed version always survives, and a "
+        "stopped crawl keeps every version until its resume completes); a "
+        "deep crawl otherwise stores one copy of frontier/url_seen/docs per round",
     )
     args = ap.parse_args()
 
+    import webcrawler_spark
     from webcrawler_spark.config import CrawlConfig
     from webcrawler_spark.rounds import run_polite_crawl
     from webcrawler_spark.session import get_spark
@@ -228,6 +236,7 @@ def main() -> int:
         "master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+        "engine": webcrawler_spark.__file__,
     }
     if args.expire_keep is not None:
         expired = store.expire_snapshots(keep_last=args.expire_keep)

@@ -12,9 +12,9 @@ Drives the full recrawl-eviction contract once at corpus scale, end to end:
    re-encounter as links,
 5. verify: evicted == due ∩ seen (from the job's own counts), re-admitted ==
    evicted ∩ links-encountered-in-resumed-rounds (exact set equality from
-   the stored round tables), and report the eviction pass's wall next to a
-   no-evict control pass over the same snapshot so the eviction delta
-   (∝ due-list size) is visible.
+   the links of the resumed rounds' raw_docs), and report the eviction
+   pass's wall next to a no-evict control pass over the same snapshot so the
+   eviction delta (∝ due-list size) is visible.
 
 Usage:
     python jobs/evict_resume_bench.py --corpus /tmp/c4m --cores 16 \
@@ -38,7 +38,11 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def _spark_submit(cores: int, zip_path: str, script: str, *args: str) -> dict:
+def _spark_submit(cores: int, zip_path: str, script: str, *args: str,
+                  trip=None) -> dict:
+    """Run one job to completion and return its JSON summary line. With
+    ``trip`` = (watch, flag), create the file ``flag`` once ``watch`` exists
+    while the job runs."""
     cmd = [
         "taskset", "-c", f"0-{cores - 1}",
         "spark-submit", "--master", f"local[{cores}]",
@@ -46,13 +50,25 @@ def _spark_submit(cores: int, zip_path: str, script: str, *args: str) -> dict:
         "--py-files", zip_path,
         os.path.join(REPO, "jobs", script), *args,
     ]
-    proc = subprocess.run(
-        cmd, capture_output=True, text=True, cwd=tempfile.gettempdir()
-    )
+    # output goes to files, not pipes: the trip loop does not drain them
+    with tempfile.TemporaryFile("w+") as out, tempfile.TemporaryFile("w+") as err:
+        proc = subprocess.Popen(
+            cmd, stdout=out, stderr=err, text=True, cwd=tempfile.gettempdir()
+        )
+        while trip is not None and proc.poll() is None:
+            if os.path.exists(trip[0]):
+                open(trip[1], "w").close()
+                trip = None
+            else:
+                time.sleep(0.5)
+        proc.wait()
+        out.seek(0)
+        err.seek(0)
+        stdout, stderr = out.read(), err.read()
     if proc.returncode != 0:
-        sys.stderr.write(proc.stdout[-2000:] + proc.stderr[-3000:])
+        sys.stderr.write(stdout[-2000:] + stderr[-3000:])
         raise RuntimeError(f"{script} failed rc={proc.returncode}")
-    line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
+    line = [l for l in stdout.splitlines() if l.startswith("{")][-1]
     return json.loads(line)
 
 
@@ -79,23 +95,17 @@ def main() -> int:
         base_dir="webcrawler_spark",
     )
 
-    # ---- 1. stopped crawl: halt once round 0's table lands so the
+    # ---- 1. stopped crawl: halt once round 0's raw_docs lands so the
     # stop triggers at the next boundary (a mid-crawl stop, not a no-op)
     crawl_args = [
         "--pages", pages, "--entry", f"@{seeds}", "--state-dir", state,
         "--max-depth", str(args.max_depth), "--stop-file", stop_file,
     ]
-    import threading
-
-    def _trip():
-        while not os.path.exists(os.path.join(state, "round", "v=0")):
-            time.sleep(0.5)
-        open(stop_file, "w").close()
-
-    t = threading.Thread(target=_trip, daemon=True)
-    t.start()
     t0 = time.monotonic()
-    s_crawl = _spark_submit(args.cores, zip_path, "crawl.py", *crawl_args)
+    s_crawl = _spark_submit(
+        args.cores, zip_path, "crawl.py", *crawl_args,
+        trip=(os.path.join(state, "raw_docs", "v=0"), stop_file),
+    )
     wall_stopped = round(time.monotonic() - t0, 1)
     if not s_crawl.get("stopped"):
         raise RuntimeError("crawl completed before the stop tripped; "
@@ -164,16 +174,20 @@ def main() -> int:
     store = SnapshotStore(state)
     m = store.load_manifest()
     seen = store.read_table(spark, "url_seen", int(m.tables["url_seen"]))
-    # driver only ever holds the bounded evicted slice, never seen/round rows
+    # driver only ever holds the bounded evicted slice, never seen/raw_docs rows
     ev_df = spark.createDataFrame([(u,) for u in sorted(evicted)], "url string")
     readmitted = {
         r.url
         for r in seen.filter(F.col("first_depth") >= resume_from)
         .select("url").join(ev_df, "url", "left_semi").collect()
     }
+    # encountered = the links each resumed round harvested (the job passes
+    # no --config, so no url filter drops any)
     encountered = None
     for d in range(resume_from, args.max_depth + 1):
-        t_r = store.read_table(spark, "round", d).select("url")
+        t_r = store.read_table(spark, "raw_docs", d).select(
+            F.explode("links.href").alias("url")
+        )
         encountered = t_r if encountered is None else encountered.union(t_r)
     if encountered is not None:
         enc = {

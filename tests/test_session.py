@@ -8,15 +8,19 @@ and job flags own crawl settings.
 - a reference-shaped WebCrawlerConfig.json loads, its HTTP/queue/index keys
   ignored;
 - a config asking for robots compliance without a robots table is refused
-  before any session starts.
+  before any session starts;
+- the crawl job's driver imports the engine its workers import.
 """
 
 import ast
 import json
 import os
+import shutil
 import subprocess
 import sys
 from pathlib import Path
+
+import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 
@@ -137,6 +141,34 @@ def test_crawl_job_refuses_obey_robots_without_table(tmp_path):
     assert "obeyRobotsTxt" in r.stderr and "--robots" in r.stderr, r.stderr[-3000:]
     assert "JAVA_GATEWAY" not in r.stderr and r.stdout == ""
     assert not (tmp_path / "state").exists()
+
+
+@pytest.mark.parametrize("with_zip", [True, False], ids=["zip", "checkout"])
+def test_crawl_job_driver_imports_the_workers_engine(tmp_path, with_zip):
+    """jobs/crawl.py's driver imports the engine its workers import: with an
+    engine zip on the path (spark-submit --py-files) the zip's, untouched;
+    without one the checkout's, handed to local-mode workers on PYTHONPATH.
+    Runs only the job's module preamble (no ``main``, no session)."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    engine = str(REPO / "webcrawler_spark" / "__init__.py")
+    pythonpath = str(REPO)
+    if with_zip:
+        pythonpath = shutil.make_archive(
+            str(tmp_path / "engine"), "zip", root_dir=REPO, base_dir="webcrawler_spark"
+        )
+        env["PYTHONPATH"] = pythonpath
+        engine = os.path.join(pythonpath, "webcrawler_spark", "__init__.py")
+    probe = (
+        "import os, runpy, sys; runpy.run_path(sys.argv[1], run_name='crawl_job'); "
+        "import webcrawler_spark; print(webcrawler_spark.__file__); "
+        "print(os.environ['PYTHONPATH'].split(os.pathsep)[0])"
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", probe, str(REPO / "jobs" / "crawl.py")],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert r.stdout.split() == [engine, pythonpath]
 
 
 def test_reference_shaped_config_loads():

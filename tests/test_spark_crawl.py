@@ -6,6 +6,8 @@ identical docs (contents, hashes, lengths) — verified here on the synthetic
 corpus at multiple depths and filter configs.
 """
 
+import os
+
 import pytest
 
 from webcrawler_spark.config import CrawlConfig, PageConfig
@@ -315,16 +317,22 @@ def _run_both_polite(spark, pages_df, corpus, cfg, entry=None, robots=False, **k
     return oracle, result
 
 
-def test_polite_store_commits_round_tables(spark, tiny_pages_df, tiny_corpus, tmp_path):
-    """Polite crawl with a SnapshotStore: the background round-table writes
-    must all be durably on disk by the time the manifest commits (the
-    write-behind contract), and the committed url_seen must equal the run's
-    own queue. The store-vs-storeless queue equality lives in the slow-marked
-    test_polite_queue_order_matches_oracle path (one crawl here, not two —
-    the fast gate pays for the contract, not a duplicate baseline)."""
+@pytest.mark.parametrize(
+    "content_rules", [None, {"minCharacter": 80, "tagName": "p"}], ids=["rules-less", "rules"]
+)
+def test_polite_store_keeps_only_read_tables(
+    spark, tiny_pages_df, tiny_corpus, tmp_path, content_rules
+):
+    """Polite crawl with a SnapshotStore: the store holds only what a resume,
+    a job or a user reads — the manifest, one raw_docs version per round
+    and url_seen (no per-round ``round`` table, no raw_docs version for the
+    docs pass's tail parse, which with content rules is pinned eagerly) —
+    and the committed url_seen equals the run's own queue. The
+    store-vs-storeless queue equality lives in the slow-marked
+    test_polite_queue_order_matches_oracle path."""
     from webcrawler_spark.storage import SnapshotStore
 
-    cfg = CrawlConfig(max_depth=2, per_host_budget=2)
+    cfg = CrawlConfig(max_depth=2, per_host_budget=2, content_rules=content_rules)
     store = SnapshotStore(str(tmp_path / "polite"))
     oracle, r2 = _run_both_polite(
         spark, tiny_pages_df, tiny_corpus, cfg, store=store
@@ -333,8 +341,8 @@ def test_polite_store_commits_round_tables(spark, tiny_pages_df, tiny_corpus, tm
     assert queue == oracle.queue_order
     m = store.load_manifest()
     assert m is not None and m.committed_round == r2.rounds_run
-    for rnd in range(r2.rounds_run):
-        assert store.count_table("round", rnd) >= 0  # written + readable
+    assert sorted(os.listdir(store.root)) == ["MANIFEST.json", "raw_docs", "url_seen"]
+    assert store.list_versions("raw_docs") == list(range(r2.rounds_run))
     committed = store.read_committed(spark, "url_seen")
     assert {r["url"] for r in committed.collect()} == set(queue)
 
@@ -608,6 +616,34 @@ def test_stop_then_resume_matches_straight_run(spark, pages_df, small_corpus, tm
     assert store.load_manifest().meta.get("stopped_next_depth") is None
 
 
+@pytest.mark.slow
+def test_stop_expire_then_resume_matches_straight_run(spark, pages_df, small_corpus, tmp_path):
+    """Snapshot expiry (``jobs/crawl.py --expire-keep``) on a stopped crawl
+    keeps every resume input: the resume still reads raw_docs of every
+    round before the stop, and ends with the queue and docs of a straight
+    run."""
+    from webcrawler_spark.storage import SnapshotStore
+
+    cfg = CrawlConfig(max_depth=2)
+    entry = small_corpus.seeds[0]
+    full = run_crawl(spark, pages_df, entry, cfg)
+
+    store = SnapshotStore(str(tmp_path / "stopexpire"))
+    part = run_crawl(spark, pages_df, entry, cfg, store=store, stop=_stop_after(2))
+    assert part.stopped and part.rounds_run == 2
+    assert store.expire_snapshots(keep_last=1) == {}
+
+    res = run_crawl(spark, pages_df, entry, cfg, store=store, resume=True)
+    assert [r["url"] for r in res.queue.collect()] == [r["url"] for r in full.queue.collect()]
+
+    def docs(r):
+        return sorted(
+            (d["url"], d["status"], d["pos"], d["content_length"]) for d in r.docs.collect()
+        )
+
+    assert docs(res) == docs(full)
+
+
 def _rows(df):
     """Order-free, hashable view of a DataFrame's rows (arrays as tuples)."""
     return sorted(
@@ -812,9 +848,12 @@ def test_polite_stop_then_resume_matches_straight_run(
     assert part.stopped and part.docs is None and part.rounds_run == 2
     m = store.load_manifest()
     assert m is not None and m.meta["stopped_next_depth"] == 2
-    # round 1 deferred urls: they wait in the committed frontier
-    deferred = store.read_table(spark, "round", 1).filter(F.col("_dup").isNull())
-    assert deferred.count() > 0
+    # round 1 deferred urls wait in the committed frontier: a frontier row
+    # ranked below the highest grank round 1 fetched was pending in round 1
+    # and not admitted
+    fetched_hi = store.read_table(spark, "raw_docs", 1).agg(F.max("grank")).first()[0]
+    frontier = store.read_table(spark, "frontier", 2)
+    assert frontier.filter(F.col("grank") < fetched_hi).count() > 0
 
     res = run_polite_crawl(
         spark, tiny_pages_df, tiny_corpus.seeds, cfg, store=store, resume=True

@@ -1,6 +1,8 @@
 """Storage-level operator parity: F4 queue reset, S1 merge-upsert,
 S2 get-by-id, S3 scan-limit (SURVEY §2.1/§2.6)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -173,6 +175,29 @@ def test_expire_snapshots_keeps_committed_and_last_k(spark, tmp_path):
     assert st.list_versions("frontier") == [1, 3, 4]
     # committed version still readable
     assert st.read_committed(spark, "frontier").count() == 10
+
+
+def test_expire_snapshots_keeps_a_stopped_crawl_whole(tmp_path):
+    """While the manifest carries a stop marker every version may be a resume
+    input (the resume reads raw_docs of every round before the stop), so
+    expiry deletes nothing; once a completed resume clears the marker,
+    expiry keeps the last k and the committed versions again."""
+    from webcrawler_spark.storage import Manifest, SnapshotStore
+
+    st = SnapshotStore(str(tmp_path / "s"))
+    for table, versions in (("raw_docs", (0, 1)), ("url_seen", (2,)), ("frontier", (2,))):
+        for v in versions:
+            os.makedirs(os.path.join(st.root, table, f"v={v}"))
+    st.commit(
+        Manifest(committed_round=1, tables={"url_seen": 2}, meta={"stopped_next_depth": 2})
+    )
+    assert st.expire_snapshots(keep_last=1) == {}
+    assert st.list_versions("raw_docs") == [0, 1]
+
+    m = st.load_manifest()
+    del m.meta["stopped_next_depth"]
+    st.commit(m)
+    assert st.expire_snapshots(keep_last=1) == {"raw_docs": [0]}
 
 
 def test_compact_table_preserves_rows_and_commits_new_version(spark, tmp_path):

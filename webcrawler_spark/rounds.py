@@ -47,15 +47,19 @@ ranks lie in [frontier_lo, discovered), so floor((grank-lo)·nb/(discovered-lo))
 is an explicit, deterministic, monotone bucket id — value-determined, hence
 stable across job re-runs without pinning a physical layout.
 
-Checkpoint/resume: with a SnapshotStore, each round's tables are written and
-the manifest commits atomically. ``stop`` halts the crawl at a round boundary
-and commits the loop state; ``resume=True`` continues from it. A re-run of a
-crashed round overwrites its versioned dirs — idempotent by construction.
+Checkpoint/resume: with a SnapshotStore, the crawl writes only tables that a
+resume, a job or a user reads: each round's raw_docs parse, url_seen at the
+end, and on a stop the loop state (frontier, visited, lineage_ckpt,
+host_state); the manifest commits atomically after them. The pinned round
+table and the docs tail's parse stay in executor storage (localCheckpoint):
+nothing reads them after the crawl. ``stop`` halts the crawl at a round
+boundary and commits the loop state; ``resume=True`` continues from it. A
+re-run of a crashed round overwrites its versioned dirs — idempotent by
+construction.
 """
 
 from __future__ import annotations
 
-import threading
 import time
 from dataclasses import dataclass, field
 from functools import reduce
@@ -332,31 +336,6 @@ def _fill_lineage_hosts(lineage: List[dict], seen: DataFrame, seed_rows: int) ->
             l["hosts_served"] = m.get((l["round"], l["partition_id"]), 0)
 
 
-class _AsyncDF:
-    """Run a DataFrame-producing callable (a round table's durability write)
-    on a background thread so its Spark job overlaps with the caller's next
-    foreground job — Spark schedulers accept concurrent job submission from
-    multiple driver threads. ``result()`` joins and re-raises any error."""
-
-    def __init__(self, fn) -> None:
-        self._out: Optional[DataFrame] = None
-        self._err: Optional[BaseException] = None
-        self._t = threading.Thread(target=self._run, args=(fn,), daemon=True)
-        self._t.start()
-
-    def _run(self, fn) -> None:
-        try:
-            self._out = fn()
-        except BaseException as e:  # surfaced at result()
-            self._err = e
-
-    def result(self) -> DataFrame:
-        self._t.join()
-        if self._err is not None:
-            raise self._err
-        return self._out
-
-
 def _running(flag_zero_col: str, w: Window) -> Column:
     """Running count (1-based) of rows whose ``flag_zero_col`` == 0, under a
     rows-unbounded-preceding window. Unlike row_number over a filtered view,
@@ -589,10 +568,6 @@ def _crawl(
     extract_fn, extract_out = _parse_fn(config, carry_fields)
     raw_parts: List[DataFrame] = []
     lineage: List[dict] = []
-    # background round-table durability writes in flight; each MUST be
-    # joined before any manifest commit (a committed manifest must never
-    # reference a half-written table)
-    pending_writes: List[_AsyncDF] = []
     if policy.delays is not None:
         policy.host_state = spark.createDataFrame(
             [], "host string, next_allowed_ts long"
@@ -785,26 +760,17 @@ def _crawl(
                 ),
                 allowMissingColumns=True,
             )
-        # Pin via eager localCheckpoint in BOTH paths; in the store path the
-        # durability parquet write rides a BACKGROUND thread (the round
-        # parquet is only ever read by resume/inspection, never by this
-        # crawl), so its encode+commit overlaps the stats job and the next
-        # round's parse. Joined before any manifest commit — a commit must
-        # never reference an unfinished write. (A CollectMetrics formulation
-        # of the stats was tried and reverted: its accumulator is an
-        # interpreted per-row aggregate whose expression count grows with
-        # shuffle partitions — measured SLOWER than the job it replaced at
-        # 16 cores, and anti-scaling with cluster size.)
+        # Pin via eager localCheckpoint: the stats job and the frontier /
+        # url_seen projections below all read the round table, so it is
+        # evaluated once and held in executor storage. It is never written
+        # to the store: no resume, job or user reads a round table (the
+        # resume inputs are raw_docs, url_seen and the stop snapshot). (A
+        # CollectMetrics formulation of the stats was tried and reverted:
+        # its accumulator is an interpreted per-row aggregate whose
+        # expression count grows with shuffle partitions — measured SLOWER
+        # than the job it replaced at 16 cores, and anti-scaling with
+        # cluster size.)
         round_local = round_local.localCheckpoint(eager=True)
-        if store is not None:
-            pending_writes.append(
-                _AsyncDF(
-                    lambda df=round_local, r=rnd: (
-                        store.write_table(df, "round", r),
-                        df,
-                    )[1]
-                )
-            )
         _phase(res.timings, f"r{rnd}_mat", _tm)
         _ts = time.monotonic()
 
@@ -909,11 +875,6 @@ def _crawl(
         res.rounds_run += 1
         rnd += 1
 
-    # join the background round-table writes (both exits commit a manifest
-    # that references them)
-    for pw in pending_writes:
-        pw.result()
-
     # admit-all rounds are depths, so a completed BFS commits at max_depth;
     # a stopped or deferring crawl commits at its next round
     version = rnd if stopped or defers else max_depth
@@ -975,7 +936,9 @@ def _crawl(
             queue_rows=queue_size,
             raw_docs=reduce(DataFrame.unionByName, raw_parts) if raw_parts else None,
             raw_rows=fetched_total,
-            materialize=_raw_docs_pin(spark, store, version + 1),
+            # only this docs pass reads the tail parse (a resume never
+            # does), so it is pinned in executor storage, not the store
+            materialize=lambda df: df.localCheckpoint(eager=True),
             timings=res.timings,
             has_content_rules=config.has_content_rules or resumed_had_rules,
         )
@@ -1092,11 +1055,10 @@ def run_polite_crawl(
 
 
 def _raw_docs_pin(spark: SparkSession, store, version: int):
-    """Materializer for a parse output, so the page is never parsed again:
-    store-backed as raw_docs[version] when a SnapshotStore exists
-    (resumable, columnar-pruned re-reads), localCheckpoint otherwise. Each
-    round pins its parse with it, the docs pass its tail parse (see
-    process_queue)."""
+    """Materializer for a round's parse output, so the page is never parsed
+    again: store-backed as raw_docs[version] when a SnapshotStore exists
+    (a resume reads the rounds before its stop from it; columnar-pruned
+    re-reads), localCheckpoint otherwise."""
 
     if store is not None:
 
@@ -1222,7 +1184,7 @@ def process_queue(
     queue position. A slim eager job over (url, pos, content key) finds the
     duplicate LOSERS, which broadcast-join back onto the payload — the
     multi-KB contents/links columns never enter a shuffle. ``materialize``
-    (df -> pinned df, e.g. a SnapshotStore write+read) pins the tail parse
+    (df -> pinned df, e.g. an eager localCheckpoint) pins the tail parse
     first, so the losers job and the docs write never parse a page twice;
     without it the tail parse stays lazy and each of the two runs it.
 
@@ -1291,8 +1253,8 @@ def process_queue(
     is_dup = F.lit(False)
     if has_content_rules:
         # compute the content-dedup key INSIDE the parse job so the pinned
-        # table carries it: the losers job below then reads url+pos+_ckey
-        # only (parquet column pruning skips the multi-KB segments payload)
+        # tables carry it: the losers job below then needs url+pos+_ckey
+        # only (column pruning skips the rounds' multi-KB segments payload)
         ex = ex.withColumn("_ckey", _content_key())
         if materialize is not None:
             _tt = time.monotonic()

@@ -134,8 +134,16 @@ class SnapshotStore:
         {table: [expired versions]}. A long crawl otherwise accumulates one
         full copy of frontier/url_seen/docs per round — at 10^10 urls that
         is the dominant storage cost, so expiry is part of the round loop's
-        ops story, not an afterthought."""
+        ops story, not an afterthought.
+
+        While the manifest carries a stop marker (``stopped_next_depth``)
+        nothing is deleted: a resume reads raw_docs of every round before
+        the stop plus the stop's loop-state versions, so every version may
+        be a resume input. A completed resume clears the marker, and expiry
+        works again after it."""
         m = self.load_manifest()
+        if m is not None and m.meta.get("stopped_next_depth") is not None:
+            return {}
         committed = m.tables if m else {}
         expired: Dict[str, list] = {}
         for name in os.listdir(self.root):
