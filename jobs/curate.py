@@ -30,14 +30,19 @@ this is the pipeline the brief's training-data surface exists for.
 from __future__ import annotations
 
 import argparse
+import importlib.util
 import json
 import os
 import sys
 import time
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _REPO)
-os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
+if importlib.util.find_spec("webcrawler_spark") is None:
+    # no engine on the path (no --py-files): use this checkout, and hand it
+    # to local-mode python workers on PYTHONPATH. With --py-files the driver
+    # keeps the shipped engine, the one its workers import.
+    _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, _REPO)
+    os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F

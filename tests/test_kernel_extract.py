@@ -272,6 +272,60 @@ def test_extract_page_propagates_parse_error():
         pass
 
 
+def test_extract_pages_wrapper_contract():
+    """make_extract_pages over one pandas batch (no Spark): one row per input
+    row in input order, exactly the EXTRACT_SCHEMA columns (what the crawl
+    reads: no body text) plus the carried ones, carried values (nulls
+    included) passed through unchanged, and the error shape on null html and
+    on a page that raises ParseError."""
+    import pandas as pd
+
+    from webcrawler_spark.config import CrawlConfig
+    from webcrawler_spark.udfs import EXTRACT_SCHEMA, make_extract_pages
+
+    carry = ["pos", "lang", "warc_ts", "http_status", "fetch_ms"]
+    bad = "<html><body>" + "<div>" * 400 + "x" + "</div>" * 400 + "</body></html>"
+    ok = (
+        "<html><head><title> T </title></head><body><p>one para</p>"
+        '<a href="/b">b</a><a href="mailto:x@y">m</a></body></html>'
+    )
+    pdf = pd.DataFrame(
+        {
+            "url": [f"https://h.example.com/{i}" for i in range(4)],
+            "html": [ok.encode(), b"   ", None, bad.encode()],
+            "pos": [0.0, None, 2.0, 3.0],
+            "lang": ["en", None, "de", None],
+            "warc_ts": pd.to_datetime(["2025-06-01", None, "2025-06-03", None]),
+            "http_status": [200.0, 404.0, None, 200.0],
+            "fetch_ms": [5.0, None, 7.0, 0.0],
+        },
+        index=[10, 11, 12, 13],
+    )
+    fn, _ = make_extract_pages(
+        CrawlConfig(content_rules={"tagName": "p"}), carry_cols=carry
+    )
+    outs = list(fn(iter([pdf])))
+    assert len(outs) == 1
+    out = outs[0].reset_index(drop=True)
+
+    names = ["url", "title", "segments", "links", "parse_error"]
+    assert [f.name for f in EXTRACT_SCHEMA.fields] == names
+    assert list(out.columns) == names + carry
+    assert list(out["url"]) == list(pdf["url"])
+    pd.testing.assert_frame_equal(out[carry], pdf[carry].reset_index(drop=True))
+
+    ok_row, blank, null, broken = out.to_dict("records")
+    assert ok_row["title"] == "T" and ok_row["segments"] == ["one para"]
+    assert ok_row["links"] == [{"href": "https://h.example.com/b", "pos": 0}]
+    assert not ok_row["parse_error"]
+    assert (blank["title"], blank["segments"], blank["links"]) == ("", [], [])
+    assert not blank["parse_error"]
+    for err in (null, broken):
+        assert err["parse_error"]
+        assert err["links"] == []
+        assert err["title"] is None and err["segments"] is None
+
+
 # ---------------------------------------------------------------------------
 # meta description + canonical link (README.md:152 — declared-only)
 # ---------------------------------------------------------------------------

@@ -196,12 +196,12 @@ class TestCorpusGenerator:
         assert sizes[0] >= 2 * sizes[-1]  # hot-host skew present
 
     def test_text_is_kernel_extraction(self):
-        from webcrawler_spark.kernel.extract import extract_page
+        from webcrawler_spark.kernel.extract import body_text
 
         c = generate_corpus(seed=42, n_hosts=3, n_pages=12)
         rows = c.rows()
         for r in rows[:5]:
-            assert r["text"] == extract_page(r["html"].decode(), r["url"]).text
+            assert r["text"] == body_text(r["html"].decode())
 
     def test_oracle_runs_on_corpus(self):
         c = generate_corpus(seed=42, n_hosts=4, n_pages=40)

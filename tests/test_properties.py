@@ -112,13 +112,14 @@ html_hostile = st.lists(
 @given(html_hostile)
 def test_extract_page_total_and_text_normalized(html):
     """The page kernel must be TOTAL on arbitrary input (no crash, ever) and
-    its text output must satisfy the Jsoup text() contract: no leading or
+    the body text must satisfy the Jsoup text() contract: no leading or
     trailing whitespace and no internal whitespace runs."""
-    from webcrawler_spark.kernel.extract import extract_page
+    from webcrawler_spark.kernel.extract import body_text, extract_page
 
     out = extract_page(html, "https://x.test/a")
-    assert out.text == out.text.strip()
-    assert "  " not in out.text and "\n" not in out.text and "\t" not in out.text
+    text = body_text(html)
+    assert text == text.strip()
+    assert "  " not in text and "\n" not in text and "\t" not in text
     for href, pos in out.links:
         assert isinstance(href, str) and isinstance(pos, int)
 
@@ -126,7 +127,8 @@ def test_extract_page_total_and_text_normalized(html):
 @settings(max_examples=100, deadline=None)
 @given(st.binary(max_size=200))
 def test_extract_page_total_on_arbitrary_bytes(raw):
-    from webcrawler_spark.kernel.extract import extract_page
+    from webcrawler_spark.kernel.extract import body_text, extract_page
 
-    out = extract_page(raw, "https://x.test/a")     # bytes: decode w/ replace
-    assert out.text == out.text.strip()
+    extract_page(raw, "https://x.test/a")     # bytes: decode w/ replace
+    text = body_text(raw)
+    assert text == text.strip()

@@ -143,9 +143,20 @@ def test_crawl_job_refuses_obey_robots_without_table(tmp_path):
     assert not (tmp_path / "state").exists()
 
 
-@pytest.mark.parametrize("with_zip", [True, False], ids=["zip", "checkout"])
-def test_crawl_job_driver_imports_the_workers_engine(tmp_path, with_zip):
-    """jobs/crawl.py's driver imports the engine its workers import: with an
+_JOBS = ["crawl", "curate", "index", "monitor", "recrawl"]
+
+
+@pytest.mark.parametrize(
+    "job,with_zip",
+    [(j, z) for j in _JOBS for z in (True, False)],
+    ids=[  # jobs/crawl.py's cases keep their ids, [zip] and [checkout]
+        ("zip" if z else "checkout") + ("" if j == "crawl" else f"-{j}")
+        for j in _JOBS
+        for z in (True, False)
+    ],
+)
+def test_crawl_job_driver_imports_the_workers_engine(tmp_path, job, with_zip):
+    """Each job's driver imports the engine its workers import: with an
     engine zip on the path (spark-submit --py-files) the zip's, untouched;
     without one the checkout's, handed to local-mode workers on PYTHONPATH.
     Runs only the job's module preamble (no ``main``, no session)."""
@@ -159,12 +170,12 @@ def test_crawl_job_driver_imports_the_workers_engine(tmp_path, with_zip):
         env["PYTHONPATH"] = pythonpath
         engine = os.path.join(pythonpath, "webcrawler_spark", "__init__.py")
     probe = (
-        "import os, runpy, sys; runpy.run_path(sys.argv[1], run_name='crawl_job'); "
+        "import os, runpy, sys; runpy.run_path(sys.argv[1], run_name='job'); "
         "import webcrawler_spark; print(webcrawler_spark.__file__); "
         "print(os.environ['PYTHONPATH'].split(os.pathsep)[0])"
     )
     r = subprocess.run(
-        [sys.executable, "-c", probe, str(REPO / "jobs" / "crawl.py")],
+        [sys.executable, "-c", probe, str(REPO / "jobs" / f"{job}.py")],
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120,
     )
     assert r.returncode == 0, r.stderr[-3000:]

@@ -183,25 +183,6 @@ def test_status_surface_matches_oracle(spark, pages_df, small_corpus):
             assert g[col] == d[col], f"{col} mismatch for {d['url']}: {g[col]!r} != {d[col]!r}"
 
 
-def test_text_column_byte_identical(spark, pages_df, small_corpus):
-    """input_hint invariant: extracted text per url is byte-identical —
-    the engine's UDF output equals the corpus golden `text` column."""
-    from pyspark.sql import functions as F
-
-    from webcrawler_spark.udfs import extract_schema_with, make_extract_pages
-
-    cfg = CrawlConfig()
-    fn, _ = make_extract_pages(cfg)
-    from webcrawler_spark.udfs import EXTRACT_SCHEMA
-
-    ex = pages_df.select("url", "html").mapInPandas(fn, EXTRACT_SCHEMA)
-    cmp = ex.select("url", F.col("text").alias("engine_text")).join(
-        pages_df.select("url", "text"), "url"
-    )
-    bad = cmp.filter(F.col("engine_text") != F.col("text")).count()
-    assert bad == 0
-
-
 def test_checkpoint_resume_idempotent(spark, pages_df, small_corpus, tmp_path):
     """north_rule: rounds resumable from snapshot checkpoints; re-running the
     same crawl over an existing store yields identical results."""

@@ -11,8 +11,8 @@ ERROR_FETCH path), ~10% duplicate links on a page (first-occurrence dedup),
 plus mailto:/javascript:/#fragment links mirroring the reference's
 CrawlerServiceTest in-process server pages (service/CrawlerServiceTest.java:181-250).
 
-``pages.text`` is *defined* as the kernel's body text of ``html``, so the
-byte-identical invariant is testable end-to-end.
+``pages.text`` is ``kernel.extract.body_text`` of ``html`` (None when the
+page fails to parse), so the byte-identical invariant is testable end-to-end.
 """
 
 from __future__ import annotations
@@ -22,7 +22,7 @@ from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
 from typing import Dict, List, Optional, Tuple
 
-from .kernel.extract import extract_page
+from .kernel.extract import body_text
 
 EPOCH = datetime(2025, 6, 1, tzinfo=timezone.utc)
 
@@ -52,16 +52,16 @@ class SyntheticCorpus:
         out = []
         for url, (ts, html, lang) in self.pages.items():
             try:
-                body_text: Optional[str] = extract_page(html, url).text
+                text: Optional[str] = body_text(html)
             except Exception:
-                body_text = None  # malformed page: the kernel's ERROR_PARSE path
+                text = None  # malformed page: the kernel's ERROR_PARSE path
             status, fetch_ms = self.meta.get(url, (200, 0))
             out.append(
                 {
                     "url": url,
                     "warc_ts": ts,
                     "html": html.encode("utf-8"),
-                    "text": body_text,
+                    "text": text,
                     "lang": lang,
                     "http_status": status,
                     "fetch_ms": fetch_ms,
@@ -404,8 +404,8 @@ def generate_pages_distributed(
 
     spark.range over global page ids → mapInPandas generation; each page is an
     independent pure function of (seed, host, page), so output is bit-stable
-    under any partitioning. ``text`` is the kernel's extraction of ``html``
-    (byte-identical invariant holds by construction). Scales linearly with
+    under any partitioning. ``text`` is ``kernel.extract.body_text`` of
+    ``html`` (byte-identical invariant holds by construction). Scales linearly with
     cores — this is how the 1M+-row scaling-bench corpus is produced.
     """
     from pyspark.sql.types import (
@@ -457,7 +457,7 @@ def generate_pages_distributed(
                 tss.append(ts.replace(tzinfo=None))
                 htmls.append(html.encode("utf-8"))
                 try:
-                    texts.append(extract_page(html, url).text)
+                    texts.append(body_text(html))
                 except Exception:
                     texts.append(None)  # malformed page (ERROR_PARSE fixture)
                 langs.append(lang)

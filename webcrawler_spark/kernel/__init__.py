@@ -6,7 +6,7 @@ sequential oracle used by the correctness tests.
 """
 
 from .dom import Document, Element, parse, select_links  # noqa: F401
-from .extract import PageExtract, extract_content, extract_page, remove_html_tags  # noqa: F401
+from .extract import PageExtract, body_text, extract_content, extract_page, remove_html_tags  # noqa: F401
 from .filters import compile_patterns, is_accepted  # noqa: F401
 from .hashing import (  # noqa: F401
     compute_hash,

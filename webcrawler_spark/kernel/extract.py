@@ -10,7 +10,9 @@ dropped; both rule sets empty -> no output; null/blank html -> no output.
 ``extract_page`` is the fused per-page kernel the Spark engine vectorizes:
 one parse yielding (title, segments, links-with-positions) — the work of
 WebPageProcessor.processUrl (``processor/WebPageProcessor.java:172-195``) and
-CrawlerService's link harvest (``service/CrawlerService.java:133-136``).
+CrawlerService's link harvest (``service/CrawlerService.java:133-136``) —
+and nothing the crawl does not read. ``body_text`` is the full-body Jsoup
+text, computed only for the corpus's ``pages.text`` golden.
 """
 
 from __future__ import annotations
@@ -74,9 +76,24 @@ def _traverse(el: Element, any_rules, all_rules, out: List[str]) -> None:
 @dataclass
 class PageExtract:
     title: str
-    text: str                      # full-body Jsoup text (the `pages.text` golden)
     segments: List[str]            # rule-extracted contents, document order
     links: List[Tuple[str, int]]   # (abs href, document position)
+
+
+def _parse_page(html) -> Optional[Document]:
+    """The parsed page; None for null or blank html. Bytes decode with
+    replacement; dom.ParseError propagates."""
+    if isinstance(html, bytes):
+        html = html.decode("utf-8", errors="replace")
+    if html is None or html.strip() == "":
+        return None
+    return parse(html)
+
+
+def body_text(html) -> str:
+    """Full-body Jsoup text of ``html`` ("" for null or blank html)."""
+    doc = _parse_page(html)
+    return "" if doc is None else doc.body().text()
 
 
 def extract_page(
@@ -85,21 +102,17 @@ def extract_page(
     match_any_rules: Optional[Sequence[Rule]] = None,
     match_all_rules: Optional[Sequence[Rule]] = None,
 ) -> PageExtract:
-    """One-parse page kernel: title + body text + rule segments + links."""
-    if isinstance(html, bytes):
-        html = html.decode("utf-8", errors="replace")
-    if html is None or html.strip() == "":
-        return PageExtract("", "", [], [])
-    doc: Document = parse(html)
-    body = doc.body()
+    """One-parse page kernel: title + rule segments + links."""
+    doc = _parse_page(html)
+    if doc is None:
+        return PageExtract("", [], [])
     segments = (
-        extract_content(body, match_any_rules, match_all_rules)
+        extract_content(doc.body(), match_any_rules, match_all_rules)
         if (match_any_rules or match_all_rules)
         else []
     )
     return PageExtract(
         title=doc.title(),
-        text=body.text(),
         segments=segments,
         links=select_links(doc, base_url),
     )

@@ -638,11 +638,10 @@ def _crawl(
         if with_processor:
             # materialize the round's parse output once; the stats job and
             # the final docs assembly both read it back — the page is never
-            # parsed again. `text` is redundant with segments for docs and
-            # excluded to keep the raw table lean.
+            # parsed again.
             _tr = time.monotonic()
             extracted = _raw_docs_pin(spark, store, rnd)(
-                extracted.drop("text").withColumn("_ckey", _content_key())
+                extracted.withColumn("_ckey", _content_key())
             )
             raw_parts.append(extracted)
             _phase(res.timings, f"r{rnd}_raw", _tr)
@@ -1248,7 +1247,7 @@ def process_queue(
             F.col("html").isNotNull().alias("fetchok"),
         ),
         queue_rows,
-    ).mapInPandas(extract_fn, out_schema).drop("text")
+    ).mapInPandas(extract_fn, out_schema)
 
     is_dup = F.lit(False)
     if has_content_rules:

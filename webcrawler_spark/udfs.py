@@ -1,7 +1,7 @@
 """Vectorized (Arrow/pandas) UDF kernels — the only Python in the hot path.
 
 The kernels per SURVEY §7 "Built-in vs custom":
-- ``extract_pages``   — html -> (title, text, segments, links[pos]) via
+- ``extract_pages``   — html -> (title, segments, links[pos]) via
   mapInPandas; one DOM parse per page, config broadcast.
 - ``normalize_url_udf`` — URL normalization (pandas_udf, arrow batches).
 - ``page_meta_udf``   — meta description + canonical link per page.
@@ -31,15 +31,14 @@ from .config import CrawlConfig
 from .kernel.extract import extract_page
 from .kernel.urlnorm import normalize_url
 
-# Schema of the fused page-extraction kernel output. ``parse_error`` marks
-# pages the kernel refused/failed to parse (dom.ParseError or any unexpected
-# per-page exception): no links harvested, null title/text/segments — the
-# ERROR_PARSE path of WebPageProcessor.java:216-227.
+# Schema of the fused page-extraction kernel output: only what the crawl
+# reads. ``parse_error`` marks pages the kernel refused/failed to parse
+# (dom.ParseError or any unexpected per-page exception): no links harvested,
+# null title/segments — the ERROR_PARSE path of WebPageProcessor.java:216-227.
 EXTRACT_SCHEMA = StructType(
     [
         StructField("url", StringType()),
         StructField("title", StringType()),
-        StructField("text", StringType()),
         StructField("segments", ArrayType(StringType())),
         StructField(
             "links",
@@ -72,62 +71,38 @@ def make_extract_pages(config: CrawlConfig, carry_cols: Optional[list] = None):
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = {
-                "url": [],
-                "title": [],
-                "text": [],
-                "segments": [],
-                "links": [],
-                "parse_error": [],
-            }
-            for c in carry_cols:
-                out[c] = []
-            for row in pdf.itertuples(index=False):
-                url = row.url
-                html = row.html
-                if html is None:
-                    # null html (fetch-missing rows riding through the docs
-                    # pass): emit the error shape without attempting a
-                    # parse — the caller distinguishes ERROR_FETCH from
-                    # ERROR_PARSE via its own carried fetch flag
-                    out["url"].append(url)
-                    out["title"].append(None)
-                    out["text"].append(None)
-                    out["segments"].append(None)
-                    out["links"].append([])
-                    out["parse_error"].append(True)
-                    for c in carry_cols:
-                        out[c].append(getattr(row, c))
+            titles, segments, links, errors = [], [], [], []
+            for url, html in zip(pdf["url"], pdf["html"]):
+                page = None
+                # null html (fetch-missing rows riding through the docs pass)
+                # takes the error shape without a parse: the caller tells
+                # ERROR_FETCH from ERROR_PARSE by its own carried fetch flag
+                if html is not None:
+                    if isinstance(html, (bytes, bytearray, memoryview)):
+                        html = bytes(html).decode("utf-8", errors="replace")
+                    rules = config.get_content_rules(url)
+                    match_all = config.match_all_by_url(url)
+                    try:
+                        page = extract_page(
+                            html,
+                            url,
+                            match_any_rules=None if match_all else rules,
+                            match_all_rules=rules if match_all else None,
+                        )
+                    except Exception:
+                        # WebPageProcessor.java:216-227: any throw in the
+                        # parse/extract block -> ERROR_PARSE (title lost too,
+                        # since the reference's try wraps the whole assembly)
+                        pass
+                if page is None:
+                    titles.append(None)
+                    segments.append(None)
+                    links.append([])
+                    errors.append(True)
                     continue
-                if isinstance(html, (bytes, bytearray, memoryview)):
-                    html = bytes(html).decode("utf-8", errors="replace")
-                rules = config.get_content_rules(url)
-                match_all = config.match_all_by_url(url)
-                try:
-                    page = extract_page(
-                        html,
-                        url,
-                        match_any_rules=None if match_all else rules,
-                        match_all_rules=rules if match_all else None,
-                    )
-                except Exception:
-                    # WebPageProcessor.java:216-227: any throw in the parse/
-                    # extract block -> ERROR_PARSE (title lost too, since the
-                    # reference's try wraps the whole assembly)
-                    out["url"].append(url)
-                    out["title"].append(None)
-                    out["text"].append(None)
-                    out["segments"].append(None)
-                    out["links"].append([])
-                    out["parse_error"].append(True)
-                    for c in carry_cols:
-                        out[c].append(getattr(row, c))
-                    continue
-                out["url"].append(url)
-                out["title"].append(page.title)
-                out["text"].append(page.text)
-                out["segments"].append(page.segments)
-                out["links"].append(
+                titles.append(page.title)
+                segments.append(page.segments)
+                links.append(
                     [
                         {"href": n, "pos": p}
                         for n, p in (
@@ -136,10 +111,16 @@ def make_extract_pages(config: CrawlConfig, carry_cols: Optional[list] = None):
                         if n is not None
                     ]
                 )
-                out["parse_error"].append(False)
-                for c in carry_cols:
-                    out[c].append(getattr(row, c))
-            yield pd.DataFrame(out)
+                errors.append(False)
+            # one output row per input row, in order: url and the carried
+            # columns pass through as the batch's own columns
+            yield pdf[["url"]].assign(
+                title=titles,
+                segments=segments,
+                links=links,
+                parse_error=errors,
+                **{c: pdf[c] for c in carry_cols},
+            )
 
     schema = StructType(EXTRACT_SCHEMA.fields.copy())
     return fn, schema
