@@ -91,10 +91,9 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    import webcrawler_spark
     from webcrawler_spark.config import CrawlConfig
     from webcrawler_spark.rounds import run_polite_crawl
-    from webcrawler_spark.session import get_spark
+    from webcrawler_spark.session import get_spark, run_record
     from webcrawler_spark.storage import SnapshotStore
 
     config = CrawlConfig.from_json(args.config) if args.config else CrawlConfig()
@@ -205,11 +204,9 @@ def main() -> int:
         # another cluster pass over the multi-GB docs payload
         n_docs = store.count_table("docs", config.max_depth)
     if res.lineage:
-        from webcrawler_spark.rounds import LINEAGE_SCHEMA
+        from webcrawler_spark.rounds import lineage_frame
 
-        store.write_table(
-            spark.createDataFrame(res.lineage, LINEAGE_SCHEMA), "lineage", res.rounds_run
-        )
+        store.write_table(lineage_frame(spark, res.lineage), "lineage", res.rounds_run)
     wall = time.monotonic() - t0
     # urls_deduped is a round-level value replicated across that round's
     # per-partition lineage rows; sum it once per round
@@ -232,11 +229,7 @@ def main() -> int:
         "engine_timings": res.timings,
         "state_dir": args.state_dir,
         "stopped": res.stopped,
-        # what the session ran with (the launch's settings, engine defaults)
-        "master": spark.sparkContext.master,
-        "default_parallelism": spark.sparkContext.defaultParallelism,
-        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
-        "engine": webcrawler_spark.__file__,
+        **run_record(spark),
     }
     if args.expire_keep is not None:
         expired = store.expire_snapshots(keep_last=args.expire_keep)

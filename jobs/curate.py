@@ -173,7 +173,7 @@ def main() -> int:
     ap.add_argument("--canonical", choices=("min-id", "longest"), default="min-id")
     args = ap.parse_args()
 
-    from webcrawler_spark.session import get_spark
+    from webcrawler_spark.session import get_spark, run_record
 
     spark = get_spark(app_name="curate")
     summary = run(
@@ -189,7 +189,7 @@ def main() -> int:
         quality=args.quality,
         canonical=args.canonical,
     )
-    print(json.dumps(summary))
+    print(json.dumps({**summary, **run_record(spark)}))
     spark.stop()
     return 0
 

@@ -83,14 +83,14 @@ def main() -> int:
     q.add_argument("--k", type=int, default=10)
     args = ap.parse_args()
 
-    from webcrawler_spark.session import get_spark
+    from webcrawler_spark.session import get_spark, run_record
 
     spark = get_spark(app_name="index")
     if args.cmd == "build":
         out = build(spark, args.docs, args.index_dir, args.buckets)
     else:
         out = query(spark, args.index_dir, [t.strip() for t in args.terms.split(",") if t.strip()], args.k)
-    print(json.dumps(out))
+    print(json.dumps({**out, **run_record(spark)}))
     spark.stop()
     return 0
 

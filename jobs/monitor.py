@@ -143,10 +143,11 @@ def main() -> int:
     ap.add_argument("--topk", type=int, default=20)
     args = ap.parse_args()
 
-    from webcrawler_spark.session import get_spark
+    from webcrawler_spark.session import get_spark, run_record
 
     spark = get_spark(app_name="monitor")
-    print(json.dumps(run(spark, args.pages, args.state_dir, args.d, args.w, args.topk)))
+    out = run(spark, args.pages, args.state_dir, args.d, args.w, args.topk)
+    print(json.dumps({**out, **run_record(spark)}))
     spark.stop()
     return 0
 

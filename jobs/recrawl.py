@@ -152,7 +152,7 @@ def main() -> int:
                     "re-admits them")
     args = ap.parse_args()
 
-    from webcrawler_spark.session import get_spark
+    from webcrawler_spark.session import get_spark, run_record
 
     spark = get_spark(app_name="recrawl")
     out = run(
@@ -160,7 +160,7 @@ def main() -> int:
         base_ms=int(args.base_hours * 3_600_000),
         horizon_ms=int(args.horizon_hours * 3_600_000), evict=args.evict,
     )
-    print(json.dumps(out))
+    print(json.dumps({**out, **run_record(spark)}))
     spark.stop()
     return 0
 

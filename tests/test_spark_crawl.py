@@ -515,7 +515,7 @@ def test_docs_pass_same_rows_pinned_or_lazy(spark, pages_df, small_corpus):
     """process_queue returns the same docs whether its tail parse is pinned
     (``materialize``, as the crawl calls it) or left lazy (a direct call),
     on a queue that yields DUPLICATE, ERROR_FETCH and ERROR_PARSE rows."""
-    from webcrawler_spark.rounds import _raw_docs_pin, process_queue
+    from webcrawler_spark.rounds import process_queue
 
     urls = sorted(small_corpus.pages) + ["https://missing.example.com/nowhere"]
     queue = spark.createDataFrame(list(zip(urls, range(len(urls)))), "url string, pos long")
@@ -528,7 +528,7 @@ def test_docs_pass_same_rows_pinned_or_lazy(spark, pages_df, small_corpus):
     lazy = rows(None)
     assert len(lazy) == len(urls)
     assert {"DUPLICATE", "ERROR_FETCH", "ERROR_PARSE"} <= {d["status"] for d in lazy}
-    assert rows(_raw_docs_pin(spark, None, 0)) == lazy
+    assert rows(lambda df: df.localCheckpoint(eager=True)) == lazy
 
 
 @pytest.mark.parametrize(
@@ -670,6 +670,49 @@ def test_bfs_and_unbounded_polite_crawl_are_one_loop(spark, tiny_pages_df, tiny_
         {u: h for u, (t, h, l) in tiny_corpus.pages.items()},
         tiny_corpus.seeds, cfg, with_processor=False,
     ).queue_order
+
+
+def _jobs_run(spark, fn) -> int:
+    """How many Spark jobs ``fn()`` runs, counted by a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# Spark jobs the two crawls below run, as measured when this guard was added;
+# a change that adds jobs to a round, the seed path or the docs pass fails here
+POLITE_CRAWL_JOBS = 31
+BFS_CRAWL_JOBS = 23
+
+
+def test_crawl_job_count_guard(spark, tiny_corpus, tmp_path):
+    """A polite crawl (seeds DataFrame entry, robots, content rules) and a
+    BFS crawl run no more Spark jobs than they did when this guard was set."""
+    from webcrawler_spark.corpus import write_parquet
+    from webcrawler_spark.rounds import run_polite_crawl
+
+    write_parquet(tiny_corpus, str(tmp_path))
+    pages = spark.read.parquet(str(tmp_path / "pages.parquet"))
+    seeds = spark.read.parquet(str(tmp_path / "seeds.parquet"))
+    robots = spark.read.parquet(str(tmp_path / "robots.parquet"))
+    polite_cfg = CrawlConfig(
+        max_depth=0, per_host_budget=4,
+        content_rules={"minCharacter": 40, "tagName": "p"},
+    )
+    polite = _jobs_run(
+        spark, lambda: run_polite_crawl(spark, pages, seeds, polite_cfg, robots=robots)
+    )
+    bfs = _jobs_run(
+        spark, lambda: run_crawl(spark, pages, tiny_corpus.seeds, CrawlConfig(max_depth=1))
+    )
+    assert polite <= POLITE_CRAWL_JOBS and bfs <= BFS_CRAWL_JOBS, (polite, bfs)
 
 
 @pytest.mark.parametrize("seed", ["https://gone.example.com/0", "https://r.example.com/private/0"])

@@ -242,7 +242,7 @@ def process_url_oracle(
     gate = gate_status_oracle(html, (content_types or {}).get(url), config)
     if gate is not None:
         # fetched but never parsed: fetch evidence kept, content fields empty
-        # (_gate_docs shape; fetch_ms rides the P8 clamp like every doc row)
+        # (process_queue's gated-row shape; fetch_ms rides the P8 clamp like every doc row)
         return {
             "id": None,
             "url": url,

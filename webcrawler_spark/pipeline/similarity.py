@@ -330,7 +330,7 @@ def pq_adc_topk(
             "subspace",
             F.col("cid").alias("code"),
             F.round(dot_double(F.col("qsv"), F.col("c_vec")), decimals).alias(
-                "_part"
+                "_dot"
             ),
         )
     )
@@ -338,7 +338,7 @@ def pq_adc_topk(
         F.col(id_col) != F.col(q_id_col)
     )
     pivots = [
-        F.sum(F.when(F.col("subspace") == j, F.col("_part"))).alias(f"_p{j}")
+        F.sum(F.when(F.col("subspace") == j, F.col("_dot"))).alias(f"_p{j}")
         for j in range(m)
     ]
     folded = joined.groupBy(q_id_col, id_col).agg(*pivots)

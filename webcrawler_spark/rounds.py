@@ -37,10 +37,14 @@ admission a policy runs, a round waits on three driver-synchronized jobs —
 2. one materialization job: the harvest→dedup chain evaluates once, with
    bucket-local running sums, into a pinned round table;
 3. one stats job: a single GROUPING SETS aggregate over the pinned table
-   returns per-bucket rank offsets, per-partition lineage stats and the dedup
-   counts in one ≤(buckets+32)-row collect. Queue positions and discovery
-   ranks are then a pure projection: local running sum + the driver's
-   prefix-sum offset (no single-partition row_number, no range sampling).
+   returns per-bucket rank offsets and the dedup counts in one collect of a
+   row or two per bucket. Queue positions and discovery ranks are then a
+   pure projection: local running sum + the driver's prefix-sum offset (no
+   single-partition row_number, no range sampling).
+
+A round keeps only (round, urls_deduped, frontier_delta, wall_ms); ONE
+aggregate over url_seen at the end of the crawl adds the per-partition
+hosts served and urls fetched of every round (_lineage_rows).
 
 Rank bucketing needs no RangePartitioner: the pending frontier's discovery
 ranks lie in [frontier_lo, discovered), so floor((grank-lo)·nb/(discovered-lo))
@@ -68,7 +72,6 @@ from typing import Dict, List, Optional, Set, Tuple
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BooleanType,
     IntegerType,
     LongType,
@@ -218,21 +221,26 @@ def _seed_frontier(
     path instead: a handful of MB on the driver beats the 4-job distributed
     dedup/rank pipeline (pandas-UDF normalize + persist + 2 collects +
     checkpoint ≈ seconds of fixed serial cost, the kind that caps N→4N
-    scaling efficiency). The distributed path is for genuinely frontier-sized
-    seed lists.
+    scaling efficiency). One ``SEED_COLLECT_MAX + 1``-row collect both picks
+    the path and, under the cap, is the list (sorted by seed_id on the
+    driver). The distributed path is for genuinely frontier-sized seed lists.
     """
     if isinstance(entry_url, DataFrame):
         seeds = entry_url
-        if seeds.count() <= SEED_COLLECT_MAX:
-            s = seeds.orderBy("seed_id") if "seed_id" in seeds.columns else seeds
-            entry_url = [r["url"] for r in s.select("url").collect()]
-            return _seed_frontier(spark, entry_url, timings=timings)
+        has_id = "seed_id" in seeds.columns
+        cols = ["url", "seed_id"] if has_id else ["url"]
+        head = seeds.select(*cols).limit(SEED_COLLECT_MAX + 1).collect()
+        if len(head) <= SEED_COLLECT_MAX:
+            if has_id:
+                # null ids first, as Spark's ascending sort puts them
+                head.sort(key=lambda r: (r["seed_id"] is not None, r["seed_id"] or 0))
+            return _seed_frontier(spark, [r["url"] for r in head], timings=timings)
         if timings is not None:
             # observable evidence that frontier-sized seed lists never
             # materialize on the driver (VERDICT r2 #7): surfaced in the
             # crawl job's engine_timings as seed_path=distributed
             timings.append({"phase": "seed_path", "mode": "distributed"})
-        if "seed_id" not in seeds.columns:
+        if not has_id:
             # file/row order is the list order contract; ids only need to be
             # monotone in that order for first-occurrence + ranking
             seeds = seeds.withColumn("seed_id", F.monotonically_increasing_id())
@@ -304,36 +312,43 @@ def _offset_map_expr(
     return F.element_at(F.create_map(*kv), F.col(bucket_col)), acc
 
 
-def _fill_lineage_hosts(lineage: List[dict], seen: DataFrame, seed_rows: int) -> None:
-    """Backfill ``hosts_served`` for this crawl's lineage rows in ONE
-    count_distinct job over the (column-pruned) url_seen table, instead of a
-    distinct aggregate inside every round's stats pass. new_seen rows carry
-    (host_hash, first_depth = the round that enqueued them), and lineage
-    partition_id = host_hash % 32 by construction, so distinct hosts per
-    (round, partition) is exactly distinct host_hash per (first_depth,
-    host_hash % 32) — leaving out the seeds (pos < ``seed_rows``), which no
-    round enqueued. Rows loaded from a resume checkpoint already carry
-    values and are left untouched (only ``None`` placeholders fill)."""
-    need_rounds = sorted(
-        {l["round"] for l in lineage if l.get("hosts_served") is None}
+def _lineage_rows(
+    rounds: List[Tuple[int, int, int, int]], seen: DataFrame, seed_rows: int
+) -> List[dict]:
+    """The lineage rows of ``rounds`` (round, urls_deduped, frontier_delta,
+    wall_ms), one per (round, partition_id = host_hash % 32) that enqueued
+    urls: round r enqueued the url_seen rows with first_depth = r and pos >=
+    ``seed_rows``, so ONE aggregate counts urls_fetched and distinct
+    hosts_served of every round. A round that enqueued nothing keeps one
+    (-1, 0) row for its dedup count."""
+    parts: Dict[int, List[Tuple[int, int, int]]] = {}
+    enqueued = [r for r, _, delta, _ in rounds if delta]
+    if enqueued:
+        for row in (
+            seen.filter(F.col("first_depth").isin(enqueued) & (F.col("pos") >= seed_rows))
+            .groupBy(
+                F.col("first_depth").alias("r"),
+                F.pmod(F.col("host_hash"), F.lit(N_LINEAGE_PARTS)).cast("int").alias("p"),
+            )
+            .agg(F.count_distinct("host_hash").alias("h"), F.count("*").alias("n"))
+            .collect()
+        ):
+            parts.setdefault(row["r"], []).append((row["p"], row["h"], row["n"]))
+    return [
+        dict(zip(LINEAGE_SCHEMA.fieldNames(), (rnd, p, h, n, deduped, delta, wall_ms)))
+        for rnd, deduped, delta, wall_ms in rounds
+        for p, h, n in sorted(parts.get(rnd, [(-1, 0, 0)]))
+    ]
+
+
+def lineage_frame(spark: SparkSession, rows: List[dict]) -> DataFrame:
+    """Lineage rows as a DataFrame, built through Arrow: a list-of-dicts
+    createDataFrame pickles every row through a Python worker."""
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=LINEAGE_SCHEMA.fieldNames()), LINEAGE_SCHEMA
     )
-    if not need_rounds:
-        return
-    rows = (
-        seen.filter(F.col("first_depth").isin(need_rounds) & (F.col("pos") >= seed_rows))
-        .groupBy(
-            F.col("first_depth").alias("_r"),
-            F.pmod(F.col("host_hash"), F.lit(N_LINEAGE_PARTS))
-            .cast("int")
-            .alias("_p"),
-        )
-        .agg(F.count_distinct("host_hash").alias("h"))
-        .collect()
-    )
-    m = {(r["_r"], r["_p"]): r["h"] for r in rows}
-    for l in lineage:
-        if l.get("hosts_served") is None:
-            l["hosts_served"] = m.get((l["round"], l["partition_id"]), 0)
 
 
 def _running(flag_zero_col: str, w: Window) -> Column:
@@ -405,13 +420,21 @@ def _with_fetch_defaults(df: DataFrame) -> DataFrame:
     return df
 
 
-def _empty_result(spark: SparkSession, with_processor: bool) -> CrawlResult:
+def _empty_result(
+    spark: SparkSession, pages: DataFrame, config: CrawlConfig, with_processor: bool
+) -> CrawlResult:
     empty_seen = spark.createDataFrame([], SEEN_SCHEMA)
+    queue = empty_seen.select("url", "pos")
     return CrawlResult(
-        queue=empty_seen.select("url", "pos"),
+        queue=queue,
         seen=empty_seen,
         visited=empty_seen.select("url"),
-        docs=spark.createDataFrame([], _docs_schema()) if with_processor else None,
+        # the docs schema, from the one docs projection (no job runs)
+        docs=(
+            process_queue(spark, queue, pages, config, has_content_rules=False)
+            if with_processor
+            else None
+        ),
     )
 
 
@@ -509,7 +532,7 @@ def _crawl(
     res = CrawlResult(queue=None, seen=None, visited=None, docs=None)  # type: ignore[arg-type]
     traverse, n_seeds = _seed_frontier(spark, entry_url, timings=res.timings)
     if traverse is None:
-        return _empty_result(spark, with_processor)
+        return _empty_result(spark, pages, config, with_processor)
     if with_processor:
         # seeds occupy pos 0..n-1 = their rank
         traverse = traverse.withColumn("pos", F.col("grank"))
@@ -567,7 +590,8 @@ def _crawl(
 
     extract_fn, extract_out = _parse_fn(config, carry_fields)
     raw_parts: List[DataFrame] = []
-    lineage: List[dict] = []
+    lineage: List[dict] = []  # rows a resume loaded; this run's rounds follow
+    round_stats: List[Tuple[int, int, int, int]] = []  # (round, deduped, delta, wall_ms)
     if policy.delays is not None:
         policy.host_state = spark.createDataFrame(
             [], "host string, next_allowed_ts long"
@@ -636,13 +660,17 @@ def _crawl(
         extracted = fetched.mapInPandas(extract_fn, extract_out)
 
         if with_processor:
-            # materialize the round's parse output once; the stats job and
+            # pin the round's parse output once; the stats job and
             # the final docs assembly both read it back — the page is never
-            # parsed again.
+            # parsed again. With a store it is raw_docs[rnd], which a resume
+            # reads for the rounds before its stop.
             _tr = time.monotonic()
-            extracted = _raw_docs_pin(spark, store, rnd)(
-                extracted.withColumn("_ckey", _content_key())
-            )
+            extracted = extracted.withColumn("_ckey", _content_key())
+            if store is not None:
+                store.write_table(extracted, "raw_docs", rnd)
+                extracted = store.read_table(spark, "raw_docs", rnd)
+            else:
+                extracted = extracted.localCheckpoint(eager=True)
             raw_parts.append(extracted)
             _phase(res.timings, f"r{rnd}_raw", _tr)
 
@@ -714,10 +742,6 @@ def _crawl(
             .withColumn(
                 "_bkt", _bucket_expr(F.col("parent_rank"), frontier_lo, discovered, nb)
             )
-            .withColumn(
-                "_part",
-                F.pmod(F.col("host_hash"), F.lit(N_LINEAGE_PARTS)).cast("int"),
-            )
         )
 
         # ---- the round's ONE heavy non-parse job: evaluate the harvest
@@ -730,7 +754,7 @@ def _crawl(
         w = Window.partitionBy("_bkt").orderBy("parent_rank", "link_pos").rowsBetween(
             Window.unboundedPreceding, 0
         )
-        cols = ["url", "host_hash", "_bkt", "_part", "_dup", "_vis"]
+        cols = ["url", "host_hash", "_bkt", "_dup", "_vis"]
         if defers:
             # traversal ranks follow the depth-eligible harvest: own buckets
             tb = "_bkte"
@@ -773,14 +797,13 @@ def _crawl(
         _phase(res.timings, f"r{rnd}_mat", _tm)
         _ts = time.monotonic()
 
-        # ---- the stats job (tiny, codegen): per-bucket / per-partition
-        # counts in one grouping-sets pass over the pinned table — a few int
-        # sums, no count_distinct (hosts_served backfills ONCE at end of
-        # crawl via _fill_lineage_hosts). Under deferral the grand total
-        # counts the deferred rows and their lowest grank: the next round's
-        # frontier size and bucket floor.
-        keys = ["_bkt", "_part"] + ([tb] if defers else [])
-        sets = [["_bkt"], ["_part"]] + ([[tb], []] if defers else [])
+        # ---- the stats job (tiny, codegen): per-bucket counts in one
+        # grouping-sets pass over the pinned table — a few int sums. Under
+        # deferral the traversal buckets get their own set, and the grand
+        # total counts the deferred rows and their lowest grank: the next
+        # round's frontier size and bucket floor.
+        keys = ["_bkt"] + ([tb] if defers else [])
+        sets = [["_bkt"]] + ([[tb], []] if defers else [])
         aggs = [
             F.sum(1 - F.col("_dup")).alias("n_new"),
             F.sum("_dup").alias("n_dup"),
@@ -801,16 +824,13 @@ def _crawl(
             gid = sum(1 << (len(keys) - 1 - i) for i, k in enumerate(keys) if k not in by)
             return [r for r in stats if r["_gid"] == gid]
 
-        # null bucket / partition groups hold the deferred rows
+        # null bucket groups hold the deferred rows
         bkt_rows = [r for r in grouped("_bkt") if r["_bkt"] is not None]
         nn_bkt = {r["_bkt"]: int(r["n_new"]) for r in bkt_rows}
         nt_bkt = {r[tb]: int(r["n_trav"]) for r in grouped(tb) if r[tb] is not None}
         n_new = sum(nn_bkt.values())
         n_dup = sum(int(r["n_dup"]) for r in bkt_rows)
         n_trav = sum(nt_bkt.values())
-        part_rows = sorted(
-            (int(r["_part"]), int(r["n_new"])) for r in grouped("_part") if r["n_new"]
-        )
         # an empty round table has no grand-total row: grouping sets run as
         # Expand + keyed Aggregate, which returns nothing for empty input
         total = next(iter(grouped()), None) if defers else None
@@ -838,7 +858,7 @@ def _crawl(
             pos.alias("pos"), grank.alias("grank"), depth.alias("depth"),
         )
 
-        # first_depth is the discovery round (lineage hosts_served keys on it)
+        # first_depth is the discovery round (the lineage rows key on it)
         new_seen = round_tbl.filter(F.col("_dup") == 0).select(
             "url", "pos", "host_hash", F.lit(rnd).alias("first_depth")
         )
@@ -854,23 +874,7 @@ def _crawl(
         fetched_total += frontier_rows - n_def  # this round's admitted count
         frontier_rows = n_trav + n_def
 
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        # keep ≥1 lineage row per round so round-level dedup counts survive
-        # all-duplicate rounds (they feed the throughput metric). The one
-        # distinct aggregate is deferred: ONE end-of-crawl job backfills the
-        # None hosts_served (_fill_lineage_hosts).
-        lineage += [
-            {
-                "round": rnd,
-                "partition_id": p,
-                "hosts_served": None if n else 0,
-                "urls_fetched": n,
-                "urls_deduped": n_dup,
-                "frontier_delta": n_new,
-                "wall_ms": wall_ms,
-            }
-            for p, n in part_rows or [(-1, 0)]
-        ]
+        round_stats.append((rnd, n_dup, n_new, int((time.monotonic() - t0) * 1000)))
         res.rounds_run += 1
         rnd += 1
 
@@ -882,9 +886,7 @@ def _crawl(
         store.write_table(seen, "url_seen", version)
         seen = store.read_table(spark, "url_seen", version)
         _phase(res.timings, "url_seen_write", _tw)
-    # ONE deferred hosts_served job per crawl (store path reads the pinned
-    # url_seen parquet, column-pruned to host_hash + first_depth + pos)
-    _fill_lineage_hosts(lineage, seen, seed_rows)
+    lineage += _lineage_rows(round_stats, seen, seed_rows)
     if store is not None:
         m = store.load_manifest() or Manifest()
         m.tables["url_seen"] = version
@@ -896,7 +898,7 @@ def _crawl(
             for table, df in (
                 ("frontier", traverse),
                 ("visited", visited.select("url")),
-                ("lineage_ckpt", spark.createDataFrame(lineage, LINEAGE_SCHEMA)),
+                ("lineage_ckpt", lineage_frame(spark, lineage)),
                 ("host_state", policy.host_state),
             ):
                 if df is not None:
@@ -1053,92 +1055,6 @@ def run_polite_crawl(
     )
 
 
-def _raw_docs_pin(spark: SparkSession, store, version: int):
-    """Materializer for a round's parse output, so the page is never parsed
-    again: store-backed as raw_docs[version] when a SnapshotStore exists
-    (a resume reads the rounds before its stop from it; columnar-pruned
-    re-reads), localCheckpoint otherwise."""
-
-    if store is not None:
-
-        def _mat(df: DataFrame) -> DataFrame:
-            store.write_table(df, "raw_docs", version)
-            return store.read_table(spark, "raw_docs", version)
-
-        return _mat
-    return lambda df: df.localCheckpoint(eager=True)
-
-
-def _docs_schema() -> StructType:
-    return StructType(
-        [
-            StructField("id", StringType()),
-            StructField("url", StringType()),
-            StructField("domain", StringType()),
-            StructField("crawl_ts", TimestampType()),
-            StructField("status", StringType()),
-            StructField("http_status", IntegerType()),
-            StructField("fetch_duration_ms", LongType()),
-            StructField("crawl_depth", IntegerType()),
-            StructField("title", StringType()),
-            StructField("description", StringType()),
-            StructField("contents", ArrayType(StringType())),
-            StructField("content_length", LongType()),
-            StructField("content_type", StringType()),
-            StructField("language", StringType()),
-            StructField("out_links", ArrayType(StringType())),
-            StructField("hash", StringType()),
-            StructField("pos", LongType()),
-        ]
-    )
-
-
-def _contentless_docs(df: DataFrame, ts, status: Column, **evidence: Column) -> DataFrame:
-    """Docs rows with no parsed content (ERROR_FETCH, ERROR_PARSE, SKIPPED_*),
-    in the docs schema: every content field null, content_length and the
-    fetch duration 0, the hash of no segments. ``evidence`` sets the fetch
-    fields a status keeps (http_status, fetch_duration_ms, content_type,
-    crawl_depth)."""
-    cols = {
-        "url": F.col("url"),
-        "domain": parse_host(F.col("url")),
-        "crawl_ts": ts,
-        "status": status,
-        "fetch_duration_ms": F.lit(0),
-        "content_length": F.lit(0),
-        "hash": content_hash_segments(F.col("url"), F.lit(None).cast("array<string>")),
-        "pos": F.col("pos"),
-        **evidence,
-    }
-    return df.select(
-        *(
-            cols.get(f.name, F.lit(None)).cast(f.dataType).alias(f.name)
-            for f in _docs_schema().fields
-        )
-    )
-
-
-def _gate_docs(skipped: DataFrame, ts) -> DataFrame:
-    """SKIPPED_CONTENT_TYPE / SKIPPED_TOO_LARGE rows (operators/contentgate;
-    README.md:60,212 declared-only knobs): fetched but never parsed. Unlike
-    SKIPPED_ROBOTS the fetch DID happen, so http_status, fetch duration and
-    the response's real content type are preserved as evidence of why the
-    gate fired; every content field stays empty."""
-    ctype = (
-        F.col("content_type")
-        if "content_type" in skipped.columns
-        else F.lit("text/html")
-    )
-    return _contentless_docs(
-        skipped, ts, F.col("skip_status"),
-        http_status=F.col("http_status"),
-        fetch_duration_ms=F.greatest(
-            F.lit(0).cast("long"), F.col("fetch_ms").cast("long")
-        ),
-        content_type=ctype,
-    )
-
-
 def process_queue(
     spark: SparkSession,
     queue: DataFrame,
@@ -1174,8 +1090,11 @@ def process_queue(
     from ``raw_docs``; the rest (the tail) join pages ONCE — a broadcast
     inner join plus a url-only anti join under the byte gate, a true left
     join above it — and fetch-missing rows ride through the single parse
-    stage as null-html rows with a ``fetchok`` flag. One conditional
-    projection then emits ERROR_FETCH / ERROR_PARSE / DUPLICATE / OK.
+    stage as null-html rows with a ``fetchok`` flag. The rows the parse never
+    sees join the parsed ones with a ``skip_status``: robots-blocked
+    (``fetchok`` false) and content-gated (fetched: http_status, fetch_ms and
+    the content type stay as evidence). One conditional projection then emits
+    every docs row: SKIPPED_* / ERROR_FETCH / ERROR_PARSE / DUPLICATE / OK.
 
     Content-hash dedup (CrawlStatus.DUPLICATE, model/CrawlStatus.java:19-20;
     README.md:156 "skip if content hash unchanged"): OK docs with identical
@@ -1195,9 +1114,9 @@ def process_queue(
     so raw tables written under a rules-bearing config still get the pass.
     """
     q = queue.select("url", "pos")
-    skipped_robots = None
+    blocked = None
     if robots is not None:
-        q, skipped_robots = apply_robots(q, robots)
+        q, blocked = apply_robots(q, robots)
 
     if has_content_rules is None:
         has_content_rules = config.has_content_rules
@@ -1231,9 +1150,11 @@ def process_queue(
     # exit to SKIPPED_* rows HERE — below the scan, above the Python parse
     # stage — so the kernel only ever decodes admitted bytes. Default-off
     # (both knobs None) adds nothing to the plan.
-    src, gate_skipped = split_gated(
-        _with_fetch_defaults(src), config.allowed_content_types, config.max_content_bytes
-    )
+    src = _with_fetch_defaults(src).withColumns({
+        "http_status": F.col("http_status").cast("int"),
+        "fetch_ms": F.col("fetch_ms").cast("long"),
+    })
+    src, gated = split_gated(src, config.allowed_content_types, config.max_content_bytes)
 
     extract_fn, out_schema = _parse_fn(
         config, _DOC_CARRY + [StructField("fetchok", BooleanType())]
@@ -1241,9 +1162,7 @@ def process_queue(
     ex = _balance_for_parse(
         spark,
         src.select(
-            "url", "html", "pos", "lang", "warc_ts",
-            F.col("http_status").cast("int").alias("http_status"),
-            F.col("fetch_ms").cast("long").alias("fetch_ms"),
+            "url", "html", "pos", "lang", "warc_ts", "http_status", "fetch_ms",
             F.col("html").isNotNull().alias("fetchok"),
         ),
         queue_rows,
@@ -1285,20 +1204,46 @@ def process_queue(
         ex = ex.join(_frontier_side(losers, n_losers), "url", "left")
         is_dup = F.col("_dup").isNotNull()
 
+    # the parse's rows are text/html; the rows it never saw join them with a
+    # skip_status: content-gated ones were fetched, so http_status, fetch_ms
+    # and the response's content type stay as evidence of why the gate
+    # fired; robots-blocked ones were never fetched
+    ex = ex.withColumns(
+        {"skip_status": F.lit(None).cast("string"), "content_type": F.lit("text/html")}
+    )
+    if gated is not None:
+        if "content_type" not in gated.columns:
+            gated = gated.withColumn("content_type", F.lit("text/html"))
+        gated = gated.select(
+            "url", "pos", "skip_status", "http_status", "fetch_ms", "content_type",
+            F.lit(True).alias("fetchok"),
+        )
+        ex = ex.unionByName(gated, allowMissingColumns=True)
+    if blocked is not None:
+        blocked = blocked.select(
+            "url", "pos",
+            F.lit("SKIPPED_ROBOTS").alias("skip_status"), F.lit(False).alias("fetchok"),
+        )
+        ex = ex.unionByName(blocked, allowMissingColumns=True)
+
+    # a skipped row's parse_error is null, so is_ok and is_parse_err are
+    # null on it and every content field below stays empty
     is_fetch_err = ~F.col("fetchok")
     is_parse_err = F.col("fetchok") & F.col("parse_error")
     is_ok = F.col("fetchok") & ~F.col("parse_error")  # OK or DUPLICATE
     null_segs = F.lit(None).cast("array<string>")
-    out = ex.select(
+    return ex.select(
         F.when(is_ok, doc_id_col(F.col("url"))).alias("id"),
         F.col("url"),
         parse_host(F.col("url")).alias("domain"),
         ts.alias("crawl_ts"),
-        F.when(is_fetch_err, F.lit("ERROR_FETCH"))
-        .when(is_parse_err, F.lit("ERROR_PARSE"))
-        .when(is_dup, F.lit("DUPLICATE"))
-        .otherwise(F.lit("OK"))
-        .alias("status"),
+        F.coalesce(
+            F.col("skip_status"),
+            F.when(is_fetch_err, F.lit("ERROR_FETCH"))
+            .when(is_parse_err, F.lit("ERROR_PARSE"))
+            .when(is_dup, F.lit("DUPLICATE"))
+            .otherwise(F.lit("OK")),
+        ).alias("status"),
         # ERROR_FETCH never got a response: http_status stays null even when
         # the pages table carries a default column
         F.when(~is_fetch_err, F.col("http_status")).alias("http_status"),
@@ -1317,9 +1262,7 @@ def process_queue(
         .otherwise(F.lit(0))
         .cast("long")
         .alias("content_length"),
-        F.when(is_fetch_err, F.lit(None).cast("string"))
-        .otherwise(F.lit("text/html"))
-        .alias("content_type"),
+        F.when(~is_fetch_err, F.col("content_type")).alias("content_type"),
         F.when(is_ok, F.col("lang")).alias("language"),
         # out_links: the kernel already emits normalized, null-free hrefs in
         # document order — a plain column transform, no explode/regroup
@@ -1333,10 +1276,3 @@ def process_queue(
         .alias("hash"),
         F.col("pos"),
     )
-    if gate_skipped is not None:
-        out = out.unionByName(_gate_docs(gate_skipped, ts))
-    if skipped_robots is not None:
-        out = out.unionByName(
-            _contentless_docs(skipped_robots, ts, F.lit("SKIPPED_ROBOTS"))
-        )
-    return out

@@ -78,3 +78,17 @@ def get_spark(
         # floor)
         spark.conf.set(key, str(max(3 * spark.sparkContext.defaultParallelism, 24)))
     return spark
+
+
+def run_record(spark: SparkSession) -> dict:
+    """What a job ran with, for its summary line: the session's effective
+    settings and the engine file its driver imported (the ``--py-files`` zip
+    when one is given)."""
+    import webcrawler_spark
+
+    return {
+        "master": spark.sparkContext.master,
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+        "engine": webcrawler_spark.__file__,
+    }
